@@ -26,7 +26,7 @@ from pyspark.sql import functions as F
 
 from .types import PARTITION_KEY, ROWID
 
-__all__ = ["Dataset", "partition_datasets", "concat"]
+__all__ = ["Dataset", "partition_datasets", "regroup_stored", "concat"]
 
 # Special group column: one dataset per row (daskms/dask_ms.py:165-177),
 # used by the reference for non-uniform subtables.  With ArrayType
@@ -144,16 +144,77 @@ def partition_datasets(df: DataFrame,
         for c, v in zip(group_cols, values):
             clause = F.col(c).eqNullSafe(F.lit(v))
             pred = clause if pred is None else (pred & clause)
-        part = df.where(pred)
-        if index_cols:
-            part = part.orderBy(*index_cols)
-        if columns is not None:
-            keep = [c for c in columns if c not in group_cols]
-            part = part.select(*keep) if keep else part
-        attrs = dict(zip(group_cols, values))
-        attrs[PARTITION_KEY] = partition_key
-        datasets.append(Dataset(part, attrs))
+        datasets.append(_group_view(df.where(pred), group_cols, values,
+                                    index_cols, columns, partition_key))
     return datasets
+
+
+def _group_view(part: DataFrame, group_cols: list[str], values: tuple,
+                index_cols: list[str], columns: Iterable[str] | None,
+                partition_key: tuple) -> Dataset:
+    """One group's Dataset: sorted by ``index_cols``, projected to
+    ``columns`` (group columns live in the attrs)."""
+    if index_cols:
+        part = part.orderBy(*index_cols)
+    if columns is not None:
+        keep = [c for c in columns if c not in group_cols]
+        part = part.select(*keep) if keep else part
+    attrs = dict(zip(group_cols, values))
+    attrs[PARTITION_KEY] = partition_key
+    return Dataset(part, attrs)
+
+
+# partition-key types whose values survive a JSON attrs round trip
+# exactly (a stored timestamp value comes back as its string)
+_EXACT_KEY_TYPES = {"boolean", "tinyint", "smallint", "int", "bigint",
+                    "float", "double", "string"}
+
+
+def regroup_stored(datasets: list[Dataset], group_cols: Iterable[str],
+                   index_cols: Iterable[str] = (),
+                   where: str | Column | None = None,
+                   columns: Iterable[str] | None = None
+                   ) -> list[Dataset] | None:
+    """:func:`partition_datasets` over datasets that are ALREADY
+    partitioned, from their attrs alone: one Dataset per distinct
+    ``group_cols`` value tuple, the union of the datasets sharing it,
+    ordered by value as :func:`partition_datasets` orders them.
+    Returns ``None`` unless every dataset's ``PARTITION_KEY`` covers
+    ``group_cols`` (same types, JSON-exact values).
+
+    Without ``where`` no job runs; each Dataset's plan touches only
+    its own members.  With ``where``, one job over the filtered
+    members drops the groups it empties, as the distinct-groups query
+    of :func:`partition_datasets` would.
+    """
+    group_cols = list(group_cols)
+    keys = {tuple(map(tuple, ds.attrs.get(PARTITION_KEY, ())))
+            for ds in datasets}
+    if not group_cols or len(keys) != 1:
+        return None
+    key = dict(keys.pop())
+    if any(key.get(c) not in _EXACT_KEY_TYPES for c in group_cols):
+        return None
+    if any(c not in ds.attrs for ds in datasets for c in group_cols):
+        return None
+    members: dict[tuple, list[Dataset]] = {}
+    for ds in datasets:
+        vals = tuple(ds.attrs[c] for c in group_cols)
+        members.setdefault(vals, []).append(ds)
+    order = sorted(members, key=lambda t: [(v is not None, v) for v in t])
+    parts = [concat(members[v]) for v in order]
+    if where is not None:
+        pred = F.expr(where) if isinstance(where, str) else where
+        parts = [p.where(pred) for p in parts]
+        live = parts[0].select(F.lit(0).alias("__g"))
+        for i, p in enumerate(parts[1:], 1):
+            live = live.unionByName(p.select(F.lit(i).alias("__g")))
+        keep = {r[0] for r in live.distinct().collect()}
+        order = [v for i, v in enumerate(order) if i in keep]
+        parts = [p for i, p in enumerate(parts) if i in keep]
+    partition_key = tuple((c, key[c]) for c in group_cols)
+    return [_group_view(p, group_cols, v, list(index_cols), columns,
+                        partition_key) for v, p in zip(order, parts)]
 
 
 def concat(datasets: list[Dataset]) -> DataFrame:

@@ -191,6 +191,8 @@ def profile_table(df: DataFrame, columns: list[str] | None = None,
     from pyspark.sql import functions as F
 
     cols = columns or [f.name for f in df.schema.fields]
+    if not cols:
+        raise ValueError("no columns to profile")
     if exact_ndv:
         # one scan -> GROUPING SETS ((c1),...,(cn)) count — Expand
         # emits |cols| narrow single-column copies and the partial

@@ -26,7 +26,7 @@ from pyspark.sql import functions as F
 from ..types import ROWID
 
 __all__ = ["sorted_read", "within_group_sort", "attach_rowid",
-           "group_rank", "top_k", "zorder_key"]
+           "partition_ordinals", "group_rank", "top_k", "zorder_key"]
 
 
 def zorder_key(cols: list[Column | str], bits: int = 16) -> Column:
@@ -83,62 +83,37 @@ def within_group_sort(df: DataFrame, group_cols: Iterable[str],
               .sortWithinPartitions(*(group_cols + index_cols)))
 
 
-def attach_rowid(df: DataFrame, order_cols: Iterable[str],
-                 name: str = ROWID, stable: bool = False) -> DataFrame:
-    """Deterministic ROWID from a natural ordering key (the reference's
-    ROWID coordinate, daskms/reads.py:227).
+def partition_ordinals(df: DataFrame, order_cols: Iterable[str],
+                       pin: bool = False) -> DataFrame:
+    """Range-partition ``df`` on ``order_cols``, sort each partition,
+    and tag every row with its partition id ``__pid`` and its ordinal
+    within the partition ``__loc`` — the shared spine of
+    :func:`attach_rowid` and the zarr writer.  Equal key tuples land
+    in one partition, so ``(__pid, __loc)`` is the key order up to
+    ties among identical rows.
 
-    Distributed global row_number: range-partition on the key, rank
-    within each partition, then add the cumulative row count of the
-    partitions before it.  A naive ``row_number`` over an unpartitioned
-    window serialises the whole table through one reducer; this form
-    keeps every stage parallel.
+    Both values read off ``monotonically_increasing_id`` evaluated
+    AFTER ``sortWithinPartitions`` — its documented encoding is
+    ``(partition_id << 33) | record_number_within_partition`` — so
+    they cost one narrow projection.  A ``row_number`` window keyed on
+    the pid would force a second full-data hash exchange
+    (RangePartitioning does not satisfy the window's
+    ClusteredDistribution).
 
-    The within-partition rank comes from ``monotonically_increasing_id``
-    evaluated AFTER ``sortWithinPartitions`` — its documented encoding
-    is ``(partition_id << 33) | record_number_within_partition``, so
-    both the partition id and the local ordinal read off one narrow
-    projection.  A ``row_number`` window partitioned on the pid would
-    instead force a SECOND full-data hash exchange (RangePartitioning
-    does not satisfy the window's ClusteredDistribution — review r9,
-    verified on the physical plan), doubling the shuffle cost of every
-    zarr/CASA write.  With the projection spelling the data branch is
-    range-exchange -> sort -> project -> broadcast-join: ONE full-data
-    shuffle; the offsets branch aggregates #partitions counts
-    (map-side partial) and broadcasts them.  Equal key tuples land in
-    one partition (range partitioner), so ids are only tie-permuted
-    among identical rows — the same guarantee a global window gives.
-    (daskms/writes.py:363-425 appends do the equivalent chained
-    row-count discovery.)
-
-    ``stable=True`` eagerly checkpoints the range-partitioned frame
-    before branching.  The two-branch form is only consistent when
-    Catalyst REUSES the range exchange; when the broadcast side
-    materialises separately (deep composed plans — found by
-    tools/stress_writes.py, round 9), the RangePartitioner RESAMPLES
-    its boundaries per evaluation and the offsets no longer describe
-    the data branch's partitions, yielding duplicate/overlapping ids.
-    Writers (zarr/CASA re-densify) pass stable=True: one extra
-    materialisation of data that is about to be written anyway buys a
-    structural guarantee instead of an optimizer-dependent one.
-
-    **Fault tolerance of the pin (r9 verdict item 6).**  When the
-    session has a RELIABLE checkpoint directory configured
-    (``spark.sparkContext.setCheckpointDir(...)`` — on a cluster,
-    point it at HDFS/S3), the pin is ``checkpoint(eager=True)``:
-    blocks are written to that shared storage, so an executor loss
-    mid-write recomputes nothing and loses nothing.  Without a
-    checkpoint dir it falls back to ``localCheckpoint`` — executor-
-    local, unreplicated blocks: correct, but an executor loss AFTER
-    the pin fails the write job, which must then be retried whole
-    (availability, not correctness — acceptable single-node, and the
-    failure is loud).  At 100 TB configure the checkpoint dir.
+    ``pin=True`` materialises the partitioned frame eagerly: the
+    RangePartitioner resamples its boundaries on every evaluation, so
+    two evaluations of a deep plan need not agree on which rows share
+    a partition, and anything derived from one evaluation (offsets,
+    counts) must describe the rows of the other.  With a checkpoint
+    directory configured (``sparkContext.setCheckpointDir`` — HDFS/S3
+    on a cluster) the pin is ``checkpoint(eager=True)`` and survives
+    executor loss; without one it is ``localCheckpoint`` — correct,
+    but an executor loss after the pin fails the job, which must then
+    be retried whole.
     """
     order_cols = list(order_cols)
     spark = df.sparkSession
     n = spark.sparkContext.defaultParallelism
-    # mid = (pid << 33) | local_ordinal, evaluated on the sorted
-    # partition — local order IS the key order (narrow projection)
     parted = (df.repartitionByRange(n, *[F.col(c) for c in order_cols])
                 .sortWithinPartitions(*order_cols)
                 .withColumn("__mid", F.monotonically_increasing_id())
@@ -149,15 +124,37 @@ def attach_rowid(df: DataFrame, order_cols: Iterable[str],
                             .bitwiseAND(F.lit((1 << 33) - 1))
                             .cast("long"))
                 .drop("__mid"))
-    if stable:
-        # reliable pin when a checkpoint dir is configured (survives
-        # executor loss), localCheckpoint fallback otherwise — see
-        # the fault-tolerance note in the docstring.  Public probe
-        # (PySpark >= 3.1): returns Optional[str].
-        if spark.sparkContext.getCheckpointDir() is not None:
-            parted = parted.checkpoint(eager=True)
-        else:
-            parted = parted.localCheckpoint(eager=True)
+    if not pin:
+        return parted
+    if spark.sparkContext.getCheckpointDir() is not None:
+        return parted.checkpoint(eager=True)
+    return parted.localCheckpoint(eager=True)
+
+
+def attach_rowid(df: DataFrame, order_cols: Iterable[str],
+                 name: str = ROWID, stable: bool = False) -> DataFrame:
+    """Deterministic ROWID from a natural ordering key (the reference's
+    ROWID coordinate, daskms/reads.py:227).
+
+    Distributed global row_number: :func:`partition_ordinals`, then
+    add the cumulative row count of the partitions before each one.
+    A naive ``row_number`` over an unpartitioned window serialises the
+    whole table through one reducer; this form keeps every stage
+    parallel: range-exchange -> sort -> project -> broadcast-join,
+    ONE full-data shuffle, with the offsets branch aggregating
+    #partitions counts map-side.  Ids are only tie-permuted among
+    identical rows — the same guarantee a global window gives.
+    (daskms/writes.py:363-425 appends do the equivalent chained
+    row-count discovery.)
+
+    ``stable=True`` pins the partitioned frame before branching
+    (``partition_ordinals(pin=True)``).  Unpinned, the two branches
+    agree only when Catalyst reuses the range exchange; on deep
+    composed plans it may not, and resampled boundaries then yield
+    duplicate ids.  Writers that need a structural guarantee pass
+    ``stable=True``.
+    """
+    parted = partition_ordinals(df, order_cols, pin=stable)
     offs = (parted.groupBy("__pid")
             .agg(F.count(F.lit(1)).alias("__cnt"))
             .withColumn("__off",

@@ -23,7 +23,7 @@ from typing import Iterable
 
 from pyspark.sql import SparkSession
 
-from ..dataset import Dataset
+from ..dataset import Dataset, concat, partition_datasets, regroup_stored
 from . import casa, zarr
 from .parquet import xds_from_parquet, xds_to_parquet
 
@@ -282,39 +282,37 @@ def xds_from_storage_table(spark: SparkSession, url: str,
         # once (convert_table) and query the columnar copy.  Plain
         # .json documents need multiLine (one value per FILE, not per
         # line — no intra-file parallelism, fine for small configs).
-        from ..dataset import partition_datasets as _parts
-
         reader = spark.read
         if fmt == "json":
             reader = reader.option("multiLine", "true")
         df = reader.json(store.path)
-        return _parts(df, group_cols, index_cols, where, columns)
+        return partition_datasets(df, group_cols, index_cols, where,
+                                  columns)
     if fmt == "casa":
         return casa.xds_from_casa(spark, store.path, columns,
                                   group_cols, index_cols, where)
     # zarr reads take only a column projection; grouping/ordering/filter
-    # are applied on the lazy frames afterwards, matching the parquet leg
-    # (partition_datasets re-derives one Dataset per group tuple).
+    # apply to the lazy frames afterwards, matching the parquet leg.
+    # Keys the stored partition key covers regroup the stored groups
+    # (no job, each dataset reads only its own chunks); any other key
+    # re-derives the groups from the union.
     group_cols = list(group_cols)
     index_cols = list(index_cols)
-    if where is not None:
-        # the filter may reference unprojected columns; read everything
-        # and let partition_datasets prune to ``columns`` after filtering
-        read_cols = None
-    elif columns is not None:
+    read_cols = None
+    if where is None and columns is not None:
+        # the filter may reference unprojected columns; without one
+        # read only what the datasets keep
         read_cols = list(dict.fromkeys(
             list(columns) + group_cols + index_cols))
-    else:
-        read_cols = None
     dss = zarr.xds_from_zarr(spark, store.path, read_cols)
     if not (group_cols or index_cols or where or
             (columns is not None and read_cols != list(columns or ()))):
         return dss
-    from ..dataset import concat as _concat
-    from ..dataset import partition_datasets
-
-    return partition_datasets(_concat(dss), group_cols, index_cols,
-                              where, columns)
+    out = regroup_stored(dss, group_cols, index_cols, where, columns)
+    if out is None:
+        out = partition_datasets(concat(dss), group_cols, index_cols,
+                                 where, columns)
+    return out
 
 
 def xds_to_storage_table(datasets, url: str, fmt: str | None = None,
@@ -398,11 +396,9 @@ def xds_to_storage_table(datasets, url: str, fmt: str | None = None,
     if fmt == "parquet":
         return xds_to_parquet(datasets, store.path, partition_cols, mode)
     if fmt == "jsonl":
-        from ..dataset import concat as _concat
-
         dss = datasets if isinstance(datasets, list) else [datasets]
         dss = [d if isinstance(d, Dataset) else Dataset(d) for d in dss]
-        df = _concat(dss).df if len(dss) > 1 else dss[0].df
+        df = concat(dss) if len(dss) > 1 else dss[0].df
         writer = df.write.mode(mode)
         if partition_cols:
             writer = writer.partitionBy(*partition_cols)

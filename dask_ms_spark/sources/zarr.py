@@ -14,16 +14,27 @@ the package is present.
 Execution model — the part the reference does with dask, re-expressed
 Spark-side:
 
-* **write**: rows are keyed by ``ROWID // row_chunk`` and routed to
-  one task per chunk (``applyInPandas``); every task writes its own
-  chunk files for all columns.  The driver only writes the tiny JSON
+* **write**: a fixed number of Spark jobs per store, not per group.
+  The datasets are tagged with their group index and unioned (one
+  plan per distinct schema), range-partitioned on (group, source
+  ROWID) and pinned once (``partition_ordinals(pin=True)``).  ONE
+  aggregation grouped by (group, partition) returns every group's
+  validation and sizing statistics plus the per-partition row
+  counts, from which the driver derives dense per-group ROWIDs
+  (partition offset + local ordinal).  ONE ``applyInPandas`` keyed by
+  (group, ``ROWID // row_chunk``) then writes each chunk's files for
+  all columns in its own task.  The driver only writes the tiny JSON
   metadata (``.zgroup``/``.zarray``/``.zattrs``) — mirroring the
   reference's eager DDL step — never the data.
 * **read**: the driver reads only the JSON metadata, then
   ``mapInPandas`` over a ``spark.range(n_chunks)`` frame loads chunk
   files on executors — the analogue of the reference's per-chunk
   ``zarr_getter`` (daskms/experimental/zarr/__init__.py:367-372).  No
-  full-table driver materialisation on any path.
+  full-table driver materialisation on any path.  A grouped read
+  whose keys the stored partition key covers builds its datasets
+  from the stored groups (``dataset.regroup_stored``), so each
+  dataset reads only its own groups' chunks and no job runs before
+  the action.
 
 Third-party stores with other codecs (blosc, ...) or filters are
 read through the zarr package when installed (still chunk-at-a-time
@@ -33,12 +44,16 @@ path as the remedy.
 
 from __future__ import annotations
 
+import gzip
 import json
 import os
+import re
+import shutil
+import zlib
 from typing import Iterable
 
 import numpy as np
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import (ArrayType, BooleanType, DataType, DoubleType,
                                FloatType, IntegerType, LongType, ShortType,
@@ -65,48 +80,63 @@ _ELEM_BYTES = {"boolean": 1, "tinyint": 1, "smallint": 2, "int": 4,
                "bigint": 8, "float": 4, "double": 8}
 
 
-def rechunk_by_size(df: DataFrame, max_chunk_mem: int = 2 ** 27,
-                    unchunked_cols: Iterable[str] = ()
-                    ) -> tuple[int, dict]:
-    """Derive ``(row_chunk, cell_chunks)`` so every chunk file this
-    writer emits stays under ``max_chunk_mem`` bytes — the byte-budget
-    default that prevents 2 GiB-class chunk mistakes (reference
-    ``rechunk_by_size``, daskms/experimental/utils.py:126-218; same
-    contract, re-expressed for this writer's (row, flat-cell) chunk
-    grid).
+def _column_stats(fields: list[StructField]) -> list:
+    """Per-column stat aggregates the writer validates and sizes a
+    store from: row count, null and element-null counts, tensor
+    widths, string lengths.  Metadata only — data never hits the
+    driver."""
+    aggs = [F.count(F.lit(1)).alias("__n")]
+    for f in fields:
+        c = f.name
+        aggs.append(F.sum(F.col(c).isNull().cast("long"))
+                    .alias(f"__null_{c}"))
+        if isinstance(f.dataType, ArrayType):
+            aggs += [F.min(F.size(c)).alias(f"__lo_{c}"),
+                     F.max(F.size(c)).alias(f"__hi_{c}"),
+                     F.max(F.exists(F.col(c), lambda x: x.isNull()))
+                     .alias(f"__enull_{c}")]
+            if isinstance(f.dataType.elementType, StringType):
+                aggs.append(F.max(F.array_max(F.transform(
+                    F.col(c), F.length))).alias(f"__sl_{c}"))
+        elif isinstance(f.dataType, StringType):
+            aggs.append(F.max(F.length(c)).alias(f"__sl_{c}"))
+    return aggs
 
-    One metadata-only aggregation measures array cell widths and max
-    string lengths (data never hits the driver).  The row chunk is
-    shared across columns (zarr rows are co-chunked so groups stay
-    slab-aligned): it is the largest row count that keeps every
-    non-splittable column's block under budget; array columns whose
-    block still exceeds the budget at that row chunk get a
-    ``cell_chunks`` entry splitting the cell axis.  ``unchunked_cols``
-    opts columns out of cell splitting (they then bound the row chunk
-    instead; a single cell larger than the budget raises).
-    """
+
+def _merge_stats(rows) -> dict:
+    """Fold :func:`_column_stats` rows of one group (one row per
+    partition) into the group's totals."""
+    out: dict = {}
+    for r in rows:
+        for k, v in r.asDict().items():
+            if v is None or not k.startswith("__") or k in ("__grp",
+                                                            "__pid"):
+                continue
+            if k not in out:
+                out[k] = v
+            elif k.startswith("__lo_"):
+                out[k] = min(out[k], v)
+            elif k.startswith(("__hi_", "__sl_", "__enull_")):
+                out[k] = max(out[k], v)
+            else:
+                out[k] += v
+    return out
+
+
+def _budget_grid(fields: list[StructField], stats: dict,
+                 max_chunk_mem: int, unchunked: set) -> tuple[int, dict]:
+    """The arithmetic of :func:`rechunk_by_size` over merged
+    :func:`_column_stats` totals."""
     if max_chunk_mem < 1:
         raise ValueError(f"max_chunk_mem must be >= 1, "
                          f"got {max_chunk_mem}")
-    unchunked = set(unchunked_cols)
-    fields = [f for f in df.schema.fields if f.name != ROWID]
-    aggs = []
-    for f in fields:
-        if isinstance(f.dataType, ArrayType):
-            aggs.append(F.max(F.size(f.name)).alias(f"__w_{f.name}"))
-            if isinstance(f.dataType.elementType, StringType):
-                aggs.append(F.max(F.array_max(F.transform(
-                    F.col(f.name), F.length))).alias(f"__sl_{f.name}"))
-        elif isinstance(f.dataType, StringType):
-            aggs.append(F.max(F.length(f.name)).alias(f"__sl_{f.name}"))
-    meta = df.agg(*aggs).first() if aggs else {}
 
     def itemsize(f) -> int:
         t = (f.dataType.elementType if isinstance(f.dataType, ArrayType)
              else f.dataType)
         s = t.simpleString()
         if s == "string":
-            return 4 * max(1, int(meta[f"__sl_{f.name}"] or 1))
+            return 4 * max(1, int(stats.get(f"__sl_{f.name}") or 1))
         if s == "timestamp":
             return 8
         if s not in _ELEM_BYTES:
@@ -118,23 +148,21 @@ def rechunk_by_size(df: DataFrame, max_chunk_mem: int = 2 ** 27,
     widths, sizes = {}, {}
     for f in fields:
         isz = itemsize(f)
-        w = (max(1, int(meta[f"__w_{f.name}"] or 1))
+        w = (max(1, int(stats.get(f"__hi_{f.name}") or 1))
              if isinstance(f.dataType, ArrayType) else 1)
         widths[f.name], sizes[f.name] = w, isz
         splittable = (isinstance(f.dataType, ArrayType)
                       and f.name not in unchunked)
         if w * isz > max_chunk_mem:
             # one row exceeds the budget: only a cell split can help,
-            # so the ROW chunk must drop to 1 (dividing by isz alone
-            # ignored the row width and produced a huge row_chunk —
-            # guaranteed OOM in exactly this branch; review r8)
+            # so the row chunk drops to 1
             if not splittable:
                 raise ValueError(
                     f"rechunk_by_size: one row of column {f.name!r} "
                     f"is {w * isz} bytes, over the {max_chunk_mem}-"
                     "byte budget, and the column is not cell-"
                     "splittable — raise the budget or allow splitting")
-            bound = max(1, max_chunk_mem // (w * isz))
+            bound = 1
         else:
             # whole cells preferred: splits only happen when a single
             # row cannot fit (slab-aligned reads stay cheap)
@@ -152,6 +180,32 @@ def rechunk_by_size(df: DataFrame, max_chunk_mem: int = 2 ** 27,
             cell_chunks[f.name] = max(1, max_chunk_mem
                                       // (row_chunk * isz))
     return row_chunk, cell_chunks
+
+
+def rechunk_by_size(df: DataFrame, max_chunk_mem: int = 2 ** 27,
+                    unchunked_cols: Iterable[str] = ()
+                    ) -> tuple[int, dict]:
+    """Derive ``(row_chunk, cell_chunks)`` so every chunk file this
+    writer emits stays under ``max_chunk_mem`` bytes — the byte-budget
+    default that prevents 2 GiB-class chunk mistakes (reference
+    ``rechunk_by_size``, daskms/experimental/utils.py:126-218; same
+    contract, re-expressed for this writer's (row, flat-cell) chunk
+    grid).
+
+    One metadata-only aggregation (:func:`_column_stats`) measures
+    array cell widths and max string lengths.  The row chunk is
+    shared across columns (zarr rows are co-chunked so groups stay
+    slab-aligned): it is the largest row count that keeps every
+    non-splittable column's block under budget; array columns whose
+    block still exceeds the budget at that row chunk get a
+    ``cell_chunks`` entry splitting the cell axis.  ``unchunked_cols``
+    opts columns out of cell splitting (they then bound the row chunk
+    instead; a single cell larger than the budget raises).
+    """
+    fields = [f for f in df.schema.fields if f.name != ROWID]
+    stats = _merge_stats([df.agg(*_column_stats(fields)).first()])
+    return _budget_grid(fields, stats, max_chunk_mem, set(unchunked_cols))
+
 
 DEFAULT_ROW_CHUNK = 10_000  # reference default chunking (daskms/reads.py:33)
 
@@ -187,11 +241,7 @@ def _np_to_spark(dtype: str) -> DataType:
 def _fill_value(dtype: str):
     if dtype.startswith("<U"):
         return ""
-    if dtype == "|b1":
-        return False
-    if dtype.startswith("<M8"):
-        return 0
-    return 0
+    return False if dtype == "|b1" else 0
 
 
 def _write_json(path: str, obj) -> None:
@@ -208,247 +258,209 @@ def _read_json(path: str):
 # write
 
 
-def _column_plan(df: DataFrame, max_strlen: dict[str, int],
-                 widths: dict[str, int]) -> dict[str, dict]:
-    """Per-column zarr array plan: numpy dtype + per-row width
-    (None = scalar column, int = flat tensor width)."""
-    plan: dict[str, dict] = {}
-    for f in df.schema.fields:
-        if f.name == ROWID:
-            continue
-        dt = f.dataType
-        if isinstance(dt, ArrayType):
-            elem = dt.elementType.simpleString()
-            if elem not in _SPARK_TO_NP:
-                raise NotImplementedError(
-                    f"array column {f.name}: element {elem} unsupported")
-            plan[f.name] = {"dtype": _SPARK_TO_NP[elem],
-                            "width": widths[f.name]}
-        elif isinstance(dt, StringType):
-            n = max(1, max_strlen.get(f.name, 1))
-            plan[f.name] = {"dtype": f"<U{n}", "width": None}
-        else:
-            simple = dt.simpleString()
-            if simple not in _SPARK_TO_NP:
-                raise NotImplementedError(
-                    f"column {f.name}: type {simple} unsupported by the "
-                    "zarr adapter; encode it (complex -> interleaved "
-                    "floats, types.complex_array_type) first")
-            plan[f.name] = {"dtype": _SPARK_TO_NP[simple], "width": None}
-    return plan
-
-
-def _write_group(df: DataFrame, group_dir: str, attrs: dict,
-                 row_chunk: int,
-                 cell_chunks: dict | None = None,
-                 compressor: dict | None = None) -> int:
-    """Write one dataset as one zarr group; returns rows written.
-
-    ``cell_chunks`` maps a tensor column to a chunk size along its
-    cell (width) axis; the column's chunk files become
-    ``{ci}.{j}`` slabs so sliced readers (:func:`_read_cell_chunks`)
-    can prune whole files.  Default: one cell chunk (``{ci}.0``).
-
-    ``compressor`` (zarr v2 codec dict) supports the stdlib-codable
-    codecs: ``{"id": "zlib", "level": N}`` (numcodecs raw-zlib) and
-    ``{"id": "gzip", "level": N}`` — compressed stores round-trip
-    with no zarr package on either side, and any standard zarr v2
-    reader opens them.
-    """
-    cell_chunks = dict(cell_chunks or {})
-    if compressor is not None:
-        if compressor.get("id") not in ("zlib", "gzip"):
-            raise NotImplementedError(
-                f"compressor {compressor!r}: only the stdlib codecs "
-                "zlib/gzip are supported without the zarr package")
-    if ROWID not in df.columns:
-        from ..operators.ordering import attach_rowid
-
-        df = attach_rowid(df, [c for c in df.columns],
-                          stable=True)
-
-    # one small metadata aggregation: row count, null check, ragged-
-    # tensor check, string widths (the eager-DDL analogue; data never
-    # hits driver)
-    aggs = [F.count(F.lit(1)).alias("__n"),
-            F.min(ROWID).alias("__rid_lo"),
-            F.max(ROWID).alias("__rid_hi"),
-            F.countDistinct(ROWID).alias("__rid_n")]
-    arr_cols = [f.name for f in df.schema.fields
-                if isinstance(f.dataType, ArrayType)]
-    str_cols = [f.name for f in df.schema.fields
-                if isinstance(f.dataType, StringType)]
-    data_cols = [f.name for f in df.schema.fields if f.name != ROWID]
-    for c in arr_cols:
-        aggs += [F.min(F.size(c)).alias(f"__lo_{c}"),
-                 F.max(F.size(c)).alias(f"__hi_{c}")]
-    for c in str_cols:
-        aggs.append(F.max(F.length(c)).alias(f"__sl_{c}"))
-    for c in data_cols:
-        aggs.append(F.sum(F.col(c).isNull().cast("long"))
-                    .alias(f"__null_{c}"))
-    for c in arr_cols:
-        aggs.append(F.max(F.exists(F.col(c), lambda x: x.isNull()))
-                    .alias(f"__enull_{c}"))
-    meta = df.agg(*aggs).first()
-    nrow = int(meta["__n"])
-    if nrow and (int(meta["__rid_lo"]) != 0
-                 or int(meta["__rid_hi"]) != nrow - 1
-                 or int(meta["__rid_n"]) != nrow):
-        # the countDistinct term catches duplicate ROWIDs that happen
-        # to pair with a matching gap (e.g. [0, 1, 1, 3]): min/max
-        # alone pass that input while rows still scatter into wrong
-        # chunks (review r9).
-        # gappy/global ROWIDs (a grouped or filtered dataset keeps
-        # the parent table's ids): chunk files are keyed ROWID //
-        # row_chunk while the array shape is [nrow], so non-dense ids
-        # would scatter rows into wrong/absent chunks and zero-fill
-        # the store (review r8).  Re-densify in ROWID order — the
-        # same dense-fill discipline the CASA writer applies; ROWID
-        # itself is a read-side coordinate, not a stored column, so
-        # nothing is lost.
-        from ..operators.ordering import attach_rowid
-
-        df = attach_rowid(
-            df.withColumnRenamed(ROWID, "__src_rowid"),
-            ["__src_rowid"], stable=True).drop("__src_rowid")
-        # the metadata above came from an INDEPENDENT evaluation of
-        # the input plan; the stable attach_rowid just pinned a
-        # second one.  On a nondeterministic input those can disagree
-        # (row multiset, count, widths), so recompute the aggregation
-        # on the PINNED frame — shape and chunk-grid decisions must
-        # describe the rows actually written (review r9).
-        meta = df.agg(*aggs).first()
-        nrow = int(meta["__n"])
-    nulled = {c: meta[f"__null_{c}"] for c in data_cols
-              if (meta[f"__null_{c}"] or 0) > 0}
-    nulled.update({c: "element" for c in arr_cols
-                   if meta[f"__enull_{c}"]})
+def _column_plan(fields: list[StructField], stats: dict,
+                 cell_chunks: dict) -> dict[str, dict]:
+    """Per-column zarr array plan of one group: numpy dtype, per-row
+    width (None = scalar column, int = flat tensor width) and cell
+    chunk ``cc``.  Raises on what a dense rectangular zarr array
+    cannot hold: unsupported types, nulls, ragged tensors."""
+    bad_cc = set(cell_chunks) - {f.name for f in fields
+                                 if isinstance(f.dataType, ArrayType)}
+    if bad_cc:
+        raise ValueError(
+            f"cell_chunks for non-tensor columns: {sorted(bad_cc)}")
+    nulled = {f.name: stats[f"__null_{f.name}"] for f in fields
+              if stats.get(f"__null_{f.name}")}
+    nulled.update({f.name: "element" for f in fields
+                   if stats.get(f"__enull_{f.name}")})
     if nulled:
         raise ValueError(
             f"null values in columns {nulled} — zarr arrays are dense; "
             "fill them first (df.fillna / F.coalesce with the column's "
             "fill value)")
-    widths = {}
-    for c in arr_cols:
-        lo, hi = meta[f"__lo_{c}"], meta[f"__hi_{c}"]
-        if nrow and lo != hi:
-            raise ValueError(
-                f"column {c} is ragged ({lo}..{hi} elements/row); zarr "
-                "arrays are rectangular — partition by the shape-defining "
-                "column (e.g. DATA_DESC_ID) first, as the reference does "
-                "(README.rst:100-116)")
-        widths[c] = int(hi) if nrow else 0
-    strlen = {c: int(meta[f"__sl_{c}"] or 1) if nrow else 1
-              for c in str_cols}
-    plan = _column_plan(df, strlen, widths)
+    nrow = stats.get("__n", 0)
+    plan: dict[str, dict] = {}
+    for f in fields:
+        dt = f.dataType
+        if isinstance(dt, StringType):
+            n = max(1, int(stats.get(f"__sl_{f.name}") or 1))
+            plan[f.name] = {"dtype": f"<U{n}", "width": None}
+            continue
+        elem = (dt.elementType if isinstance(dt, ArrayType)
+                else dt).simpleString()
+        if elem not in _SPARK_TO_NP:
+            raise NotImplementedError(
+                f"column {f.name}: type {dt.simpleString()} unsupported "
+                "by the zarr adapter; encode it (complex -> interleaved "
+                "floats, types.complex_array_type) first")
+        plan[f.name] = {"dtype": _SPARK_TO_NP[elem], "width": None}
+        if isinstance(dt, ArrayType):
+            lo, hi = (stats.get(f"__lo_{f.name}"),
+                      stats.get(f"__hi_{f.name}"))
+            if nrow and lo != hi:
+                raise ValueError(
+                    f"column {f.name} is ragged ({lo}..{hi} "
+                    "elements/row); zarr arrays are rectangular — "
+                    "partition by the shape-defining column (e.g. "
+                    "DATA_DESC_ID) first, as the reference does "
+                    "(README.rst:100-116)")
+            w = int(hi) if nrow else 0
+            # zarr v2 requires POSITIVE chunk dims even for a 0-size
+            # axis; a 0-width tensor gets cc=1 and no chunk files
+            plan[f.name].update(width=w, cc=max(1, min(
+                int(cell_chunks.get(f.name, w) or w), w)) if w else 1)
+    return plan
 
-    os.makedirs(group_dir, exist_ok=True)
-    _write_json(os.path.join(group_dir, ".zgroup"), {"zarr_format": 2})
-    _write_json(os.path.join(group_dir, ".zattrs"), attrs)
-    bad_cc = set(cell_chunks) - {c for c, sp in plan.items()
-                                 if sp["width"] is not None}
-    if bad_cc:
-        raise ValueError(
-            f"cell_chunks for non-tensor columns: {sorted(bad_cc)}")
-    for col, spec in plan.items():
-        adir = os.path.join(group_dir, col)
-        os.makedirs(adir, exist_ok=True)
-        w = spec["width"]
-        # zarr v2 requires POSITIVE chunk dims even for a 0-size
-        # axis (review r8: chunks=[n, 0] broke zarr.open_group and
-        # the slab reader's ceil-division); a 0-width tensor gets
-        # cc=1 metadata and no chunk files (its chunk grid is empty)
-        cc = None if w is None else \
-            max(1, min(int(cell_chunks.get(col, w) or w), w)) if w \
-            else 1
-        spec["cc"] = cc
-        zarray = {
-            "zarr_format": 2,
-            "shape": [nrow] if w is None else [nrow, w],
-            "chunks": [row_chunk] if w is None else [row_chunk, cc],
-            "dtype": spec["dtype"],
-            "compressor": dict(compressor) if compressor else None,
-            "fill_value": _fill_value(spec["dtype"]),
-            "order": "C",
-            "filters": None,
-        }
-        _write_json(os.path.join(adir, ".zarray"), zarray)
 
-    if nrow == 0:
-        # metadata-only store: shape [0, ...] arrays have no chunk files
-        return 0
+def _attrs_json(attrs: dict) -> dict:
+    out = {}
+    for k, v in attrs.items():
+        if k == PARTITION_KEY:
+            out[PARTITION_KEY] = [list(p) for p in v]
+        elif isinstance(v, (str, int, float, bool)) or v is None:
+            out[k] = v
+        else:
+            out[k] = str(v)
+    return out
 
-    # distributed chunk-aligned writes: one task per row chunk
-    cols = list(plan)
-    specs = {c: dict(plan[c]) for c in cols}
+
+def _sql_map(d: dict) -> Column:
+    """A bigint -> bigint map literal in ONE expression (no per-entry
+    Py4J literal)."""
+    return F.expr("map(" + ", ".join(f"{int(k)}L, {int(v)}L"
+                                     for k, v in sorted(d.items()))
+                  + ")")
+
+
+def _write_groups(members: list[tuple[int, Dataset]], store: str,
+                  table: str, row_chunk: int, cell_chunks: dict,
+                  compressor: dict | None,
+                  max_chunk_mem: int | None) -> dict[int, int]:
+    """Write same-schema datasets as groups ``{table}_{i}`` in one
+    pinned plan; returns rows written per group index."""
+    from ..operators.ordering import partition_ordinals
+
+    schema = members[0][1].df.schema
+    fields = [f for f in schema.fields if f.name != ROWID]
+    # types and cell_chunks checked before any job runs
+    _column_plan(fields, {}, {} if max_chunk_mem is not None
+                 else cell_chunks)
+    # groups stay in source-ROWID order (all columns without a ROWID)
+    order = ["__grp"] + ([ROWID] if ROWID in schema.names
+                         else list(schema.names))
+    union = None
+    for i, ds in members:
+        tagged = ds.df.withColumn("__grp", F.lit(i))
+        union = tagged if union is None else union.unionByName(tagged)
+    parted = partition_ordinals(union, order, pin=True)
+    rows = parted.groupBy("__grp", "__pid").agg(
+        *_column_stats(fields)).collect()
+
+    # dense per-group ROWID = __loc + base[(grp, pid)]: the group's
+    # rows in earlier partitions minus its start within this one
+    counts = {(r["__grp"], r["__pid"]): r["__n"] for r in rows}
+    n_pid = 1 + max((p for _, p in counts), default=0)
+    before, start, base = {}, {}, {}
+    for g, p in sorted(counts):
+        base[g * n_pid + p] = before.get(g, 0)
+        before[g] = before.get(g, 0) + counts[g, p]
+    for g, p in sorted(counts, key=lambda gp: (gp[1], gp[0])):
+        base[g * n_pid + p] -= start.get(p, 0)
+        start[p] = start.get(p, 0) + counts[g, p]
+
+    specs, written = {}, {}
+    for i, ds in members:
+        stats = _merge_stats(r for r in rows if r["__grp"] == i)
+        nrow = int(stats.get("__n", 0))
+        rc, cc = row_chunk, cell_chunks
+        if max_chunk_mem is not None:
+            rc, cc = _budget_grid(fields, stats, max_chunk_mem, set())
+        rc = max(1, min(rc, nrow))
+        plan = _column_plan(fields, stats, cc)
+        gdir = os.path.join(store, f"{table}_{i}")
+        os.makedirs(gdir, exist_ok=True)
+        _write_json(os.path.join(gdir, ".zgroup"), {"zarr_format": 2})
+        _write_json(os.path.join(gdir, ".zattrs"),
+                    _attrs_json(ds.attrs))
+        for col, spec in plan.items():
+            os.makedirs(os.path.join(gdir, col), exist_ok=True)
+            w = spec["width"]
+            _write_json(os.path.join(gdir, col, ".zarray"), {
+                "zarr_format": 2,
+                "shape": [nrow] if w is None else [nrow, w],
+                "chunks": [rc] if w is None else [rc, spec["cc"]],
+                "dtype": spec["dtype"],
+                "compressor": dict(compressor) if compressor else None,
+                "fill_value": _fill_value(spec["dtype"]),
+                "order": "C",
+                "filters": None,
+            })
+        specs[i] = {"dir": gdir, "row_chunk": rc, "nrow": nrow,
+                    "cols": plan}
+    want = {i: g["nrow"] for i, g in specs.items()}
+    n_chunks = sum(-(-g["nrow"] // g["row_chunk"]) for g in specs.values())
+    if not n_chunks:
+        return want         # metadata-only store: no chunk files
+
     codec_id = compressor.get("id") if compressor else None
     codec_level = int(compressor.get("level", 6)) if compressor else 0
 
     def encode(payload: bytes) -> bytes:
-        if codec_id is None:
-            return payload
-        import gzip as _gz
-        import zlib as _zl
-
         if codec_id == "gzip":
-            return _gz.compress(payload, compresslevel=codec_level)
-        return _zl.compress(payload, codec_level)
-    chunked = df.withColumn("__chunk",
-                            (F.col(ROWID) / F.lit(row_chunk))
-                            .cast("long"))
-    out_schema = StructType([StructField("chunk", LongType()),
-                             StructField("rows", LongType())])
+            return gzip.compress(payload, compresslevel=codec_level)
+        if codec_id == "zlib":
+            return zlib.compress(payload, codec_level)
+        return payload
 
     def write_chunk(pdf):
         import pandas as pd
 
-        ci = int(pdf["__chunk"].iloc[0])
+        gi, ci = int(pdf["__grp"].iloc[0]), int(pdf["__chunk"].iloc[0])
+        g = specs[gi]
         pdf = pdf.sort_values(ROWID)
-        n = len(pdf)
-        for col in cols:
-            spec = specs[col]
+        n, rc = len(pdf), g["row_chunk"]
+        for col, spec in g["cols"].items():
             dt, w = np.dtype(spec["dtype"]), spec["width"]
             if w is None:
-                arr = np.asarray(pdf[col].to_numpy(), dtype=dt)
-                full = np.zeros(row_chunk, dtype=dt)
-                full[:n] = arr
-                key = str(ci)
-                tmp = os.path.join(group_dir, col,
-                                   f".{key}.tmp{os.getpid()}")
-                with open(tmp, "wb") as fh:
-                    fh.write(encode(
-                        np.ascontiguousarray(full).tobytes()))
-                os.replace(tmp, os.path.join(group_dir, col, key))
+                full = np.zeros(rc, dtype=dt)
+                full[:n] = np.asarray(pdf[col].to_numpy(), dtype=dt)
+                parts = {str(ci): full}
             elif w == 0:
                 continue        # 0-width axis: empty chunk grid
             else:
-                arr = np.stack([np.asarray(v, dtype=dt)
-                                for v in pdf[col]])
+                # every chunk file padded to full (rc, cc), the zarr
+                # v2 layout the slab reader prunes against
                 cc = spec["cc"]
-                n_cc = (w + cc - 1) // cc if w else 1
-                # every chunk file padded to full (row_chunk, cc),
-                # the zarr v2 layout the slab reader prunes against
-                full = np.zeros((row_chunk, n_cc * cc), dtype=dt)
-                full[:n, :w] = arr
-                for j in range(n_cc):
-                    key = f"{ci}.{j}"
-                    part = full[:, j * cc:(j + 1) * cc]
-                    tmp = os.path.join(group_dir, col,
-                                       f".{key}.tmp{os.getpid()}")
-                    with open(tmp, "wb") as fh:
-                        fh.write(encode(
-                            np.ascontiguousarray(part).tobytes()))
-                    os.replace(tmp, os.path.join(group_dir, col, key))
-        return pd.DataFrame({"chunk": [ci], "rows": [n]})
+                full = np.zeros((rc, -(-w // cc) * cc), dtype=dt)
+                full[:n, :w] = np.stack([np.asarray(v, dtype=dt)
+                                         for v in pdf[col]])
+                parts = {f"{ci}.{j}": full[:, j * cc:(j + 1) * cc]
+                         for j in range(-(-w // cc))}
+            for key, part in parts.items():
+                path = os.path.join(g["dir"], col, key)
+                tmp = os.path.join(g["dir"], col,
+                                   f".{key}.tmp{os.getpid()}")
+                with open(tmp, "wb") as fh:
+                    fh.write(encode(np.ascontiguousarray(part).tobytes()))
+                os.replace(tmp, path)
+        return pd.DataFrame({"grp": [gi], "rows": [n]})
 
-    written = (chunked
-               .repartition(max(1, (nrow + row_chunk - 1) // row_chunk),
-                            "__chunk")
-               .groupBy("__chunk").applyInPandas(write_chunk, out_schema)
-               .agg(F.sum("rows")).first()[0])
-    assert written == nrow, (written, nrow)
-    return int(nrow)
+    rowid = F.col("__loc") + F.element_at(
+        _sql_map(base), F.col("__grp") * n_pid + F.col("__pid"))
+    rcs = _sql_map({i: g["row_chunk"] for i, g in specs.items()})
+    out = StructType([StructField("grp", LongType()),
+                      StructField("rows", LongType())])
+    for r in (parted.withColumn(ROWID, rowid.cast("long"))
+              .withColumn("__chunk", F.floor(
+                  F.col(ROWID) / F.element_at(rcs, F.col("__grp"))))
+              .drop("__pid", "__loc")
+              .repartition(n_chunks, "__grp", "__chunk")
+              .groupBy("__grp", "__chunk").applyInPandas(write_chunk, out)
+              .collect()):     # one small row per chunk
+        written[r[0]] = written.get(r[0], 0) + int(r[1])
+    if written != {i: n for i, n in want.items() if n}:
+        raise RuntimeError(f"chunk rows {written} != group rows {want}")
+    return want
 
 
 def xds_to_zarr(datasets: list[Dataset] | Dataset | DataFrame, store: str,
@@ -460,8 +472,15 @@ def xds_to_zarr(datasets: list[Dataset] | Dataset | DataFrame, store: str,
     """Write datasets to a zarr store, one group ``{table}_{i}`` per
     dataset (reference ``xds_to_zarr``,
     daskms/experimental/zarr/__init__.py:270-364; group naming
-    ``:129-157``).  Chunk-aligned, executor-side, uncompressed v2.
-    Returns rows written per group.
+    ``:129-157``).  Chunk-aligned, executor-side v2.  Returns rows
+    written per group.
+
+    Each group's ROWIDs are re-densified to ``0..n-1`` in source-ROWID
+    order (in all-column order when the frame has no ROWID): chunk
+    files are keyed ``ROWID // row_chunk``, and a grouped or filtered
+    dataset keeps the parent table's gappy ids.  ``row_chunk`` is
+    capped at the group's row count, so a small group is one unpadded
+    chunk.
 
     ``cell_chunks`` (column -> chunk size along the cell axis) writes
     tensor columns as multiple ``{ci}.{j}`` slab files, so later
@@ -470,46 +489,47 @@ def xds_to_zarr(datasets: list[Dataset] | Dataset | DataFrame, store: str,
     blocks of a DATA column).
 
     ``max_chunk_mem`` (bytes) switches to the byte-budget default:
-    ``row_chunk``/``cell_chunks`` are DERIVED per dataset via
-    :func:`rechunk_by_size` so no chunk file exceeds the budget
-    (explicit ``row_chunk``/``cell_chunks`` are ignored when set).
+    ``row_chunk``/``cell_chunks`` are DERIVED per group as
+    :func:`rechunk_by_size` would, from the statistics the writer
+    already aggregates (explicit ``row_chunk``/``cell_chunks`` are
+    ignored when set).
+
+    ``compressor`` (zarr v2 codec dict) supports the stdlib-codable
+    codecs ``{"id": "zlib", "level": N}`` (numcodecs raw-zlib) and
+    ``{"id": "gzip", "level": N}``; any standard zarr v2 reader opens
+    the result.
     """
     if isinstance(datasets, DataFrame):
         datasets = [Dataset(datasets, {})]
     if isinstance(datasets, Dataset):
         datasets = [datasets]
+    if compressor is not None and compressor.get("id") not in ("zlib",
+                                                               "gzip"):
+        raise NotImplementedError(
+            f"compressor {compressor!r}: only the stdlib codecs "
+            "zlib/gzip are supported without the zarr package")
     os.makedirs(store, exist_ok=True)
     _write_json(os.path.join(store, ".zgroup"), {"zarr_format": 2})
     # a rewrite with FEWER datasets must not leave the previous
     # write's higher-indexed {table}_{i} groups behind — the reader
-    # enumerates groups, so stale ones would silently come back as
-    # data (review r8).  Other tables' groups are untouched.
-    import re as _re
-    import shutil as _sh
-
-    pat = _re.compile(_re.escape(table) + r"_\d+$")
+    # enumerates groups, so stale ones would come back as data.
+    # Other tables' groups are untouched.
+    pat = re.compile(re.escape(table) + r"_\d+$")
     for d in os.listdir(store):
         if pat.fullmatch(d) and int(d.rsplit("_", 1)[1]) >= \
                 len(datasets):
-            _sh.rmtree(os.path.join(store, d), ignore_errors=True)
-    counts = []
+            shutil.rmtree(os.path.join(store, d), ignore_errors=True)
+    # one pinned plan per distinct schema, whatever the group count
+    by_schema: dict[str, list[tuple[int, Dataset]]] = {}
     for i, ds in enumerate(datasets):
-        if max_chunk_mem is not None:
-            row_chunk, cell_chunks = rechunk_by_size(ds.df,
-                                                     max_chunk_mem)
-        attrs = {}
-        for k, v in ds.attrs.items():
-            if k == PARTITION_KEY:
-                attrs[PARTITION_KEY] = [list(p) for p in v]
-            elif isinstance(v, (str, int, float, bool)) or v is None:
-                attrs[k] = v
-            else:
-                attrs[k] = str(v)
-        counts.append(_write_group(ds.df, os.path.join(store,
-                                                       f"{table}_{i}"),
-                                   attrs, row_chunk, cell_chunks,
-                                   compressor))
-    return counts
+        by_schema.setdefault(ds.df.schema.simpleString(), []).append(
+            (i, ds))
+    counts: dict[int, int] = {}
+    for members in by_schema.values():
+        counts.update(_write_groups(members, store, table, row_chunk,
+                                    dict(cell_chunks or {}), compressor,
+                                    max_chunk_mem))
+    return [counts[i] for i in range(len(datasets))]
 
 
 # ---------------------------------------------------------------------------
@@ -580,10 +600,9 @@ def _read_cell_chunks(group_dir: str, col: str, z: dict, ci: int,
     reference's blc:trc read, daskms/reads.py:58-75): files are
     ``np.memmap``-ed with the chunk's C-order shape and indexed by
     the slab directly, so an interior slab faults in just the
-    overlapping pages instead of materialising the whole chunk — the
-    sub-chunk byte reduction on top of round 5's whole-chunk pruning.
-    A trailing partial row chunk likewise touches only its
-    ``n_valid`` rows' pages.
+    overlapping pages instead of materialising the whole chunk.  A
+    trailing partial row chunk likewise touches only its ``n_valid``
+    rows' pages.
 
     zarr v2 layout: chunk key ``"{ci}.{j}.{k}..."``, every file padded
     to the full chunk shape; valid extents trimmed via the memmap
@@ -599,9 +618,8 @@ def _read_cell_chunks(group_dir: str, col: str, z: dict, ci: int,
     row_chunk = z["chunks"][0]
     if any(s == 0 for s in cell_shape):
         # 0-size axis: the chunk grid is empty (no files on disk) —
-        # synthesize the empty rows directly, flattened per cell like
-        # the main return below (rank >2 otherwise leaks nested cells
-        # into the flat-array contract — review r9)
+        # synthesize the empty rows, flattened per cell like the main
+        # return below
         out = np.zeros([n_valid] + cell_shape, dtype=dtype)
         # explicit flattened width: reshape(-1) cannot infer the
         # second axis when n_valid == 0 (size-0 array, ambiguous -1)
@@ -613,8 +631,6 @@ def _read_cell_chunks(group_dir: str, col: str, z: dict, ci: int,
     def load(path: str, shape: tuple):
         if codec is None:
             return np.memmap(path, dtype=dtype, mode="r", shape=shape)
-        import zlib
-
         with open(path, "rb") as fh:
             raw = fh.read()
         # numcodecs "zlib" = raw zlib stream; "gzip" = gzip-framed
@@ -685,15 +701,11 @@ def _read_group(spark: SparkSession, group_dir: str,
         slabs[c] = _cell_slab(arrays[c]["shape"][1:], tuple(sl))
 
     def _native(z: dict) -> bool:
+        # no filters, and uncompressed or a stdlib-decodable codec:
+        # numcodecs zlib (raw stream) / gzip (framed)
         comp = z.get("compressor")
-        if z.get("filters") not in (None, []):
-            return False
-        if comp is None:
-            return True
-        # stdlib-decodable codecs: numcodecs zlib (raw stream) and
-        # gzip (framed) — read without the zarr package
-        return isinstance(comp, dict) and comp.get("id") in ("zlib",
-                                                             "gzip")
+        return z.get("filters") in (None, []) and (comp is None or (
+            isinstance(comp, dict) and comp.get("id") in ("zlib", "gzip")))
 
     compressed = [c for c, z in arrays.items() if not _native(z)]
     if compressed and not HAVE_ZARR:
@@ -707,26 +719,19 @@ def _read_group(spark: SparkSession, group_dir: str,
     if len(nrows) != 1:
         raise ValueError(f"row-count mismatch across arrays: {shapes}")
     nrow = nrows.pop()
-    if nrow == 0:
-        fields = [StructField(ROWID, LongType(), False)]
-        for c, z in arrays.items():
-            t = _np_to_spark(z["dtype"])
-            fields.append(StructField(
-                c, ArrayType(t) if len(z["shape"]) > 1 else t))
-        return Dataset(spark.createDataFrame([], StructType(fields)),
-                       attrs)
-    row_chunks = {z["chunks"][0] for z in arrays.values()}
-    if len(row_chunks) != 1:
-        raise ValueError("arrays disagree on row chunking; rechunk first")
-    row_chunk = row_chunks.pop()
-    n_chunks = max(1, (nrow + row_chunk - 1) // row_chunk)
-
     fields = [StructField(ROWID, LongType(), False)]
     for c, z in arrays.items():
         t = _np_to_spark(z["dtype"])
         fields.append(StructField(
             c, ArrayType(t) if len(z["shape"]) > 1 else t))
     schema = StructType(fields)
+    if nrow == 0:
+        return Dataset(spark.createDataFrame([], schema), attrs)
+    row_chunks = {z["chunks"][0] for z in arrays.values()}
+    if len(row_chunks) != 1:
+        raise ValueError("arrays disagree on row chunking; rechunk first")
+    row_chunk = row_chunks.pop()
+    n_chunks = max(1, (nrow + row_chunk - 1) // row_chunk)
     metas = {c: dict(arrays[c]) for c in arrays}
     use_zarr_pkg = bool(compressed)
 
@@ -786,9 +791,7 @@ def xds_from_zarr(spark: SparkSession, store: str,
     """
     groups = _group_dirs(store)
     if table is not None:
-        import re as _re
-
-        pat = _re.compile(_re.escape(table) + r"_\d+$")
+        pat = re.compile(re.escape(table) + r"_\d+$")
         groups = [g for g in groups if pat.fullmatch(g)]
         if not groups:
             raise FileNotFoundError(

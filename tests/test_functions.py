@@ -282,6 +282,17 @@ def test_profile_table_nulls_and_empty(spark):
         assert empty[c].min_s is None and empty[c].max_s is None
 
 
+def test_profile_table_rejects_no_columns(spark):
+    """A frame with no columns has nothing to profile: both paths
+    raise instead of returning None."""
+    from dask_ms_spark.functions.stats import profile_table
+
+    bare = spark.range(3).select()
+    for exact in (True, False):
+        with pytest.raises(ValueError, match="no columns to profile"):
+            profile_table(bare, exact_ndv=exact)
+
+
 def test_profile_table_past_grouping_set_limit(spark):
     """r12 ADVICE repro: Catalyst rejects more than 64 grouping sets
     (GROUPING_SIZE_LIMIT_EXCEEDED), and the default invocation

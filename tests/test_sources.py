@@ -1004,6 +1004,14 @@ def test_jsonl_roundtrip_and_dispatch(spark, tmp_path):
     want = docs.where("n_chars > 100").count()
     assert got == want > 0
 
+    # several datasets write as one jsonl table
+    from dask_ms_spark.dataset import Dataset
+
+    two = str(tmp_path / "two.jsonl")
+    xds_to_storage_table([Dataset(docs.where("n_chars > 100"), {}),
+                          Dataset(docs.where("n_chars <= 100"), {})], two)
+    assert spark.read.json(two).count() == docs.count()
+
     # jsonl -> parquet conversion (the production first step)
     pq = str(tmp_path / "corpus.parquet")
     convert_table(spark, out, pq, exclude_columns=["lang"])

@@ -666,3 +666,160 @@ def test_zarr_write_composed_gappy_plan_roundtrips(spark, tmp_path):
     stats = red.agg(F.countDistinct(ROWID), F.max(ROWID),
                     F.count(F.lit(1))).first()
     assert stats[0] == stats[2] and stats[1] == stats[2] - 1
+
+    # several groups in ONE write (one pinned plan): three gappy
+    # slices plus a slice with duplicate source ROWIDs.  Each group
+    # reads back value-exact, with dense ROWIDs 0..n-1 whose order
+    # follows the source ROWIDs (kept in SRC).
+    src = gappy.withColumn("SRC", F.col(ROWID))
+    groups = [src.where(F.col("l_linenumber") % 3 == k) for k in range(3)]
+    groups.append(src.withColumn(ROWID, F.floor(F.col(ROWID) / 1000))
+                  .withColumn("SRC", F.col(ROWID))
+                  .where("l_linenumber = 1"))
+    store = str(tmp_path / "composed_groups")
+    counts = xds_to_zarr([Dataset(g, {"g": k})
+                          for k, g in enumerate(groups)],
+                         store, row_chunk=500)
+    cols = ["SRC", "l_orderkey", "l_partkey", "l_linenumber",
+            "l_quantity"]
+
+    def rows(pdf):
+        return sorted(map(tuple, pdf[cols].itertuples(index=False)))
+
+    back = xds_from_zarr(spark, store)
+    assert [ds.attrs["g"] for ds in back] == [0, 1, 2, 3]
+    for ds, g, n in zip(back, groups, counts):
+        got = (ds.df.select(ROWID, *cols).toPandas()
+               .sort_values(ROWID).reset_index(drop=True))
+        assert list(got[ROWID]) == list(range(n))
+        assert got["SRC"].is_monotonic_increasing
+        assert rows(got) == rows(g.select(*cols).toPandas())
+    assert counts[3] > groups[3].select("SRC").distinct().count()
+
+
+def _jobs_in(spark, group: str, fn):
+    """Run ``fn`` under a job group; return (result, jobs started)."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _ms_like(spark, n=240):
+    """MS-shaped rows: 2 fields x 2 spectral windows, gappy global
+    ROWIDs, a tensor column."""
+    return spark.range(n).selectExpr(
+        f"id * 3 AS {ROWID}", "CAST(id % 2 AS INT) AS FIELD_ID",
+        "CAST((id DIV 2) % 2 AS INT) AS DATA_DESC_ID",
+        "CAST(id % 7 AS INT) AS ANTENNA1", "CAST(id AS DOUBLE) AS TIME",
+        "array(CAST(id AS FLOAT), CAST(-id AS FLOAT)) AS DATA")
+
+
+def test_zarr_write_jobs_fixed_per_store(spark, tmp_path):
+    """A write costs the same number of Spark jobs whether it holds
+    one group or four: the datasets share one pinned plan, one
+    statistics aggregation and one chunk write."""
+    from dask_ms_spark.dataset import partition_datasets
+
+    base = _ms_like(spark)
+    one = [Dataset(base, {})]
+    four = partition_datasets(base, ["FIELD_ID", "DATA_DESC_ID"])
+    assert len(four) == 4
+    _, n1 = _jobs_in(spark, "zarr-write-1", lambda: xds_to_zarr(
+        one, str(tmp_path / "one")))
+    counts, n4 = _jobs_in(spark, "zarr-write-4", lambda: xds_to_zarr(
+        four, str(tmp_path / "four")))
+    assert counts == [60, 60, 60, 60]
+    assert n1 == n4 > 0
+
+
+def test_zarr_default_row_chunk_sized_to_group(spark, tmp_path):
+    """The default row chunk is capped at the group's row count: a
+    25-row dataset is one 25-row chunk, not a zero-padded 10,000-row
+    one."""
+    store = str(tmp_path / "sized")
+    assert xds_to_zarr(_mixed_df(spark, 25), store) == [25]
+    gdir = os.path.join(store, "MAIN_0")
+    for col, itemsize, cells in (("ival", 8, 1), ("dval", 8, 1),
+                                 ("flag", 1, 1), ("ts", 8, 1),
+                                 ("name", 4 * 8, 1), ("vec", 8, 3)):
+        z = json.load(open(os.path.join(gdir, col, ".zarray")))
+        assert z["chunks"][0] == 25
+        (chunk,) = [f for f in os.listdir(os.path.join(gdir, col))
+                    if not f.startswith(".")]
+        size = os.path.getsize(os.path.join(gdir, col, chunk))
+        assert size == 25 * itemsize * cells, col
+    (back,) = xds_from_zarr(spark, store)
+    assert sorted(r.ival for r in back.df.collect()) == \
+        [2 * i for i in range(25)]
+
+
+def test_zarr_grouped_read_uses_stored_groups(spark, tmp_path):
+    """A grouped read whose keys the stored partition key covers
+    builds its datasets from the stored groups: no job before the
+    action, one chunk scan per dataset, values as the generic path
+    returns them; a sub-key unions the groups that share a value."""
+    from dask_ms_spark.dataset import concat, partition_datasets
+
+    base = _ms_like(spark)
+    keys = ["FIELD_ID", "DATA_DESC_ID"]
+    store = str(tmp_path / "keyed")
+    xds_to_zarr(partition_datasets(base, keys), store)
+
+    dss, jobs = _jobs_in(spark, "zarr-read", lambda: (
+        xds_from_storage_table(spark, store, group_cols=keys,
+                               index_cols=["TIME"])))
+    assert jobs == 0
+    assert [tuple(d.attrs[k] for k in keys) for d in dss] == \
+        [(0, 0), (0, 1), (1, 0), (1, 1)]
+    for d in dss:
+        assert d.attrs[PARTITION_KEY] == (("FIELD_ID", "int"),
+                                          ("DATA_DESC_ID", "int"))
+        plan = d.df._jdf.queryExecution().executedPlan().toString()
+        assert plan.count("MapInPandas") == 1
+        times = [r.TIME for r in d.df.select("TIME").collect()]
+        assert times == sorted(times) and len(times) == 60
+        want = base.where((F.col("FIELD_ID") == d.attrs["FIELD_ID"])
+                          & (F.col("DATA_DESC_ID")
+                             == d.attrs["DATA_DESC_ID"]))
+        assert sorted(times) == sorted(
+            r.TIME for r in want.select("TIME").collect())
+
+    # sub-key: FIELD_ID alone unions two stored groups per value
+    by_field = xds_from_storage_table(spark, store, group_cols=["FIELD_ID"],
+                                      columns=["TIME"])
+    assert [d.attrs["FIELD_ID"] for d in by_field] == [0, 1]
+    assert [d.df.columns for d in by_field] == [["TIME"], ["TIME"]]
+    assert [d.df.count() for d in by_field] == [120, 120]
+
+    # a filter that empties groups drops them, as partition_datasets
+    # does
+    kept = xds_from_storage_table(spark, store, group_cols=keys,
+                                  where="DATA_DESC_ID = 1 AND TIME < 9")
+    assert [(d.attrs["FIELD_ID"], d.attrs["DATA_DESC_ID"])
+            for d in kept] == [(0, 1), (1, 1)]
+    assert sum(d.df.count() for d in kept) == base.where(
+        "DATA_DESC_ID = 1 AND TIME < 9").count()
+    assert concat(kept).count() == 4
+
+
+def test_zarr_grouped_read_on_unstored_key(spark, tmp_path):
+    """Grouping on a column the store is not keyed by (ANTENNA1) still
+    returns one correct dataset per value."""
+    from dask_ms_spark.dataset import partition_datasets
+
+    base = _ms_like(spark)
+    store = str(tmp_path / "keyed")
+    xds_to_zarr(partition_datasets(base, ["FIELD_ID", "DATA_DESC_ID"]),
+                store)
+    dss = xds_from_storage_table(spark, store, group_cols=["ANTENNA1"])
+    want = {r.ANTENNA1: r["count"] for r in
+            base.groupBy("ANTENNA1").count().collect()}
+    assert [d.attrs["ANTENNA1"] for d in dss] == sorted(want)
+    for d in dss:
+        assert d.df.count() == want[d.attrs["ANTENNA1"]]
+        assert {r.ANTENNA1 for r in d.df.select("ANTENNA1").collect()} \
+            == {d.attrs["ANTENNA1"]}

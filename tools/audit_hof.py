@@ -681,17 +681,15 @@ DF_OP_WHITELIST = {
         "kernel invocation above drives; no independent re-expansion "
         "surface exists (its lambda is the identity/restructuring "
         "closure the caller supplies over already-bound refs)",
-    "zarr.rechunk_by_size":
+    "zarr._column_stats":
         "the F.transform(col, F.length) / size() calls are bounded "
         "per-column STAT AGGREGATES (max string length, max array "
         "width) over plain column attribute refs computed once per "
         "write — never a per-element lambda over an expression input; "
         "write round-trips at MS widths are pytest-covered "
-        "(tests/test_zarr.py)",
-    "zarr._write_group":
-        "the F.exists null-scan is a bounded per-column validation "
-        "aggregate over a plain column ref on the write path; "
-        "corruption-guard behaviour is pytest-covered "
+        "(tests/test_zarr.py).  The F.exists null-scan is a bounded "
+        "per-column validation aggregate over a plain column ref on "
+        "the write path; corruption-guard behaviour is pytest-covered "
         "(tests/test_zarr.py)",
     "text.learn_bpe_merges":
         "driver-side tokenizer TRAINING loop returning a python list; "
