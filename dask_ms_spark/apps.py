@@ -196,7 +196,14 @@ def _curate(args) -> int:
     so the funnel scales exactly as SCALE.md documents for each
     stage.  Writes split-partitioned parquet plus ``_card.json``
     (underscore-prefixed so Spark's file index skips it)
-    (per-split/lang volumes and the stage-by-stage funnel)."""
+    (per-split/lang volumes and the stage-by-stage funnel).
+
+    Jobs, in order: the input count; the persisted quality +
+    exact-dedup survivors' count (the quality gate is map-side and
+    the parallelism probes start no job); the near-dup, contamination
+    and split stages inside the write; one aggregation over the
+    written parquet for the card, whose per-split counts sum to the
+    final count."""
     import json
     import os
 
@@ -256,21 +263,20 @@ def _curate(args) -> int:
             .parquet(args.output)
 
     # counts and split stats come from the WRITTEN parquet, not a
-    # re-execution of the curation lineage (review r9)
+    # re-execution of the curation lineage: one aggregation, whose
+    # per-split counts also sum to the final count
     try:
         out = spark.read.parquet(args.output)
-        n_out = out.count()
     except Exception:     # everything dropped: no partition dirs
-        n_out = 0
-    if n_out:
+        split_rows = []
+    else:
         by = ["split"] + (["lang"] if "lang" in out.columns else [])
         split_rows = [r.asDict() for r in
                       out.groupBy(*by)
                       .agg(F.count(F.lit(1)).alias("n_docs"),
                            F.sum(F.length("text")).alias("n_chars"))
                       .orderBy(*by).collect()]
-    else:
-        split_rows = []   # everything dropped: no partition dirs
+    n_out = sum(r["n_docs"] for r in split_rows)
     card = {
         "funnel": {"input": n_input,
                    "after_quality_and_exact_dedup": n_quality_exact,

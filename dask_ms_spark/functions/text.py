@@ -18,7 +18,8 @@ from pyspark.sql import functions as F
 
 from .vector import _bind_once
 
-__all__ = ["portable_hash64", "tokens", "token_count", "char_ngrams",
+__all__ = ["portable_hash64", "portable_hash64_sql", "sql_string",
+           "tokens", "token_count", "char_ngrams",
            "learn_bpe_merges", "apply_bpe_merges",
            "word_shingles", "quality_features", "langid_scores", "langid",
            "fingerprint", "with_fingerprint", "STOPWORDS",
@@ -57,6 +58,13 @@ def stopword_ratio(text: Column, lang: str = "en") -> Column:
         F.greatest(F.size(toks), F.lit(1)).cast("double")
 
 
+# The hash's one spelling: md5 of ``x || salt``, its first 15 hex
+# digits read as base 16, as a bigint.  ``portable_hash64`` renders it
+# as a Column, ``portable_hash64_sql`` as SQL text for callers that
+# build a whole expression with one ``F.expr``.
+_HASH64_STEPS = (("md5",), ("substring", 1, 15), ("conv", 16, 10))
+
+
 def portable_hash64(col: Column, salt: str | Column = "") -> Column:
     """Deterministic 60-bit hash from md5 — identical in Spark, DuckDB,
     Python.  ``conv(substr(md5(x || salt),1,15),16,10)`` as bigint.
@@ -66,8 +74,25 @@ def portable_hash64(col: Column, salt: str | Column = "") -> Column:
     a signed 64-bit int.
     """
     salt_col = F.lit(salt) if isinstance(salt, str) else salt
-    payload = F.concat(col.cast("string"), salt_col)
-    return F.conv(F.substring(F.md5(payload), 1, 15), 16, 10).cast("bigint")
+    out = F.concat(col.cast("string"), salt_col)
+    for name, *args in _HASH64_STEPS:
+        out = getattr(F, name)(out, *args)
+    return out.cast("bigint")
+
+
+def sql_string(s: str) -> str:
+    """``s`` as a Spark SQL string literal."""
+    return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
+
+
+def portable_hash64_sql(x: str, salt: str = "") -> str:
+    """:func:`portable_hash64` as SQL text over the SQL operand ``x``
+    with a literal ``salt``; value- and type-identical to the Column
+    form."""
+    out = f"concat(CAST({x} AS STRING), {sql_string(salt)})"
+    for name, *args in _HASH64_STEPS:
+        out = f"{name}({', '.join([out, *map(str, args)])})"
+    return f"CAST({out} AS BIGINT)"
 
 
 def tokens(text: Column) -> Column:

@@ -16,7 +16,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..cache import pin_multi_consumer
-from ..functions.text import portable_hash64, tokens
+from ..functions.text import portable_hash64, sql_string, tokens
 from ..functions.vector import _bind_once
 from ..session import ensure_parallelism
 
@@ -351,6 +351,25 @@ QUALITY_REASONS = {
 }
 
 
+# Per-row quality features as ONE expression over the sorted token
+# array: a single fold counts words and stopwords, distinct words, and
+# the longest run of one word (= the top word count, equal words being
+# adjacent once sorted).  ``{toks}`` appears once, so the token array
+# is computed once per row; NULL text folds the empty array.
+_QUALITY_FEATURES_SQL = """aggregate(
+    array_sort(coalesce({toks}, array())),
+    named_struct('prev', CAST(NULL AS STRING), 'run', 0L, 'n_words', 0L,
+                 'n_distinct', 0L, 'max_cnt', 0L, 'stop_cnt', 0L),
+    (acc, w) -> named_struct(
+        'prev', w,
+        'run', IF(w = acc.prev, acc.run + 1, 1L),
+        'n_words', acc.n_words + 1,
+        'n_distinct', acc.n_distinct + IF(w = acc.prev, 0L, 1L),
+        'max_cnt', greatest(acc.max_cnt,
+                            IF(w = acc.prev, acc.run + 1, 1L)),
+        'stop_cnt', acc.stop_cnt + IF({is_stop}, 1L, 0L)))"""
+
+
 def quality_filter(docs: DataFrame, text_col: str = "text",
                    id_col: str = "doc_id",
                    min_words: int = 20, max_words: int = 5000,
@@ -358,61 +377,53 @@ def quality_filter(docs: DataFrame, text_col: str = "text",
                    max_word_frac: float = 0.12,
                    max_stop_frac: float = 0.10,
                    stopwords: tuple = ("the", "a")) -> DataFrame:
-    """Gopher-style composite quality gate: one verdict row per doc
-    with a ``reasons`` bitmask (:data:`QUALITY_REASONS`) and
+    """Gopher-style composite quality gate: one verdict row per input
+    row with a ``reasons`` bitmask (:data:`QUALITY_REASONS`) and
     ``keep = (reasons == 0)``.
 
     The feature set (length bounds, lexical diversity, single-word
     dominance, stopword-rate anomaly) is the standard pre-training
-    drop battery; thresholds are corpus-tunable parameters.  Plan
-    shape: explode words -> (doc, word) partial-count -> (doc) merge,
-    identical to ``bigram_repetition`` — two partial-merged
-    aggregations, per-document keys, no skew, no Python.
+    drop battery; thresholds are corpus-tunable parameters.  Features
+    come from each row's own lower-cased whitespace tokens, so rows
+    sharing a ``doc_id`` get one verdict each; empty, whitespace-only
+    and NULL text has no tokens and is ``too_short`` with NULL ratios.
+    Plan shape: one projection of one scan (the feature struct is one
+    fold over the sorted token array) — no explode, no shuffle, no
+    join, no Python.
     """
+    is_stop = (f"w IN ({', '.join(sql_string(w) for w in stopwords)})"
+               if stopwords else "false")
     toks = tokens(F.lower(F.col(text_col)))
-    base = (ensure_parallelism(docs)
-            .select(F.col(id_col).alias("id"),
-                    F.explode(toks).alias("w")))
-    per_word = (base.groupBy("id", "w")
-                .agg(F.count(F.lit(1)).alias("cnt")))
-    stop = F.col("w").isin(*stopwords)
-    agg = (per_word.groupBy("id")
-           .agg(F.sum("cnt").cast("long").alias("n_words"),
-                F.count(F.lit(1)).cast("long").alias("n_distinct"),
-                F.max("cnt").cast("long").alias("max_cnt"),
-                F.sum(F.when(stop, F.col("cnt")).otherwise(0))
-                 .cast("long").alias("stop_cnt")))
-    # token-less documents (empty/whitespace text) vanish from the
-    # explode — join them back so the WORST documents still get a
-    # verdict (n_words=0 -> too_short) instead of bypassing the gate
-    feats = (docs.select(F.col(id_col).alias("id"))
-             .join(agg, "id", "left")
-             .select("id",
-                     *[F.coalesce(F.col(c), F.lit(0)).alias(c)
-                       for c in ("n_words", "n_distinct", "max_cnt",
-                                 "stop_cnt")]))
-    nw = F.col("n_words").cast("double")
-    has = F.col("n_words") > 0
-    reasons = (
-        F.when(F.col("n_words") < min_words,
-               QUALITY_REASONS["too_short"]).otherwise(0)
-        + F.when(F.col("n_words") > max_words,
-                 QUALITY_REASONS["too_long"]).otherwise(0)
-        + F.when(has & (F.col("n_distinct") / nw < min_distinct_ratio),
-                 QUALITY_REASONS["low_diversity"]).otherwise(0)
-        + F.when(has & (F.col("max_cnt") / nw > max_word_frac),
-                 QUALITY_REASONS["repeated_word"]).otherwise(0)
-        + F.when(has & ((F.col("stop_cnt") == 0)
-                        | (F.col("stop_cnt") / nw > max_stop_frac)),
-                 QUALITY_REASONS["stopword_anomaly"]).otherwise(0))
-    ratio = (lambda num: F.when(has, F.round(num / nw, 6)))
-    return feats.select(
-        F.col("id").alias(id_col), "n_words",
-        ratio(F.col("n_distinct")).alias("distinct_ratio"),
-        ratio(F.col("max_cnt")).alias("max_word_frac"),
-        ratio(F.col("stop_cnt")).alias("stop_frac"),
-        reasons.cast("int").alias("reasons"),
-        (reasons == 0).alias("keep"))
+    fold = _QUALITY_FEATURES_SQL.format(toks="__toks", is_stop=is_stop)
+    nw = "CAST(__f.n_words AS DOUBLE)"
+    # ratio tests run on rows with words only (AND short-circuits, so
+    # there is no division by a zero word count)
+    has = "__f.n_words > 0 AND "
+    flags = {
+        "too_short": f"__f.n_words < {min_words}",
+        "too_long": f"__f.n_words > {max_words}",
+        "low_diversity":
+            f"{has}__f.n_distinct / {nw} < {float(min_distinct_ratio)}D",
+        "repeated_word":
+            f"{has}__f.max_cnt / {nw} > {float(max_word_frac)}D",
+        "stopword_anomaly": f"{has}(__f.stop_cnt = 0 OR "
+                            f"__f.stop_cnt / {nw} > {float(max_stop_frac)}D)",
+    }
+    reasons = " + ".join(f"IF({cond}, {QUALITY_REASONS[name]}, 0)"
+                         for name, cond in flags.items())
+
+    def ratio(num):
+        return f"IF(__f.n_words > 0, round(__f.{num} / {nw}, 6), NULL)"
+
+    return (ensure_parallelism(docs)
+            .select(F.col(id_col), toks.alias("__toks"))
+            .select(id_col, F.expr(fold).alias("__f"))
+            .selectExpr(f"`{id_col}`", "__f.n_words AS n_words",
+                        f"{ratio('n_distinct')} AS distinct_ratio",
+                        f"{ratio('max_cnt')} AS max_word_frac",
+                        f"{ratio('stop_cnt')} AS stop_frac",
+                        f"CAST({reasons} AS INT) AS reasons",
+                        f"{reasons} = 0 AS keep"))
 
 
 # Conservative RE2-compatible patterns (no backreferences/lookarounds)

@@ -41,7 +41,8 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..cache import scoped_persist
-from ..functions.text import char_ngrams, portable_hash64
+from ..functions.text import (char_ngrams, portable_hash64,
+                              portable_hash64_sql)
 from ..functions.vector import _bind_once, cosine
 from ..session import ensure_parallelism
 
@@ -166,6 +167,15 @@ MINHASH_COEFFS: list[tuple[int, int]] = [
 ]
 
 
+def _coeffs(num_hashes: int) -> list[tuple[int, int]]:
+    """The first ``num_hashes`` permutation constants."""
+    if not 1 <= num_hashes <= len(MINHASH_COEFFS):
+        raise ValueError(
+            f"num_hashes must be in [1, {len(MINHASH_COEFFS)}] (the "
+            f"baked permutation table), got {num_hashes}")
+    return MINHASH_COEFFS[:num_hashes]
+
+
 def shingle_base_hashes(text: Column, shingle_k: int = 5) -> Column:
     """Distinct shingles -> one portable 31-bit base hash each.
 
@@ -194,21 +204,17 @@ def minhash_from_base(base: Column, num_hashes: int = 32) -> Column:
     """Affine-permutation minima over a base-hash array.  The base
     binds once per row (review r9): an expression-typed input (the
     shingle+md5 chain) would otherwise re-evaluate per PERMUTATION."""
-    if not 1 <= num_hashes <= len(MINHASH_COEFFS):
-        raise ValueError(
-            f"num_hashes must be in [1, {len(MINHASH_COEFFS)}] (the "
-            f"baked permutation table), got {num_hashes}")
+    coeffs = _coeffs(num_hashes)
 
     def run(bb):
-        def perm_min(i: int):
-            a, b = MINHASH_COEFFS[i]
+        def perm_min(a: int, b: int):
             # single-arg lambda: a two-arg lambda would make
             # transform() pass the element index as the second arg
             return F.array_min(F.transform(
                 bb, lambda h: (F.lit(a) * h + F.lit(b))
                 % F.lit(MINHASH_P)))
 
-        return F.array(*[perm_min(i) for i in range(num_hashes)])
+        return F.array(*[perm_min(a, b) for a, b in coeffs])
 
     return _bind_once(run, bb=base)
 
@@ -223,26 +229,29 @@ def minhash_table(docs: DataFrame, text_col: str = "text",
     whole-stage-codegen'd.  Exploding to one row per (doc, shingle
     hash) makes the K affine permutations plain codegen'd projections
     and the minima map-side partial aggregates; the shuffle carries
-    (id, K ints) after combining.  Signature values are identical to
-    the array form by construction.
+    (id, K ints) after combining.  ``sig`` is ONE aggregate expression,
+    ``array(min((a_0*h + b_0) % P), ...)``, parsed from SQL text in one
+    call instead of K Column trees built element by element; its
+    values and type (``array<bigint>``) are identical to the array
+    form by construction.  Plan shape: scan (round-robin widened when
+    under-split) -> explode -> partial aggregate -> hash exchange on
+    id -> final aggregate.  One row per distinct id: rows sharing an
+    id pool their shingles into one signature, and a row with NULL
+    text has no shingles and no row.
     """
+    coeffs = _coeffs(num_hashes)
     shingles = char_ngrams(normalize_text(F.col(text_col)), shingle_k)
     exploded = ensure_parallelism(docs).select(
         F.col(id_col).alias("id"), F.explode(shingles).alias("s"))
     hashed = exploded.select(
         "id", (portable_hash64(F.col("s")) % F.lit(MINHASH_P)).alias("h"))
-    h = F.col("h")
-    aggs = []
-    for i in range(num_hashes):
-        a, b = MINHASH_COEFFS[i]
-        aggs.append(F.min((F.lit(a) * h + F.lit(b)) % F.lit(MINHASH_P))
-                     .alias(f"__m{i}"))
+    sig = F.expr("array(" + ", ".join(
+        f"min(({a} * h + {b}) % {MINHASH_P})"
+        for a, b in coeffs) + ")")
+    aggs = [sig.alias("sig")]
     if with_hset:
         aggs.append(F.collect_set("h").alias("hset"))
-    grouped = hashed.groupBy("id").agg(*aggs)
-    sig = F.array(*[F.col(f"__m{i}") for i in range(num_hashes)])
-    cols = ["id", sig.alias("sig")] + (["hset"] if with_hset else [])
-    return grouped.select(*cols)
+    return hashed.groupBy("id").agg(*aggs)
 
 
 def with_minhash(docs: DataFrame, text_col: str = "text",
@@ -258,16 +267,18 @@ def with_minhash(docs: DataFrame, text_col: str = "text",
     return sigs
 
 
-def _bands(sig: Column, num_bands: int, rows_per_band: int) -> list[Column]:
-    """Band digests: hash of each contiguous rows_per_band slice."""
-    return [
-        portable_hash64(
-            F.concat_ws(",", *[
-                F.element_at(sig, b * rows_per_band + r + 1).cast("string")
-                for r in range(rows_per_band)]),
-            f"band{b}")
-        for b in range(num_bands)
-    ]
+def _bands(sig: str, num_bands: int, rows_per_band: int) -> Column:
+    """Band digests of the signature column ``sig`` as ONE array
+    expression: element b hashes the b-th contiguous rows_per_band
+    slice, ``portable_hash64(concat_ws(",", ...), f"band{b}")``."""
+    def band(b: int) -> str:
+        rows = ", ".join(
+            f"CAST(element_at({sig}, {b * rows_per_band + r + 1}) AS STRING)"
+            for r in range(rows_per_band))
+        return portable_hash64_sql(f"concat_ws(',', {rows})", f"band{b}")
+
+    return F.expr("array(" + ", ".join(band(b) for b in range(num_bands))
+                  + ")")
 
 
 def _cap_buckets(banded: DataFrame, max_bucket_size: int | None
@@ -315,9 +326,9 @@ def _banded_table(sigged: DataFrame, num_bands: int,
     (interleaved A/B at sf0.1, with the struct-payload change below:
     dedup_lsh_capped 0.65x, dedup_ngram_jaccard 0.70x,
     graph_triangles 0.87x, split_leakage 0.93x)."""
-    bands = _bands(F.col("sig"), num_bands, rows_per_band)
+    bands = _bands("sig", num_bands, rows_per_band)
     banded = sigged.select(
-        "id", F.posexplode(F.array(*bands)).alias("band_id", "band_hash"))
+        "id", F.posexplode(bands).alias("band_id", "band_hash"))
     return scoped_persist(_cap_buckets(banded, max_bucket_size))
 
 
@@ -984,9 +995,13 @@ def _edits_arrow_kernel(pairs: DataFrame) -> DataFrame:
     that PROVABLY fails the max_edits/max_ratio filters into -1 —
     returning the exact distance instead drops the same pairs on the
     same filters (d > k = min(max_edits, floor(max_ratio*L)+1)
-    implies d > max_edits or round(d/L, 6) > max_ratio).  DuckDB's
-    levenshtein is code-point exact-match to Spark's (probed; the
-    DuckDB oracle itself scores with it).
+    implies d > max_edits or round(d/L, 6) > max_ratio).  That
+    identity holds for ASCII text only: DuckDB's ``levenshtein``
+    (1.0.0) counts UTF-8 bytes where Spark counts code points, so
+    ``('café', 'cafe')`` scores 2 here and 1 on the JVM path — an open
+    correctness item (ROADMAP item 0, "Make edit distance code-point
+    exact on both sides"), and the DuckDB oracle scores with the same
+    byte-based function, so it cannot catch it.
 
     The round-robin repartition keeps `_verify_once`'s CPU-spread
     property: hub documents cluster thousands of pairs on one

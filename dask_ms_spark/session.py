@@ -71,23 +71,64 @@ def get_spark(app_name: str = "dask-ms-spark", master: str | None = None,
     return builder.getOrCreate()
 
 
+def _planned_partitions(plan) -> int:
+    """Partition count of the physical ``plan`` (a JVM ``SparkPlan``)
+    as planned, starting no job.
+
+    Under AQE this reads the adaptive plan's current physical plan:
+    before execution, the initial one with its exchanges placed (its
+    ``inputPlan`` has none yet).  A partitioning that states its count
+    (set by a shuffle, a coalesce or a range) is used as it is.
+    Otherwise the count is the streamed side's (a broadcast build side
+    never sets it; a union adds its children's), down to the leaf
+    scan, whose planned splits are read from its RDD: no exchange lies
+    below a leaf, so building that RDD runs nothing — unless the scan
+    is filtered by a subquery (dynamic partition pruning), which then
+    runs.  A persisted frame reports its cached RDD once loaded and
+    its cached plan before that.
+    """
+    name = plan.nodeName()
+    if name == "AdaptiveSparkPlan":
+        return _planned_partitions(plan.executedPlan())
+    if name == "InMemoryTableScan":
+        cache = plan.relation().cacheBuilder()
+        if cache.isCachedColumnBuffersLoaded():
+            return cache.cachedColumnBuffers().getNumPartitions()
+        return _planned_partitions(plan.relation().cachedPlan())
+    n = plan.outputPartitioning().numPartitions()
+    if n > 0:
+        return n
+    kids = plan.children()
+    if kids.isEmpty():
+        return plan.execute().getNumPartitions()
+    kids = [kids.apply(i) for i in range(kids.size())]
+    if name == "Union":
+        return sum(_planned_partitions(k) for k in kids)
+    streamed = [k for k in kids if k.nodeName() != "BroadcastExchange"]
+    return _planned_partitions((streamed or kids)[0])
+
+
 def ensure_parallelism(df, min_partitions: int | None = None):
-    """Round-robin repartition ``df`` iff its scan yields fewer
+    """Round-robin repartition ``df`` iff its plan yields fewer
     partitions than the session's core count.
 
     Why: a small parquet file is a single row group = ONE input split,
     so CPU-heavy per-row work (md5 shingling, regex scoring) serialises
     on one core no matter how many the session has.  At production
-    scale inputs span many splits and this is a no-op — the check reads
-    the planned partition count (no job runs), so the extra exchange
-    only ever appears when the scan genuinely under-parallelises.
+    scale inputs span many splits and this is a no-op.  The count is
+    the PLANNED one, read from the physical plan (see
+    :func:`_planned_partitions`): no Spark job runs, where ``df.rdd``
+    would execute every AQE stage of a joined or aggregated frame only
+    for the action to run them again.  A frame whose root is a shuffle
+    reports the shuffle's planned count, before AQE coalescing.
     The reference has the same issue inverted: its chunks arg splits a
     monolithic CASA table into dask tasks (daskms/dask_ms.py:243-267).
     """
     spark = df.sparkSession
     if min_partitions is None:
         min_partitions = spark.sparkContext.defaultParallelism
-    if df.rdd.getNumPartitions() < min_partitions:
+    planned = _planned_partitions(df._jdf.queryExecution().executedPlan())
+    if planned < min_partitions:
         return df.repartition(min_partitions)
     return df
 

@@ -38,6 +38,17 @@ def table(spark, name):
     return spark.read.parquet(os.path.join(SF_DIR, f"{name}.parquet"))
 
 
+def jobs_in(spark, group: str, fn):
+    """Run ``fn`` under a job group; return (result, jobs started)."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
 @pytest.fixture(scope="session")
 def lineitem(spark):
     return table(spark, "lineitem")

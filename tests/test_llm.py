@@ -464,6 +464,108 @@ def test_quality_filter_reasons(spark):
     assert got[3].reasons & QUALITY_REASONS["low_diversity"]
 
 
+def test_quality_filter_tokenless_text_too_short(spark):
+    """Empty, whitespace-only and NULL text have no tokens: a
+    ``too_short`` verdict with NULL ratios, never a missing row."""
+    from dask_ms_spark.llm.corpus import QUALITY_REASONS, quality_filter
+
+    rows = [(1, ""), (2, "    "), (3, None)]
+    df = spark.createDataFrame(rows, "doc_id long, text string")
+    got = sorted(quality_filter(df).collect())
+    assert [r.doc_id for r in got] == [1, 2, 3]
+    for r in got:
+        assert r.n_words == 0 and not r.keep
+        assert r.reasons == QUALITY_REASONS["too_short"]
+        assert r.distinct_ratio is None and r.max_word_frac is None \
+            and r.stop_frac is None
+
+
+def test_quality_filter_features_match_python_reference(spark):
+    """Per-row features and verdicts equal a ``Counter`` over
+    ``text.lower().split()`` on random documents with repeated words,
+    mixed case, runs of whitespace and stopword-only text; rows that
+    share a doc_id get one verdict each."""
+    import random
+    from collections import Counter
+
+    from dask_ms_spark.llm.corpus import quality_filter
+
+    rng = random.Random(5)
+    vocab = ["the", "a", "The", "cat", "dog", "Sat", "on", "mat"] + \
+        [f"w{i}" for i in range(40)]
+    texts = ["the a the A", "the the the the", "spam " * 30]
+    for _ in range(80):
+        words = [rng.choice(vocab) for _ in range(rng.randrange(0, 60))]
+        seps = [rng.choice([" ", "  ", "\t", " \n "]) for _ in words]
+        texts.append(" " * rng.randrange(3) + "".join(
+            w + s for w, s in zip(words, seps)).rstrip() + " ")
+    rows = [(i, t) for i, t in enumerate(texts)] + [(0, texts[2])]
+    df = spark.createDataFrame(rows, "doc_id long, text string")
+
+    def reference(text):
+        c = Counter(text.lower().split())
+        n = sum(c.values())
+        d, m, s = len(c), max(c.values(), default=0), c["the"] + c["a"]
+        reasons = ((n < 20) | (n > 5000) << 1
+                   | (n > 0 and d / n < 0.40) << 2
+                   | (n > 0 and m / n > 0.12) << 3
+                   | (n > 0 and (s == 0 or s / n > 0.10)) << 4)
+        return n, d, m, s, reasons
+
+    # the two doc_id 0 rows differ in length, so (id, n) is a key
+    want = {(i, ref[0]): ref for i, t in rows for ref in [reference(t)]}
+    got = quality_filter(df).collect()
+    assert len(got) == len(rows) == len(want)
+    assert sum(r.doc_id == 0 for r in got) == 2
+    for r in got:
+        n, d, m, s, reasons = want.pop((r.doc_id, r.n_words))
+        assert (r.reasons, r.keep) == (reasons, reasons == 0)
+        for ratio, num in ((r.distinct_ratio, d), (r.max_word_frac, m),
+                           (r.stop_frac, s)):
+            if n:
+                assert ratio == pytest.approx(num / n, abs=1e-6)
+            else:
+                assert ratio is None
+
+
+def test_minhash_table_matches_array_form(spark):
+    """The one-expression aggregate signature equals the array form
+    ``minhash_from_base(shingle_base_hashes(text))`` in value and type
+    for every table width."""
+    from dask_ms_spark.llm.dedup import (minhash_from_base, minhash_table,
+                                         shingle_base_hashes)
+
+    rows = [Row(doc_id=i, text=f"Document {i}: " + "lorem ipsum " * (i % 4)
+                + "dolor sit amet " * (i % 3)) for i in range(12)]
+    docs = spark.createDataFrame(rows)
+    for k in (1, 8, 32, 64):
+        table = minhash_table(docs, num_hashes=k)
+        ref = docs.select(F.col("doc_id").alias("id"), minhash_from_base(
+            shingle_base_hashes(F.col("text")), k).alias("sig"))
+        assert table.schema["sig"].dataType == ref.schema["sig"].dataType
+        assert sorted(table.collect()) == sorted(ref.collect())
+
+
+def test_band_digests_match_column_form(spark):
+    """Each element of the one-expression band array equals the Column
+    API ``portable_hash64(concat_ws(",", ...), f"band{b}")``."""
+    from dask_ms_spark.functions.text import portable_hash64
+    from dask_ms_spark.llm.dedup import _bands, minhash_table
+
+    docs = spark.createDataFrame(
+        [Row(doc_id=i, text=f"near duplicate text number {i} " * 2)
+         for i in range(10)])
+    sig = minhash_table(docs, num_hashes=32)
+    for nb, r in ((8, 4), (4, 8), (32, 1)):
+        ref = [portable_hash64(F.concat_ws(",", *[
+            F.element_at("sig", b * r + j + 1).cast("string")
+            for j in range(r)]), f"band{b}") for b in range(nb)]
+        got = sig.select(_bands("sig", nb, r).alias("bands"),
+                         F.array(*ref).alias("ref"))
+        assert got.schema["bands"].dataType == got.schema["ref"].dataType
+        assert all(row.bands == row.ref for row in got.collect())
+
+
 def test_pii_scan_counts_and_redacts(spark):
     from dask_ms_spark.llm.corpus import pii_scan
 

@@ -2,11 +2,14 @@
 analogue (daskms/tests/test_ordering.py:32-117): assert what the
 optimizer actually did, not what we hope it did."""
 
+import os
+
 from pyspark.sql import functions as F
 
 from dask_ms_spark.plans import (assert_max_exchanges, assert_pushdown,
                                  exchange_count, has_broadcast_hash_join,
                                  pushed_filters, read_schema)
+from tests.conftest import SF_DIR, jobs_in, table
 
 
 def test_pushed_filters_and_read_schema(lineitem):
@@ -158,24 +161,77 @@ def test_corpus_mixture_single_scan_single_agg(spark):
     assert plan.count("Exchange") <= 2  # hash exchange (+AQE read)
 
 
-def test_quality_filter_partial_merged_two_stage(spark):
-    """quality_filter is explode -> (doc, word) -> (doc): one scan,
-    partial aggregation before each exchange, no Python stage."""
+def test_quality_filter_map_side_single_scan(spark):
+    """quality_filter is one projection of one scan: the features fold
+    over each row's token array, so no word explode, no (doc, word)
+    shuffle and no join back to the documents."""
     import __spark_entry__ as entry
     from dask_ms_spark.plans import plan_str
 
-    df = entry.q_quality_filter(spark, "/root/testdata/sf0.001")
+    df = entry.q_quality_filter(spark, SF_DIR)
     plan = plan_str(df)
-    # two scans: the exploded word pipeline + the verdict-completeness
-    # id list (token-less docs still get a row); the id scan must be
-    # pruned to doc_id only
-    assert plan.count("FileScan") == 2
-    assert "ReadSchema: struct<doc_id:bigint>" in plan
-    assert "partial_count" in plan or "HashAggregate" in plan
-    assert "Generate explode" in plan or "Generate" in plan
+    assert plan.count("FileScan") == 1
+    assert "ReadSchema: struct<doc_id:bigint,text:string>" in plan
+    assert "hashpartitioning" not in plan
+    assert "Generate" not in plan
     assert "InMemoryTableScan" not in plan
-    assert "MapInPandas" not in plan and "FlatMapGroupsInPandas" \
-        not in plan
+    assert "ArrowEvalPython" not in plan and "BatchEvalPython" \
+        not in plan and "MapInPandas" not in plan
+
+
+def test_ensure_parallelism_starts_no_job(spark):
+    """The probe reads the planned partition count: 0 jobs on the
+    curate ``kept`` shape (the input joined to an aggregated verdict,
+    whose ``df.rdd`` would run the AQE stages) and on a persisted
+    frame that is not yet materialised."""
+    from dask_ms_spark.cache import cache_scope, scoped_persist
+    from dask_ms_spark.session import ensure_parallelism
+
+    docs = table(spark, "documents")
+    verdict = (docs.groupBy("doc_id")
+               .agg((F.max(F.length("text")) > 0).alias("keep")))
+    kept = docs.join(verdict.where("keep").select("doc_id"), "doc_id")
+    _, jobs = jobs_in(spark, "ep_kept", lambda: ensure_parallelism(kept))
+    assert jobs == 0
+    with cache_scope():
+        pinned = scoped_persist(kept)
+        _, jobs = jobs_in(spark, "ep_pinned",
+                           lambda: ensure_parallelism(pinned))
+        assert jobs == 0
+
+
+def test_ensure_parallelism_decides_as_rdd_partitions(spark):
+    """Same widen/no-widen decision as ``df.rdd.getNumPartitions()``:
+    a one-split scan, a many-split scan, a broadcast-join probe over a
+    one-split scan and a materialised persisted aggregation."""
+    from dask_ms_spark.cache import cache_scope, scoped_persist
+    from dask_ms_spark.session import ensure_parallelism
+
+    path = os.path.join(SF_DIR, "documents.parquet")
+    want = spark.sparkContext.defaultParallelism
+
+    def check(df):
+        widened = ensure_parallelism(df) is not df
+        assert widened == (df.rdd.getNumPartitions() < want)
+        return widened
+
+    one = spark.read.parquet(path)
+    assert check(one)
+    key = "spark.sql.files.maxPartitionBytes"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "4096")
+    try:
+        assert not check(spark.read.parquet(path))
+    finally:
+        spark.conf.set(key, old)
+    nation = table(spark, "nation")
+    probe = one.join(F.broadcast(nation.select(
+        F.col("n_nationkey").alias("doc_id"))), "doc_id")
+    assert check(probe)
+    with cache_scope():
+        pinned = scoped_persist(one.groupBy("lang").count())
+        pinned.count()
+        check(pinned)
 
 
 def test_phrase_boilerplate_hashes_not_payload(spark):

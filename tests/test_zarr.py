@@ -24,6 +24,7 @@ from dask_ms_spark.sources.storage import (infer_format,
 from dask_ms_spark.sources.zarr import (DEFAULT_ROW_CHUNK, xds_from_zarr,
                                         xds_to_zarr)
 from dask_ms_spark.types import PARTITION_KEY, ROWID
+from tests.conftest import jobs_in
 
 
 def _mixed_df(spark, n=25):
@@ -697,17 +698,6 @@ def test_zarr_write_composed_gappy_plan_roundtrips(spark, tmp_path):
     assert counts[3] > groups[3].select("SRC").distinct().count()
 
 
-def _jobs_in(spark, group: str, fn):
-    """Run ``fn`` under a job group; return (result, jobs started)."""
-    sc = spark.sparkContext
-    sc.setJobGroup(group, group)
-    try:
-        out = fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    return out, len(sc.statusTracker().getJobIdsForGroup(group))
-
-
 def _ms_like(spark, n=240):
     """MS-shaped rows: 2 fields x 2 spectral windows, gappy global
     ROWIDs, a tensor column."""
@@ -728,9 +718,9 @@ def test_zarr_write_jobs_fixed_per_store(spark, tmp_path):
     one = [Dataset(base, {})]
     four = partition_datasets(base, ["FIELD_ID", "DATA_DESC_ID"])
     assert len(four) == 4
-    _, n1 = _jobs_in(spark, "zarr-write-1", lambda: xds_to_zarr(
+    _, n1 = jobs_in(spark, "zarr-write-1", lambda: xds_to_zarr(
         one, str(tmp_path / "one")))
-    counts, n4 = _jobs_in(spark, "zarr-write-4", lambda: xds_to_zarr(
+    counts, n4 = jobs_in(spark, "zarr-write-4", lambda: xds_to_zarr(
         four, str(tmp_path / "four")))
     assert counts == [60, 60, 60, 60]
     assert n1 == n4 > 0
@@ -769,7 +759,7 @@ def test_zarr_grouped_read_uses_stored_groups(spark, tmp_path):
     store = str(tmp_path / "keyed")
     xds_to_zarr(partition_datasets(base, keys), store)
 
-    dss, jobs = _jobs_in(spark, "zarr-read", lambda: (
+    dss, jobs = jobs_in(spark, "zarr-read", lambda: (
         xds_from_storage_table(spark, store, group_cols=keys,
                                index_cols=["TIME"])))
     assert jobs == 0

@@ -538,6 +538,10 @@ def df_ops():
             ("text", lambda df: corpus.chunk_documents(with_id(df))),
         "corpus.char_entropy":
             ("text", lambda df: corpus.char_entropy(with_id(df))),
+        # its lambdas live in one SQL expression (the feature fold
+        # over the sorted token array), out of the AST scan's sight
+        "corpus.quality_filter":
+            ("text", lambda df: corpus.quality_filter(with_id(df))),
         "dedup.exact_dedup":
             ("text", lambda df: dedup.exact_dedup(with_id(df))),
         "dedup.with_minhash":
