@@ -2485,8 +2485,8 @@ def _corpus_mixture_sql() -> str:
     case_sql = "CASE " + " ".join(cases) + " ELSE 'en' END"
     scores_sql = ", ".join(f"{e} AS s_{lang}"
                            for lang, e in score_exprs.items())
-    toks = ("CASE WHEN length(trim(text)) = 0 THEN 0 "
-            "ELSE len(regexp_split_to_array(trim(text), '\\s+')) END")
+    toks = ("CASE WHEN length(trim(text, ' \t\n\x0b\f\r')) = 0 THEN 0 "
+            "ELSE len(regexp_split_to_array(trim(text, ' \t\n\x0b\f\r'), '\\s+')) END")
     return f"""
         WITH scored AS (SELECT source, text, {scores_sql} FROM documents),
         pred AS (SELECT source, {case_sql} AS pred_lang,
@@ -2892,8 +2892,8 @@ def _bpe_sql() -> str:
         WITH t AS (
             SELECT doc_id,
                    len(regexp_extract_all(text, '{pat}')) AS n_bpe_tokens,
-                   CASE WHEN length(trim(text)) = 0 THEN []
-                        ELSE regexp_split_to_array(trim(lower(text)),
+                   CASE WHEN length(trim(text, ' \t\n\x0b\f\r')) = 0 THEN []
+                        ELSE regexp_split_to_array(trim(lower(text), ' \t\n\x0b\f\r'),
                                                    '\\s+') END AS toks
             FROM documents)
         SELECT doc_id, n_bpe_tokens, len(toks) AS n_ws_tokens,
@@ -3728,9 +3728,9 @@ def _cms_hh_sql(width: int = 1024, depth: int = 4, k: int = 20) -> str:
     h = _DUCK_HASH.format(
         x="(token || 'cms:' || cast(d as varchar))")
     return f"""
-        WITH t AS (SELECT CASE WHEN length(trim(text)) = 0 THEN []
+        WITH t AS (SELECT CASE WHEN length(trim(text, ' \t\n\x0b\f\r')) = 0 THEN []
                                ELSE regexp_split_to_array(
-                                   trim(lower(text)), '\\s+') END
+                                   trim(lower(text), ' \t\n\x0b\f\r'), '\\s+') END
                           AS toks
                    FROM documents),
         w AS (SELECT unnest(toks) AS token FROM t),
@@ -5192,9 +5192,9 @@ def _ngram_novelty_sql() -> str:
     h = _DUCK_HASH.format(x=gram)
     return f"""
     WITH t AS (SELECT doc_id,
-                      CASE WHEN length(trim(text)) = 0 THEN []
+                      CASE WHEN length(trim(text, ' \t\n\x0b\f\r')) = 0 THEN []
                            ELSE regexp_split_to_array(
-                               trim(lower(text)), '\\s+') END AS w
+                               trim(lower(text), ' \t\n\x0b\f\r'), '\\s+') END AS w
                FROM documents),
     g AS (SELECT doc_id,
                  list_distinct(list_transform(
@@ -6344,18 +6344,18 @@ def q_dsir_select(spark, sf_dir):
 
 _DSIR_SQL = """
     WITH tok AS (
-        SELECT doc_id, unnest(CASE WHEN length(trim(text)) = 0 THEN []
+        SELECT doc_id, unnest(CASE WHEN length(trim(text, ' \t\n\x0b\f\r')) = 0 THEN []
                               ELSE regexp_split_to_array(
-                                  trim(lower(text)), '\\s+') END) AS tok
+                                  trim(lower(text), ' \t\n\x0b\f\r'), '\\s+') END) AS tok
         FROM documents),
     occ AS (SELECT doc_id,
                    cast(('0x' || substring(md5(tok), 1, 15)) as bigint)
                        % 8192 AS bucket
             FROM tok),
     ttok AS (
-        SELECT unnest(CASE WHEN length(trim(text)) = 0 THEN []
+        SELECT unnest(CASE WHEN length(trim(text, ' \t\n\x0b\f\r')) = 0 THEN []
                       ELSE regexp_split_to_array(
-                          trim(lower(text)), '\\s+') END) AS tok
+                          trim(lower(text), ' \t\n\x0b\f\r'), '\\s+') END) AS tok
         FROM documents WHERE source = 'src1'),
     tocc AS (SELECT cast(('0x' || substring(md5(tok), 1, 15)) as bigint)
                         % 8192 AS bucket
@@ -6643,9 +6643,9 @@ def q_ccnet_buckets(spark, sf_dir):
 
 _CCNET_BUCKETS_SQL = """
     WITH t AS (SELECT doc_id,
-                      CASE WHEN length(trim(text)) = 0 THEN []
+                      CASE WHEN length(trim(text, ' \t\n\x0b\f\r')) = 0 THEN []
                            ELSE regexp_split_to_array(
-                               trim(lower(text)), '\\s+') END
+                               trim(lower(text), ' \t\n\x0b\f\r'), '\\s+') END
                       AS toks
                FROM documents),
     g AS (SELECT doc_id, toks[i] AS w1, toks[i+1] AS w2
@@ -6691,9 +6691,9 @@ def q_lm_kneser_ney(spark, sf_dir):
 
 _LM_KNESER_NEY_SQL = """
     WITH t AS (SELECT doc_id,
-                      CASE WHEN length(trim(text)) = 0 THEN []
+                      CASE WHEN length(trim(text, ' \t\n\x0b\f\r')) = 0 THEN []
                            ELSE regexp_split_to_array(
-                               trim(lower(text)), '\\s+') END
+                               trim(lower(text), ' \t\n\x0b\f\r'), '\\s+') END
                       AS toks
                FROM documents),
     g AS (SELECT doc_id, toks[i] AS w1, toks[i+1] AS w2
@@ -7023,9 +7023,9 @@ def q_heaps_fit(spark, sf_dir):
 
 _HEAPS_SQL = """
     WITH t AS (SELECT doc_id,
-                      CASE WHEN length(trim(text)) = 0 THEN []
+                      CASE WHEN length(trim(text, ' \t\n\x0b\f\r')) = 0 THEN []
                            ELSE regexp_split_to_array(
-                               trim(lower(text)), '\\s+') END
+                               trim(lower(text), ' \t\n\x0b\f\r'), '\\s+') END
                       AS toks
                FROM documents),
     c AS (SELECT doc_id, len(toks) AS cnt FROM t),
@@ -7281,9 +7281,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
 _LM_PERPLEXITY_SQL = """
             WITH t AS (SELECT doc_id,
-                              CASE WHEN length(trim(text)) = 0 THEN []
+                              CASE WHEN length(trim(text, ' \t\n\x0b\f\r')) = 0 THEN []
                                    ELSE regexp_split_to_array(
-                                       trim(lower(text)), '\\s+') END
+                                       trim(lower(text), ' \t\n\x0b\f\r'), '\\s+') END
                               AS toks
                        FROM documents),
             g AS (SELECT doc_id, toks[i] AS w1, toks[i+1] AS w2
@@ -7840,8 +7840,8 @@ def _oracle_sql_all() -> dict[str, str]:
         "text_winnow": _winnow_sql(),
         "text_stats": """
             SELECT doc_id,
-                   CASE WHEN length(trim(text)) = 0 THEN 0
-                        ELSE len(regexp_split_to_array(trim(text), '\\s+'))
+                   CASE WHEN length(trim(text, ' \t\n\x0b\f\r')) = 0 THEN 0
+                        ELSE len(regexp_split_to_array(trim(text, ' \t\n\x0b\f\r'), '\\s+'))
                    END AS n_tokens,
                    length(text) AS n_chars_actual,
                    round(length(regexp_replace(text,
@@ -8390,7 +8390,7 @@ def _oracle_sql_all() -> dict[str, str]:
         "kmeans_cluster": _kmeans_sql(),
         "text_repetition": """
             WITH t AS (SELECT doc_id,
-                              regexp_split_to_array(trim(lower(text)),
+                              regexp_split_to_array(trim(lower(text), ' \t\n\x0b\f\r'),
                                                     '\\s+') AS toks
                        FROM documents),
             g AS (SELECT doc_id,
@@ -8412,10 +8412,10 @@ def _oracle_sql_all() -> dict[str, str]:
 
         "pack_contexts": f"""
             WITH d AS (SELECT doc_id,
-                              CAST(CASE WHEN length(trim(text)) = 0
+                              CAST(CASE WHEN length(trim(text, ' \t\n\x0b\f\r')) = 0
                                    THEN 0
                                    ELSE len(regexp_split_to_array(
-                                       trim(text), '\\s+')) END
+                                       trim(text, ' \t\n\x0b\f\r'), '\\s+')) END
                                    AS BIGINT) AS t,
                               {_DUCK_HASH.format(
                                   x="cast(doc_id as varchar) "
@@ -8451,9 +8451,9 @@ def _oracle_sql_all() -> dict[str, str]:
         "embed_project": _embed_project_sql(),
         "vocab_topk": """
             WITH t AS (SELECT doc_id,
-                              CASE WHEN length(trim(text)) = 0 THEN []
+                              CASE WHEN length(trim(text, ' \t\n\x0b\f\r')) = 0 THEN []
                                    ELSE regexp_split_to_array(
-                                       trim(lower(text)), '\\s+') END
+                                       trim(lower(text), ' \t\n\x0b\f\r'), '\\s+') END
                               AS toks
                        FROM documents),
             w AS (SELECT doc_id, unnest(toks) AS token FROM t),
@@ -8466,7 +8466,7 @@ def _oracle_sql_all() -> dict[str, str]:
         """,
         "phrase_boilerplate": f"""
             WITH t AS (SELECT doc_id,
-                              regexp_split_to_array(trim(lower(text)),
+                              regexp_split_to_array(trim(lower(text), ' \t\n\x0b\f\r'),
                                                     '\\s+') AS toks
                        FROM documents),
             g AS (SELECT doc_id,
@@ -8489,9 +8489,9 @@ def _oracle_sql_all() -> dict[str, str]:
         """,
         "quality_filter": """
             WITH t AS (SELECT doc_id,
-                              CASE WHEN length(trim(text)) = 0 THEN []
+                              CASE WHEN length(trim(text, ' \t\n\x0b\f\r')) = 0 THEN []
                                    ELSE regexp_split_to_array(
-                                       trim(lower(text)), '\\s+') END
+                                       trim(lower(text), ' \t\n\x0b\f\r'), '\\s+') END
                               AS toks
                        FROM documents),
             w AS (SELECT doc_id, unnest(toks) AS w FROM t),
@@ -8667,9 +8667,9 @@ def _oracle_sql_all() -> dict[str, str]:
         # order of llm/corpus.py collocations_pmi (bm25 ln-parity
         # precedent)
         "collocations_pmi": """
-            WITH t AS (SELECT CASE WHEN length(trim(text)) = 0 THEN []
+            WITH t AS (SELECT CASE WHEN length(trim(text, ' \t\n\x0b\f\r')) = 0 THEN []
                                    ELSE regexp_split_to_array(
-                                       trim(lower(text)), '\\s+') END
+                                       trim(lower(text), ' \t\n\x0b\f\r'), '\\s+') END
                               AS toks
                        FROM documents),
             f AS (SELECT toks FROM t WHERE len(toks) >= 2),
@@ -8716,9 +8716,9 @@ def _oracle_sql_all() -> dict[str, str]:
         # zipf_fit: same deterministic ranking; DuckDB regr_* parity
         # proven by the grouped-OLS oracle
         "zipf_fit": """
-            WITH t AS (SELECT CASE WHEN length(trim(text)) = 0 THEN []
+            WITH t AS (SELECT CASE WHEN length(trim(text, ' \t\n\x0b\f\r')) = 0 THEN []
                                    ELSE regexp_split_to_array(
-                                       trim(lower(text)), '\\s+') END
+                                       trim(lower(text), ' \t\n\x0b\f\r'), '\\s+') END
                               AS toks
                        FROM documents),
             f AS (SELECT token, count(*) AS freq
@@ -9170,9 +9170,9 @@ def _oracle_sql_all() -> dict[str, str]:
         "dataset_card": f"""
             WITH p AS (SELECT lang, source,
                               cast(length(text) as bigint) AS n_chars,
-                              cast(CASE WHEN length(trim(text)) = 0
+                              cast(CASE WHEN length(trim(text, ' \t\n\x0b\f\r')) = 0
                                    THEN 0 ELSE len(regexp_split_to_array(
-                                       trim(text), '\\s+')) END as bigint)
+                                       trim(text, ' \t\n\x0b\f\r'), '\\s+')) END as bigint)
                                   AS n_tokens,
                               {_DUCK_HASH.format(
                                   x=_DUCK_NORM.format(x='text'))}

@@ -27,6 +27,9 @@ __all__ = ["portable_hash64", "portable_hash64_sql", "sql_string",
            "stopword_ratio"]
 
 _WS = r"\s+"
+# the characters Java's ``\s`` matches: tokens() trims every one of
+# them, so edge whitespace never splits off an empty token
+_WS_CHARS = " \t\n\x0b\f\r"
 
 # GPT-2-style pre-tokeniser shape, RE2-safe (no lookahead, ASCII
 # classes) so the same pattern runs in Spark (Java regex) and DuckDB
@@ -96,8 +99,9 @@ def portable_hash64_sql(x: str, salt: str = "") -> str:
 
 
 def tokens(text: Column) -> Column:
-    """Whitespace tokenisation of trimmed text; empty string -> []."""
-    t = F.trim(text)
+    """Whitespace tokenisation of trimmed text; empty or
+    whitespace-only string -> []."""
+    t = F.trim(text, F.lit(_WS_CHARS))
     return F.when(F.length(t) == 0, F.array().cast("array<string>")) \
             .otherwise(F.split(t, _WS))
 

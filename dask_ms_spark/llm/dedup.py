@@ -995,13 +995,14 @@ def _edits_arrow_kernel(pairs: DataFrame) -> DataFrame:
     that PROVABLY fails the max_edits/max_ratio filters into -1 —
     returning the exact distance instead drops the same pairs on the
     same filters (d > k = min(max_edits, floor(max_ratio*L)+1)
-    implies d > max_edits or round(d/L, 6) > max_ratio).  That
-    identity holds for ASCII text only: DuckDB's ``levenshtein``
-    (1.0.0) counts UTF-8 bytes where Spark counts code points, so
-    ``('café', 'cafe')`` scores 2 here and 1 on the JVM path — an open
-    correctness item (ROADMAP item 0, "Make edit distance code-point
-    exact on both sides"), and the DuckDB oracle scores with the same
-    byte-based function, so it cannot catch it.
+    implies d > max_edits or round(d/L, 6) > max_ratio).  DuckDB's
+    ``levenshtein`` (1.0.0) counts UTF-8 bytes where Spark counts code
+    points (``('café', 'cafe')`` is 2 there, 1 on the JVM), so DuckDB
+    scores ASCII pairs only; a pair with a non-ASCII text gets the JVM
+    banded ``levenshtein(ta, tb, __k)`` (input column ``__k``) after
+    the spread and before the batch reaches DuckDB.  The DuckDB oracle
+    of ``dedup_edit_distance`` still scores with the byte-based
+    function; it agrees only because the test data is ASCII.
 
     The round-robin repartition keeps `_verify_once`'s CPU-spread
     property: hub documents cluster thousands of pairs on one
@@ -1012,8 +1013,10 @@ def _edits_arrow_kernel(pairs: DataFrame) -> DataFrame:
     n_parts = pairs.sparkSession.sparkContext.defaultParallelism
     out_fields = ", ".join(
         f"{f.name} {f.dataType.simpleString()}"
-        for f in pairs.schema.fields if f.name not in ("ta", "tb"))
+        for f in pairs.schema.fields if f.name not in ("ta", "tb", "__k"))
     schema = f"{out_fields}, __edits int"
+    ascii_pair = ((F.octet_length("ta") == F.length("ta"))
+                  & (F.octet_length("tb") == F.length("tb")))
 
     def score(batches):
         import duckdb
@@ -1025,13 +1028,17 @@ def _edits_arrow_kernel(pairs: DataFrame) -> DataFrame:
             tbl = pa.Table.from_batches([batch])
             con.register("b", tbl)
             out = con.execute(
-                "SELECT * EXCLUDE (ta, tb), "
-                "CAST(levenshtein(ta, tb) AS INT) AS __edits FROM b"
+                "SELECT * EXCLUDE (ta, tb, __jvm), CAST(CASE WHEN __jvm "
+                "IS NULL THEN levenshtein(ta, tb) ELSE __jvm END AS INT) "
+                "AS __edits FROM b"
             ).fetch_arrow_table()
             con.unregister("b")
             yield from out.to_batches()
 
-    return pairs.repartition(n_parts).mapInArrow(score, schema)
+    return (pairs.repartition(n_parts)
+            .withColumn("__jvm", F.when(~ascii_pair, F.expr(
+                "levenshtein(ta, tb, __k)")))
+            .drop("__k").mapInArrow(score, schema))
 
 
 def edit_distance_pairs(docs: DataFrame, text_col: str = "text",
@@ -1115,7 +1122,7 @@ def edit_distance_pairs(docs: DataFrame, text_col: str = "text",
     # histograms).
     if _duckdb_available():
         joined = _edits_arrow_kernel(
-            joined.select("id_a", "id_b", "ta", "tb",
+            joined.select("id_a", "id_b", "ta", "tb", "__k",
                           longest0.alias("__L")))
     else:
         joined = _verify_once(

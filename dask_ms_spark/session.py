@@ -12,6 +12,15 @@ that matter at scale:
   cluster this is left to AQE's coalescing with a high initial value.
 * 128 MiB maxPartitionBytes — the scan-split analogue of the
   reference's 10k-row default chunking (daskms/reads.py:33).
+* Python workers forked from :mod:`dask_ms_spark._pydaemon`, which
+  stops every Python task (``mapInArrow``/``mapInPandas``/UDF) from
+  re-reading the zip archives on the worker path: stock PySpark's
+  per-task ``importlib.invalidate_caches()`` costs 0.15-0.2 s per task
+  on Python 3.11, several times a JVM-only task.  The package root is
+  put on the workers' ``PYTHONPATH`` so the daemon imports from any
+  working directory.  Override either with ``extra_conf``, e.g.
+  ``{"spark.python.daemon.module": "pyspark.daemon"}`` for the stock
+  daemon.
 """
 
 from __future__ import annotations
@@ -23,6 +32,10 @@ from pyspark.sql import SparkSession
 __all__ = ["get_spark", "stop_spark", "ensure_parallelism"]
 
 
+DAEMON_MODULE = "dask_ms_spark._pydaemon"
+_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+
 def _cpus() -> int:
     try:
         return int(os.environ.get("SPARK_GRAFT_CPUS", "") or os.cpu_count() or 4)
@@ -30,43 +43,55 @@ def _cpus() -> int:
         return os.cpu_count() or 4
 
 
+def session_conf(extra_conf: dict | None = None) -> dict:
+    """The engine's default Spark settings, ``extra_conf`` applied
+    last (it overrides any default)."""
+    cpus = _cpus()
+    conf = {
+        # --- adaptive execution: runtime re-planning, skew handling ---
+        "spark.sql.adaptive.enabled": "true",
+        "spark.sql.adaptive.coalescePartitions.enabled": "true",
+        "spark.sql.adaptive.skewJoin.enabled": "true",
+        # --- shuffle sizing: local default; AQE coalesces down ---
+        "spark.sql.shuffle.partitions": str(max(cpus, 8)),
+        # --- scans: 128 MiB splits, vectorized parquet reader ---
+        "spark.sql.files.maxPartitionBytes": str(128 * 1024 * 1024),
+        "spark.sql.parquet.enableVectorizedReader": "true",
+        "spark.sql.parquet.filterPushdown": "true",
+        # --- Arrow everywhere Python touches data ---
+        "spark.sql.execution.arrow.pyspark.enabled": "true",
+        "spark.sql.execution.arrow.maxRecordsPerBatch": "10000",
+        # --- broadcast: dim tables in this schema are tiny ---
+        "spark.sql.autoBroadcastJoinThreshold": str(64 * 1024 * 1024),
+        # --- timestamps: avoid ns/us ambiguity vs external oracles ---
+        "spark.sql.session.timeZone": "UTC",
+        # parquet TIMESTAMP(NANOS) (e.g. the events table) is illegal
+        # for Spark's reader by default; read as epoch-nanos long and
+        # normalise in the reader (streaming/events.py:normalize_ts)
+        "spark.sql.legacy.parquet.nanosAsLong": "true",
+        "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM",
+                                              "8g"),
+        "spark.ui.enabled": "false",
+        # --- Python workers: no per-task zip archive re-reads ---
+        "spark.python.daemon.module": DAEMON_MODULE,
+        "spark.executorEnv.PYTHONPATH": _ROOT,
+    }
+    conf.update(extra_conf or {})
+    return conf
+
+
 def get_spark(app_name: str = "dask-ms-spark", master: str | None = None,
               extra_conf: dict | None = None) -> SparkSession:
-    """Build (or fetch) a SparkSession with engine defaults.
+    """Build (or fetch) a SparkSession with engine defaults
+    (:func:`session_conf`).
 
     Defaults are safe for local testing and scale-minded: every setting
     here is one you would also set on a 1000-executor cluster except
     ``master``, which defaults to ``local[N]``.
     """
-    cpus = _cpus()
-    builder = (
-        SparkSession.builder.appName(app_name)
-        .master(master or f"local[{cpus}]")
-        # --- adaptive execution: runtime re-planning, skew handling ---
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        # --- shuffle sizing: local default; AQE coalesces down ---
-        .config("spark.sql.shuffle.partitions", str(max(cpus, 8)))
-        # --- scans: 128 MiB splits, vectorized parquet reader ---
-        .config("spark.sql.files.maxPartitionBytes", str(128 * 1024 * 1024))
-        .config("spark.sql.parquet.enableVectorizedReader", "true")
-        .config("spark.sql.parquet.filterPushdown", "true")
-        # --- Arrow everywhere Python touches data ---
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
-        # --- broadcast: dim tables in this schema are tiny ---
-        .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        # --- timestamps: avoid ns/us ambiguity vs external oracles ---
-        .config("spark.sql.session.timeZone", "UTC")
-        # parquet TIMESTAMP(NANOS) (e.g. the events table) is illegal
-        # for Spark's reader by default; read as epoch-nanos long and
-        # normalise in the reader (streaming/events.py:normalize_ts)
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
-        .config("spark.ui.enabled", "false")
-    )
-    for k, v in (extra_conf or {}).items():
+    builder = SparkSession.builder.appName(app_name).master(
+        master or f"local[{_cpus()}]")
+    for k, v in session_conf(extra_conf).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
 

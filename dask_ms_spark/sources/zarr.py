@@ -21,15 +21,19 @@ Spark-side:
   aggregation grouped by (group, partition) returns every group's
   validation and sizing statistics plus the per-partition row
   counts, from which the driver derives dense per-group ROWIDs
-  (partition offset + local ordinal).  ONE ``applyInPandas`` keyed by
+  (partition offset + local ordinal).  ONE ``applyInArrow`` keyed by
   (group, ``ROWID // row_chunk``) then writes each chunk's files for
-  all columns in its own task.  The driver only writes the tiny JSON
-  metadata (``.zgroup``/``.zarray``/``.zattrs``) — mirroring the
-  reference's eager DDL step — never the data.
+  all columns in its own task, each tensor column packed from its
+  Arrow list's one flat value buffer.  The driver only writes the
+  tiny JSON metadata (``.zgroup``/``.zarray``/``.zattrs``) —
+  mirroring the reference's eager DDL step — never the data.
 * **read**: the driver reads only the JSON metadata, then
-  ``mapInPandas`` over a ``spark.range(n_chunks)`` frame loads chunk
-  files on executors — the analogue of the reference's per-chunk
-  ``zarr_getter`` (daskms/experimental/zarr/__init__.py:367-372).  No
+  ``mapInArrow`` over a ``spark.range(n_chunks)`` frame of
+  ``min(n_chunks, defaultParallelism)`` partitions (no empty Python
+  task) loads chunk files on executors — the analogue of the
+  reference's per-chunk ``zarr_getter``
+  (daskms/experimental/zarr/__init__.py:367-372).  Tensor columns are
+  Arrow list columns over the chunk's one numpy buffer.  No
   full-table driver materialisation on any path.  A grouped read
   whose keys the stored partition key covers builds its datasets
   from the stored groups (``dataset.regroup_stored``), so each
@@ -59,6 +63,7 @@ from pyspark.sql.types import (ArrayType, BooleanType, DataType, DoubleType,
                                FloatType, IntegerType, LongType, ShortType,
                                StringType, StructField, StructType,
                                TimestampType)
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from ..dataset import Dataset
 from ..types import PARTITION_KEY, ROWID
@@ -412,28 +417,33 @@ def _write_groups(members: list[tuple[int, Dataset]], store: str,
             return zlib.compress(payload, codec_level)
         return payload
 
-    def write_chunk(pdf):
-        import pandas as pd
+    def write_chunk(tbl):
+        import pyarrow as pa
 
-        gi, ci = int(pdf["__grp"].iloc[0]), int(pdf["__chunk"].iloc[0])
+        gi = tbl.column("__grp")[0].as_py()
+        ci = tbl.column("__chunk")[0].as_py()
         g = specs[gi]
-        pdf = pdf.sort_values(ROWID)
-        n, rc = len(pdf), g["row_chunk"]
+        n, rc = tbl.num_rows, g["row_chunk"]
+        # ROWIDs are dense per group: a row's slot in the chunk is its
+        # offset from the chunk's first ROWID
+        pos = tbl.column(ROWID).to_numpy() - ci * rc
         for col, spec in g["cols"].items():
             dt, w = np.dtype(spec["dtype"]), spec["width"]
+            values = tbl.column(col).combine_chunks()
             if w is None:
                 full = np.zeros(rc, dtype=dt)
-                full[:n] = np.asarray(pdf[col].to_numpy(), dtype=dt)
+                full[pos] = values.to_numpy(zero_copy_only=False)
                 parts = {str(ci): full}
             elif w == 0:
                 continue        # 0-width axis: empty chunk grid
             else:
                 # every chunk file padded to full (rc, cc), the zarr
-                # v2 layout the slab reader prunes against
+                # v2 layout the slab reader prunes against; nulls and
+                # ragged rows were rejected before this job
                 cc = spec["cc"]
                 full = np.zeros((rc, -(-w // cc) * cc), dtype=dt)
-                full[:n, :w] = np.stack([np.asarray(v, dtype=dt)
-                                         for v in pdf[col]])
+                full[pos, :w] = values.flatten().to_numpy(
+                    zero_copy_only=False).reshape(n, w)
                 parts = {f"{ci}.{j}": full[:, j * cc:(j + 1) * cc]
                          for j in range(-(-w // cc))}
             for key, part in parts.items():
@@ -443,7 +453,8 @@ def _write_groups(members: list[tuple[int, Dataset]], store: str,
                 with open(tmp, "wb") as fh:
                     fh.write(encode(np.ascontiguousarray(part).tobytes()))
                 os.replace(tmp, path)
-        return pd.DataFrame({"grp": [gi], "rows": [n]})
+        return pa.table({"grp": pa.array([gi], pa.int64()),
+                         "rows": pa.array([n], pa.int64())})
 
     rowid = F.col("__loc") + F.element_at(
         _sql_map(base), F.col("__grp") * n_pid + F.col("__pid"))
@@ -455,7 +466,7 @@ def _write_groups(members: list[tuple[int, Dataset]], store: str,
                   F.col(ROWID) / F.element_at(rcs, F.col("__grp"))))
               .drop("__pid", "__loc")
               .repartition(n_chunks, "__grp", "__chunk")
-              .groupBy("__grp", "__chunk").applyInPandas(write_chunk, out)
+              .groupBy("__grp", "__chunk").applyInArrow(write_chunk, out)
               .collect()):     # one small row per chunk
         written[r[0]] = written.get(r[0], 0) + int(r[1])
     if written != {i: n for i, n in want.items() if n}:
@@ -667,6 +678,22 @@ def _read_cell_chunks(group_dir: str, col: str, z: dict, ci: int,
             if len(cell_shape) > 1 else buf)
 
 
+def _arrow_column(arr: "np.ndarray", typ) -> "pa.Array":
+    """One Arrow column of Spark type ``typ`` from a chunk's numpy
+    block: a 1-d array is the column itself, a 2-d ``(rows, width)``
+    block becomes a list column over its one flat buffer."""
+    import pyarrow as pa
+
+    if arr.dtype.kind == "M":       # epoch micros, whatever the unit
+        arr = arr.astype("datetime64[us]").view(np.int64)
+    if arr.ndim == 1:
+        return pa.array(arr, type=typ)
+    n, w = arr.shape
+    offsets = pa.array(np.arange(n + 1, dtype=np.int32) * np.int32(w))
+    return pa.ListArray.from_arrays(
+        offsets, pa.array(arr.reshape(-1), type=typ.value_type), type=typ)
+
+
 def _read_group(spark: SparkSession, group_dir: str,
                 columns: Iterable[str] | None = None,
                 slices: dict | None = None) -> Dataset:
@@ -734,17 +761,18 @@ def _read_group(spark: SparkSession, group_dir: str,
     n_chunks = max(1, (nrow + row_chunk - 1) // row_chunk)
     metas = {c: dict(arrays[c]) for c in arrays}
     use_zarr_pkg = bool(compressed)
+    arrow_schema = to_arrow_schema(schema)
 
     def read_chunks(batches):
-        import pandas as pd
+        import pyarrow as pa
 
         zroot = _zarr.open_group(group_dir, mode="r") \
             if use_zarr_pkg else None  # pragma: no cover
-        for pdf in batches:
-            for ci in pdf["id"].astype(int):
+        for batch in batches:
+            for ci in batch.column(0).to_pylist():
                 lo = ci * row_chunk
                 hi = min(nrow, lo + row_chunk)
-                out = {ROWID: np.arange(lo, hi, dtype=np.int64)}
+                cols = [pa.array(np.arange(lo, hi, dtype=np.int64))]
                 for c, z in metas.items():
                     slab = slabs.get(c)
                     if use_zarr_pkg:  # pragma: no cover
@@ -758,15 +786,13 @@ def _read_group(spark: SparkSession, group_dir: str,
                     else:
                         arr = _read_cell_chunks(
                             group_dir, c, z, ci, hi - lo, slab)
-                    if arr.ndim > 1:
-                        out[c] = list(arr)
-                    elif arr.dtype.kind == "M":
-                        out[c] = arr.astype("datetime64[us]")
-                    else:
-                        out[c] = arr
-                yield pd.DataFrame(out)
+                    cols.append(_arrow_column(
+                        arr, arrow_schema.field(c).type))
+                yield pa.RecordBatch.from_arrays(cols, schema=arrow_schema)
 
-    df = spark.range(n_chunks).mapInPandas(read_chunks, schema)
+    sc = spark.sparkContext
+    df = spark.range(0, n_chunks, 1, min(n_chunks, sc.defaultParallelism)
+                     ).mapInArrow(read_chunks, schema)
     return Dataset(df, attrs)
 
 
@@ -778,7 +804,7 @@ def xds_from_zarr(spark: SparkSession, store: str,
     (reference ``xds_from_zarr``,
     daskms/experimental/zarr/__init__.py:380-528).  Only JSON metadata
     is read on the driver; chunk data is loaded per-chunk on executors
-    via ``mapInPandas``.
+    via ``mapInArrow``, over at most ``defaultParallelism`` partitions.
 
     ``slices`` maps a tensor column to python slices over its cell
     dims; only the cell chunks intersecting the slab are read from

@@ -22,12 +22,16 @@ SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 def spark():
     from pyspark.sql import SparkSession
 
+    from dask_ms_spark.session import DAEMON_MODULE
+
+    # Python workers fork from the library's daemon, as under get_spark
     s = (SparkSession.builder.master("local[4]")
          .appName("dask-ms-spark-tests")
          .config("spark.sql.shuffle.partitions", "4")
          .config("spark.sql.session.timeZone", "UTC")
          .config("spark.ui.enabled", "false")
          .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+         .config("spark.python.daemon.module", DAEMON_MODULE)
          .getOrCreate())
     s.sparkContext.setLogLevel("ERROR")
     yield s

@@ -94,6 +94,26 @@ def test_tokens_and_ngrams(spark):
     assert sorted(by_t["the cat  sat"].w2) == ["cat sat", "the cat"]
 
 
+def test_tokens_trim_all_whitespace_like_str_split(spark):
+    """tokens() equals ``str.split()`` when text starts or ends with a
+    tab, newline or carriage return, and on whitespace-only text: no
+    empty edge token is counted as a word (quality_filter too)."""
+    from dask_ms_spark.llm.corpus import quality_filter
+
+    texts = ["\tfoo  bar\n", "\n\nlead", "trail \t\r\n", " \t \n ",
+             "\t", "a\tb\nc d", "plain words here", ""]
+    df = spark.createDataFrame(list(enumerate(texts)),
+                               "doc_id long, text string")
+    got = {r.doc_id: (r.tk, r.n) for r in df.select(
+        "doc_id", tokens(F.col("text")).alias("tk"),
+        token_count(F.col("text")).alias("n")).collect()}
+    assert got == {i: (t.split(), len(t.split()))
+                   for i, t in enumerate(texts)}
+    words = {r.doc_id: r.n_words for r in quality_filter(df).collect()}
+    assert words == {i: len(t.lower().split())
+                     for i, t in enumerate(texts)}
+
+
 def test_portable_hash64_matches_duckdb(spark):
     import duckdb
 

@@ -847,24 +847,48 @@ def test_edit_distance_pairs_planted(spark):
     assert not none
 
 
+def _levenshtein(a: str, b: str) -> int:
+    """Code-point Levenshtein distance, plain dynamic programming."""
+    prev = list(range(len(b) + 1))
+    for i, ca in enumerate(a, 1):
+        cur = [i]
+        for j, cb in enumerate(b, 1):
+            cur.append(min(prev[j] + 1, cur[j - 1] + 1,
+                           prev[j - 1] + (ca != cb)))
+        prev = cur
+    return prev[-1]
+
+
 def test_edit_distance_kernel_paths_agree(spark, monkeypatch):
-    """r13: the Arrow/DuckDB edit-distance kernel and the JVM banded
+    """The Arrow/DuckDB edit-distance kernel and the JVM banded
     fallback must emit the identical pair set with identical edits —
     the band only ever hid distances that provably fail the filters,
-    so the unbanded exact distance drops the same pairs."""
+    so the unbanded exact distance drops the same pairs.  Distances
+    count code points on both paths (é, CJK and emoji pairs checked
+    against a pure-Python Levenshtein): DuckDB's byte-based
+    levenshtein must never score a non-ASCII pair."""
+    pytest.importorskip("duckdb")
+    import re
+
     from pyspark.sql import Row
 
     from dask_ms_spark.llm import dedup
 
     base = ("alpha beta gamma delta epsilon zeta eta theta iota "
             "kappa lambda mu nu xi omicron pi rho sigma tau") * 3
-    rows = [Row(doc_id=1, text=base),
-            Row(doc_id=2, text=base.replace("gamma", "gimel")
-                .replace("sigma", "samekh")),
-            Row(doc_id=3, text=base.replace("alpha", "aleph")),
-            Row(doc_id=4, text="unrelated words entirely disjoint "
-                               "vocabulary nothing shared " * 6)]
-    df = spark.createDataFrame(rows)
+    accents = "café résumé naïve señor déjà vu crème brûlée " * 4
+    cjk = "数据湖 查询 引擎 分布式 计算 存储 格式 列式 压缩 索引 " * 4
+    emoji = "rocket 🚀 launch 🌍 orbit 🛰 moon 🌕 mars 🔴 home 🏠 " * 4
+    texts = {1: base,
+             2: base.replace("gamma", "gimel").replace("sigma", "samekh"),
+             3: base.replace("alpha", "aleph"),
+             4: "unrelated words entirely disjoint "
+                "vocabulary nothing shared " * 6,
+             5: accents, 6: accents.replace("é", "e", 3),
+             7: cjk, 8: cjk.replace("查询", "检索", 1),
+             9: emoji, 10: emoji.replace("🚀", "🛸", 2)}
+    df = spark.createDataFrame([Row(doc_id=k, text=v)
+                                for k, v in texts.items()])
 
     def run():
         return sorted(
@@ -878,6 +902,17 @@ def test_edit_distance_kernel_paths_agree(spark, monkeypatch):
     got_jvm = run()
     assert got_duck == got_jvm
     assert got_duck, "planted near-dups must survive"
+
+    norm = {k: re.sub(r"\s+", " ", v.lower()).strip()
+            for k, v in texts.items()}
+    for a, b, edits, ratio in got_duck:
+        want = _levenshtein(norm[a], norm[b])
+        assert edits == want, (a, b)
+        assert ratio == round(want / max(len(norm[a]), len(norm[b]), 1),
+                              6)
+    pairs = {(min(a, b), max(a, b)): e for a, b, e, _ in got_duck}
+    assert pairs[5, 6] == 3          # three é -> e, one edit each
+    assert pairs[7, 8] == 2 and pairs[9, 10] == 2
 
 
 def test_pq_encode_codes_shape(spark):

@@ -109,8 +109,6 @@ if HAVE_HYPOTHESIS:
     def test_bigram_repetition_matches_python(spark, texts):
         """Spark bigram stats must agree with a sequential Python
         recomputation on arbitrary whitespace-heavy strings."""
-        import re
-
         from dask_ms_spark.functions.text import bigram_repetition
 
         rows = [(i, t) for i, t in enumerate(texts)]
@@ -121,13 +119,10 @@ if HAVE_HYPOTHESIS:
 
         want = {}
         for i, t in rows:
-            # mirror engine semantics exactly: SQL trim strips SPACES
-            # only (not \t\n), and split keeps empty tokens — '\n'
-            # therefore yields two empty tokens and one ' ' bigram in
-            # Spark AND DuckDB (the oracle contract), unlike Python
-            # .strip()/.split()
-            t2 = t.lower().strip(" ")
-            toks = re.split(r"\s+", t2) if t2 else []
+            # tokens() trims every whitespace character it splits on,
+            # in Spark AND in the DuckDB oracle spelling, so on this
+            # alphabet it is Python's str.split()
+            toks = t.lower().split()
             if len(toks) < 2:
                 continue
             grams = [f"{a} {b}" for a, b in zip(toks, toks[1:])]

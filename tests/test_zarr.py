@@ -3,7 +3,7 @@
 Mirrors the reference's zarr suite
 (daskms/experimental/zarr/tests/test_zarr.py): write datasets, read
 them back, assert values/attrs/partition keys survive; plus the
-Spark-specific guarantees — the read plan is mapInPandas over a Range
+Spark-specific guarantees — the read plan is mapInArrow over a Range
 scan (no driver materialisation) and the write's only action is the
 chunk-count aggregation.
 """
@@ -11,9 +11,12 @@ chunk-count aggregation.
 from __future__ import annotations
 
 import datetime
+import gzip
 import json
 import os
+import zlib
 
+import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
@@ -243,16 +246,112 @@ def test_zarr_slab_pushdown_prunes_cell_chunks(spark, tmp_path):
 
 
 def test_zarr_read_plan_is_distributed(spark, tmp_path):
-    """Plan-shape guard: the read must be mapInPandas over a Range
-    scan — a rewrite that goes driver-eager (createDataFrame of
-    collected chunks) breaks this."""
+    """Plan-shape guard: the read must be one Python map (mapInArrow)
+    over a Range scan — a rewrite that goes driver-eager
+    (createDataFrame of collected chunks) breaks this."""
     store = str(tmp_path / "planshape")
     xds_to_zarr(_mixed_df(spark, 25), store, row_chunk=10)
     (ds,) = xds_from_zarr(spark, store)
     plan = ds.df._jdf.queryExecution().executedPlan().toString()
-    assert "MapInPandas" in plan
+    assert plan.count("MapInArrow") == 1
+    assert "MapInPandas" not in plan
     assert "Range" in plan
     assert "Scan ExistingRDD" not in plan  # no driver-side materialise
+
+
+@pytest.mark.parametrize("n,row_chunk", [(5, 10), (25, 10), (25, 2)])
+def test_zarr_read_plans_one_partition_per_chunk_up_to_parallelism(
+        spark, tmp_path, n, row_chunk):
+    """The read frame plans min(n_chunks, defaultParallelism)
+    partitions: no empty Python task for a store of few chunks, and
+    no more tasks than cores for one of many."""
+    store = str(tmp_path / "parts")
+    xds_to_zarr(_mixed_df(spark, n), store, row_chunk=row_chunk)
+    (ds,) = xds_from_zarr(spark, store)
+    n_chunks = -(-n // row_chunk)
+    want = min(n_chunks, spark.sparkContext.defaultParallelism)
+    assert ds.df.rdd.getNumPartitions() == want
+    assert sorted(r[ROWID] for r in ds.df.select(ROWID).collect()) == \
+        list(range(n))
+
+
+def _reference_chunks(values, dtype, rc: int, cc: int | None = None):
+    """A column's zarr v2 chunk files as numpy lays them out: chunk
+    ``ci`` holds rows ``ci*rc ..`` zero-padded to ``rc`` rows; a
+    tensor's row chunk is cut along the cell axis into ``cc``-wide
+    slabs ``{ci}.{j}``, the last one zero-padded to ``cc``."""
+    arr = np.asarray(values, dtype=dtype)
+    out = {}
+    for ci in range(-(-len(arr) // rc)):
+        block = arr[ci * rc:(ci + 1) * rc]
+        if arr.ndim == 1:
+            full = np.zeros(rc, dtype=dtype)
+            full[:len(block)] = block
+            out[str(ci)] = full.tobytes()
+            continue
+        for j in range(-(-arr.shape[1] // cc)):
+            part = block[:, j * cc:(j + 1) * cc]
+            full = np.zeros((rc, cc), dtype=dtype)
+            full[:part.shape[0], :part.shape[1]] = part
+            out[f"{ci}.{j}"] = full.tobytes()
+    return out
+
+
+@pytest.mark.parametrize("compressor", [None, {"id": "zlib", "level": 3},
+                                        {"id": "gzip", "level": 5}])
+def test_zarr_chunk_files_match_numpy_reference(spark, tmp_path,
+                                                compressor):
+    """Every chunk file is the numpy reference layout byte for byte:
+    float32 and cell-chunked float64 tensors, int16/bool/string/
+    timestamp scalars, a 0-width tensor (no files), each codec."""
+    n, rc = 23, 10
+    t0 = datetime.datetime(2024, 1, 1)
+    names = [f"n{'x' * (i % 5)}{i}" for i in range(n)]
+    cols = {
+        "f32": [[i + k / 8 for k in range(6)] for i in range(n)],
+        "vec": [[i * 10.0 + k for k in range(5)] for i in range(n)],
+        "sval": [i * 97 % 601 - 300 for i in range(n)],
+        "flag": [i % 3 == 0 for i in range(n)],
+        "name": names,
+        "ts": [t0 + datetime.timedelta(hours=i, microseconds=7 * i)
+               for i in range(n)],
+        "empty": [[] for _ in range(n)],
+    }
+    df = spark.createDataFrame(
+        [(i,) + tuple(cols[c][i] for c in cols) for i in range(n)],
+        f"{ROWID} bigint, f32 array<float>, vec array<double>, "
+        "sval smallint, flag boolean, name string, ts timestamp, "
+        "empty array<float>")
+    store = str(tmp_path / "ref")
+    xds_to_zarr(df, store, row_chunk=rc, cell_chunks={"vec": 2},
+                compressor=compressor)
+
+    width = max(map(len, names))
+    want = {
+        "f32": _reference_chunks(cols["f32"], "<f4", rc, 6),
+        "vec": _reference_chunks(cols["vec"], "<f8", rc, 2),
+        "sval": _reference_chunks(cols["sval"], "<i2", rc),
+        "flag": _reference_chunks(cols["flag"], "|b1", rc),
+        "name": _reference_chunks(names, f"<U{width}", rc),
+        "ts": _reference_chunks(np.array(cols["ts"], "datetime64[us]"),
+                                "<M8[us]", rc),
+        "empty": {},
+    }
+    assert len(want["vec"]) == 9     # 3 row chunks x 3 cell slabs
+    for col, chunks in want.items():
+        cdir = os.path.join(store, "MAIN_0", col)
+        z = json.load(open(os.path.join(cdir, ".zarray")))
+        assert z["compressor"] == compressor
+        assert sorted(f for f in os.listdir(cdir) if f != ".zarray") \
+            == sorted(chunks), col
+        for key, raw in chunks.items():
+            got = open(os.path.join(cdir, key), "rb").read()
+            if compressor is None:
+                assert got == raw, (col, key)
+            elif compressor["id"] == "zlib":
+                assert got == zlib.compress(raw, 3), (col, key)
+            else:            # the gzip header carries a write time
+                assert gzip.decompress(got) == raw, (col, key)
 
 
 def test_zarr_default_row_chunk_sane():
@@ -769,7 +868,8 @@ def test_zarr_grouped_read_uses_stored_groups(spark, tmp_path):
         assert d.attrs[PARTITION_KEY] == (("FIELD_ID", "int"),
                                           ("DATA_DESC_ID", "int"))
         plan = d.df._jdf.queryExecution().executedPlan().toString()
-        assert plan.count("MapInPandas") == 1
+        assert plan.count("MapInArrow") == 1 and "Range" in plan
+        assert "Scan ExistingRDD" not in plan
         times = [r.TIME for r in d.df.select("TIME").collect()]
         assert times == sorted(times) and len(times) == 60
         want = base.where((F.col("FIELD_ID") == d.attrs["FIELD_ID"])

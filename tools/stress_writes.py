@@ -90,12 +90,15 @@ def zarr_leg(spark, sf_dir: str, out_dir: str):
         xds_to_zarr([Dataset(df, {})], store, row_chunk=65536)
         wall, drss = time.time() - t0, rss_mb() - r0
         [back] = xds_from_zarr(spark, store)
+        t1 = time.time()
         back_sum = checksum(back.df)
+        read_wall = time.time() - t1
         ok = tuple(src_sum) == tuple(back_sum)
         results[copies] = (wall, drss, ok, src_sum["n"])
         print(f"zarr {copies}x: rows={src_sum['n']} wall={wall:.2f}s "
               f"driver-rss-delta={drss:.0f}MB readback="
-              f"{'OK' if ok else 'MISMATCH'}", flush=True)
+              f"{'OK' if ok else 'MISMATCH'} read={read_wall:.2f}s "
+              f"read-tasks={back.df.rdd.getNumPartitions()}", flush=True)
         assert ok, f"zarr {copies}x read-back mismatch"
     return results
 
