@@ -43,8 +43,8 @@ from typing import Iterator, List
 
 from pyspark.sql import DataFrame
 
-__all__ = ["cache_scope", "scoped_persist", "pin_multi_consumer",
-           "release_caches", "CacheScope"]
+__all__ = ["cache_scope", "scoped_persist", "release_caches",
+           "CacheScope"]
 
 
 class CacheScope:
@@ -100,7 +100,9 @@ def scoped_persist(df: DataFrame) -> DataFrame:
     """``df.persist()`` with a paired release: the frame is registered
     with this thread's innermost :func:`cache_scope` (unpersisted at
     scope exit) or, outside any scope, with the process-wide registry
-    freed by :func:`release_caches`."""
+    freed by :func:`release_caches`.  Iterative drivers keep
+    ``localCheckpoint`` instead, for the lineage truncation that
+    ``persist`` does not do."""
     out = df.persist()
     stack = _scopes()
     (stack[-1] if stack else _UNSCOPED).track(out)
@@ -127,30 +129,6 @@ def cache_scope() -> Iterator[CacheScope]:
     finally:
         stack.remove(scope)
         scope.release()
-
-
-def pin_multi_consumer(df: DataFrame) -> DataFrame:
-    """Materialise-once pin for a frame that feeds several consumers
-    in ONE plan (not an iterative loop).
-
-    r13: the previous spelling, ``localCheckpoint(eager=False)``, is
-    not actually lazy under AQE — ``toRdd`` resolves the final
-    adaptive plan, which EXECUTES every upstream shuffle stage at
-    call time (measured 0.3-0.9 s of driver-blocking work per call
-    on this suite, stage-by-stage with a Py4J round trip each).
-    ``persist()`` defers everything to the first real action, where
-    AQE sees the whole consumer plan at once, and the columnar
-    InMemoryRelation scans faster than checkpoint's row blocks (the
-    r8 SCALE.md measurement).  Iterative drivers (gain_solve,
-    pagerank, BPE merges, k-means) KEEP localCheckpoint — there the
-    point is lineage truncation, which persist does not do.  Every
-    call site was A/B-decided individually (r13): sites where the
-    pinned frame feeds a self-join or statistics-sensitive join
-    (graph triangles' oriented edges, IVF members/probes, DSIR's
-    exploded tokens, the rolling-DAU day-user set) measured FASTER
-    with localCheckpoint's truncated leaf and keep it.
-    """
-    return scoped_persist(df)
 
 
 def release_caches() -> int:

@@ -252,8 +252,7 @@ def robust_stats(df, value_col: str, group_cols=None):
     """
     from pyspark.sql import functions as F
 
-    from dask_ms_spark.cache import (pin_multi_consumer,
-                                     scoped_persist)
+    from dask_ms_spark.cache import scoped_persist
 
     group_cols = list(group_cols or [])
     base = df.select(*group_cols, F.col(value_col).cast("double")
@@ -278,7 +277,7 @@ def robust_stats(df, value_col: str, group_cols=None):
     qs = (base.groupBy(*group_cols)
           .agg(F.percentile("x", F.array(F.lit(0.25), F.lit(0.5),
                                          F.lit(0.75))).alias("qq")))
-    q = pin_multi_consumer(
+    q = scoped_persist(
         qs.select(*group_cols,
                   F.col("qq")[1].alias("median"),
                   F.col("qq")[0].alias("q1"),

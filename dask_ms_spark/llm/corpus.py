@@ -15,7 +15,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..cache import pin_multi_consumer
+from ..cache import scoped_persist
 from ..functions.text import portable_hash64, sql_string, tokens
 from ..functions.vector import _bind_once
 from ..session import ensure_parallelism
@@ -26,10 +26,6 @@ __all__ = ["vocab_topk", "phrase_boilerplate", "quality_filter",
            "substring_dedup", "collocations_pmi", "char_entropy",
            "ngram_novelty", "dedup_paragraphs", "c4_line_filter",
            "ccnet_perplexity_buckets", "heaps_fit"]
-
-# A/B flag (tools/ab_flags.py): False restores the pre-r12 left-join
-# + unigram-floor scoring for self-scored add-one lm_perplexity.
-_SELF_SCORED_INNER_JOIN = True
 
 
 def dedup_paragraphs(docs: DataFrame, text_col: str = "text",
@@ -551,8 +547,6 @@ def lm_perplexity(docs: DataFrame, lm_docs: DataFrame | None = None,
         # lifecycle — looping drivers wrap batches in
         # dask_ms_spark.cache.cache_scope() or call release_caches()
         # between them (the dedup module's cache discipline)
-        from ..cache import scoped_persist
-
         lm_grams = scoped_persist(lm_grams)
     uni = (lm_grams.groupBy("w1")
            .agg(F.count(F.lit(1)).alias("c1")))
@@ -618,12 +612,9 @@ def lm_perplexity(docs: DataFrame, lm_docs: DataFrame | None = None,
               .select("w1", "w2",
                       ((F.col("c2") + 1)
                        / (F.col("c1") + F.lit(vocab))).alias("p")))
-        if self_scored and _SELF_SCORED_INNER_JOIN:
+        if self_scored:
             # every scored instance is in the LM by construction —
-            # inner join, no unigram backoff leg (r12: the left-join
-            # + uni-floor spelling paid one extra corpus-sized join
-            # whose coalesce never fired; the kneser_ney branch
-            # already had this fast path)
+            # inner join, no unigram backoff leg
             scored = inst.join(lm, ["w1", "w2"]).select("id", "p")
         else:
             # smoothing floor for bigrams unseen by the LM (left
@@ -743,8 +734,6 @@ def collocations_pmi(docs: DataFrame, text_col: str = "text",
     # w2-non-null rows; the totals collapse to one count/sum over
     # the same frame.  Values are identical to the two-explode
     # spelling by construction (oracle MATCH re-verified).
-    from ..cache import scoped_persist
-
     toks = tokens(F.lower(F.col(text_col)))
 
     def grams_of(tk):
@@ -958,10 +947,10 @@ def heaps_fit(docs: DataFrame, text_col: str = "text",
     base = (ensure_parallelism(docs)
             .select(F.col(id_col).alias("id"), toks.alias("__t")))
     # counts feeds THREE consumers (the total-collect below, the
-    # bucket totals, and the offset join): checkpoint the tiny
+    # bucket totals, and the offset join): persist the tiny
     # (id, cnt) table so the corpus tokenizes once for all of them
-    # instead of once per consumer (review r8)
-    counts = pin_multi_consumer(
+    # instead of once per consumer
+    counts = scoped_persist(
         base.select("id", F.size("__t").alias("cnt")))
     n_parts = docs.sparkSession.sparkContext.defaultParallelism
     parted = (counts.repartitionByRange(n_parts, F.col("id"))

@@ -31,7 +31,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..cache import pin_multi_consumer
+from ..cache import scoped_persist
 from ..functions.vector import dot, norm
 from .clustering import kmeans_assign
 
@@ -64,7 +64,7 @@ def semantic_dedup(embs: DataFrame, vec_col: str = "embedding",
     members = (assigned.select(F.col(id_col).alias("id"), "cluster")
                .join(vecs, "id")
                .withColumn("nrm", norm(F.col("vec"))))
-    members = pin_multi_consumer(members)
+    members = scoped_persist(members)
     a = members.select(F.col("id").alias("id_a"), "cluster",
                        F.col("vec").alias("va"),
                        F.col("nrm").alias("na"))

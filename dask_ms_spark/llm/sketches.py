@@ -42,7 +42,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from dask_ms_spark.functions.text import portable_hash64
-from dask_ms_spark.cache import pin_multi_consumer
+from dask_ms_spark.cache import scoped_persist
 
 __all__ = ["kmv_distinct", "kmv_overlap", "HASH_SPACE",
            "cms_sketch", "cms_merge", "cms_estimate",
@@ -148,7 +148,7 @@ def kmv_overlap(a: "DataFrame", b: "DataFrame", value_col: str,
               .groupBy("h")
               .agg(F.max("in_a").alias("in_a"),
                    F.max("in_b").alias("in_b")))
-    merged = pin_multi_consumer(merged)
+    merged = scoped_persist(merged)
     sk = _k_smallest(merged, k)
 
     def est(cnt, mx):

@@ -26,7 +26,7 @@ from typing import Sequence
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..cache import pin_multi_consumer
+from ..cache import scoped_persist
 
 __all__ = ["apply_cdc", "scd2_apply"]
 
@@ -54,12 +54,12 @@ def apply_cdc(snapshot: DataFrame, changes: DataFrame,
     w = Window.partitionBy(*keys).orderBy(
         F.col(seq_col).desc(), F.col(op_col).desc(),
         *[F.col(c).desc_nulls_last() for c in payload])
-    # r12 optimization: ``latest`` feeds BOTH the upsert leg and the
-    # changed-key anti-join; Catalyst plans trees, so without a
-    # materialisation the dedup window (exchange + sort) runs twice
-    # (plan-verified).  lazy localCheckpoint: one window pass, and
-    # the change feed is the small side by construction.
-    latest = pin_multi_consumer(
+    # ``latest`` feeds BOTH the upsert leg and the changed-key
+    # anti-join; Catalyst plans trees, so without a materialisation
+    # the dedup window (exchange + sort) runs twice (plan-verified).
+    # Persisted: one window pass, and the change feed is the small
+    # side by construction.
+    latest = scoped_persist(
         changes.withColumn("__rn", F.row_number().over(w))
                .where(F.col("__rn") == 1).drop("__rn"))
     upserts = latest.where(F.col(op_col) != "D") \

@@ -72,8 +72,8 @@ def constraint_audit(df: DataFrame, rules: Sequence[dict]) -> DataFrame:
     Row rules AND foreign keys share ONE scan of the fact table —
     each FK attaches as a broadcast existence flag (distinct dim
     keys, so the left join is 1:1) and its misses are counted in the
-    same aggregate as the row predicates (the fk_audit single-pass
-    shape); ``unique`` needs its own key-grouped pass.
+    same aggregate as the row predicates; ``unique`` needs its own
+    key-grouped pass.
     Deterministic: counts only.
     """
     spark = df.sparkSession

@@ -412,7 +412,10 @@ def _write_groups(members: list[tuple[int, Dataset]], store: str,
 
     def encode(payload: bytes) -> bytes:
         if codec_id == "gzip":
-            return gzip.compress(payload, compresslevel=codec_level)
+            # mtime=0: equal data writes equal bytes (the header
+            # would otherwise stamp the write time)
+            return gzip.compress(payload, compresslevel=codec_level,
+                                 mtime=0)
         if codec_id == "zlib":
             return zlib.compress(payload, codec_level)
         return payload

@@ -139,10 +139,10 @@ def test_kmeans_assignment_broadcasts_centroids(spark):
     """The scoring cross join must broadcast the k-row centroid table
     (map-side assignment); the corpus must never sort-merge or
     shuffle-hash against it."""
-    import __spark_entry__ as entry
+    from dask_ms_spark.llm.clustering import kmeans_assign
     from dask_ms_spark.plans import plan_str
 
-    df = entry.q_kmeans_cluster(spark, "/root/testdata/sf0.001")
+    df = kmeans_assign(table(spark, "embeddings"), k=8, iters=2)
     plan = plan_str(df)
     assert "BroadcastExchange" in plan
     assert "SortMergeJoin" not in plan
@@ -165,10 +165,10 @@ def test_quality_filter_map_side_single_scan(spark):
     """quality_filter is one projection of one scan: the features fold
     over each row's token array, so no word explode, no (doc, word)
     shuffle and no join back to the documents."""
-    import __spark_entry__ as entry
+    from dask_ms_spark.llm.corpus import quality_filter
     from dask_ms_spark.plans import plan_str
 
-    df = entry.q_quality_filter(spark, SF_DIR)
+    df = quality_filter(table(spark, "documents"))
     plan = plan_str(df)
     assert plan.count("FileScan") == 1
     assert "ReadSchema: struct<doc_id:bigint,text:string>" in plan
@@ -674,6 +674,36 @@ def test_plans_md_ledger_detects_list_moves():
     # ... but the set comparison sees it
     assert moved["registered"] != set(entrymod.queries())
     assert moved["demoted"] != set(entrymod.demoted_queries())
+
+
+# The driver validates the first 50 names of queries(); this is that
+# window, frozen so a registry edit cannot reorder it silently.
+_DRIVER_WINDOW = (
+    "events_funnel", "events_retention", "tpch_q7", "tpch_q8", "tpch_q15",
+    "tpch_q17", "tpch_q21", "table_profile", "bm25_search", "dsir_select",
+    "ccnet_buckets", "phrase_boilerplate", "sigma_clip", "cusum_segments",
+    "ann_lsh", "ann_ivf_indexed", "ann_ivfpq", "dedup_edit_distance",
+    "dedup_containment", "backfill_restart", "robust_stats", "star_join",
+    "semi_join", "anti_join", "set_ops", "tpch_q3", "tpch_q4", "tpch_q5",
+    "tpch_q9", "tpch_q10", "tpch_q12", "tpch_q22", "incremental_join",
+    "cdc_apply", "heavy_hitters_cms", "sample_weighted", "zipf_fit",
+    "vocab_topk", "corpus_overlap_kmv", "text_repetition", "tpch_q2", "pivot",
+    "unpivot", "dedup_embedding_bucketed", "text_bpe", "text_winnow",
+    "text_stats", "text_langid", "text_fingerprint", "dedup_simhash",
+)
+
+
+def test_registry_contract():
+    """One registry, two tiers: registered and demoted names are
+    disjoint, each tier's oracle keys equal its query keys, and the
+    driver window keeps its names and order."""
+    import __spark_entry__ as entrymod
+
+    reg, dem = entrymod.queries(), entrymod.demoted_queries()
+    assert not set(reg) & set(dem)
+    assert set(entrymod.oracle_sql()) == set(reg)
+    assert set(entrymod.demoted_oracle_sql()) == set(dem)
+    assert tuple(reg)[:50] == _DRIVER_WINDOW
 
 
 def test_round7_debut_plan_shapes(spark):

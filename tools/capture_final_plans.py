@@ -33,9 +33,7 @@ def main() -> int:
         "spark.ui.showConsoleProgress": "false",
     })
     spark.sparkContext.setLogLevel("ERROR")
-    queries = entrymod.queries()
-    demoted = entrymod.demoted_queries()
-    queries.update({k: v for k, v in demoted.items() if k not in queries})
+    queries = {**entrymod.queries(), **entrymod.demoted_queries()}
     for n in names:
         release_caches()
         try:

@@ -126,10 +126,8 @@ def main():
 
     # demoted entries (redundant variants pulled from the driver
     # registry to bound bench wall-clock) are still swept here
-    queries = {**entrymod.queries(),
-               **getattr(entrymod, "demoted_queries", dict)()}
-    oracles = {**entrymod.oracle_sql(),
-               **getattr(entrymod, "demoted_oracle_sql", dict)()}
+    queries = {**entrymod.queries(), **entrymod.demoted_queries()}
+    oracles = {**entrymod.oracle_sql(), **entrymod.demoted_oracle_sql()}
     results = {}
     for name, fn in queries.items():
         if only and name not in only:

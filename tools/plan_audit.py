@@ -88,8 +88,7 @@ def main():
              .getOrCreate())
     spark.sparkContext.setLogLevel("ERROR")
 
-    queries = {**entrymod.queries(),
-               **getattr(entrymod, "demoted_queries", dict)()}
+    queries = {**entrymod.queries(), **entrymod.demoted_queries()}
     bad = []
     rows = []
     for name, fn in queries.items():
@@ -130,11 +129,9 @@ def main():
         # machine-checkable registry ledger: tests/test_plans.py
         # asserts these NAME SETS (not just the count) against the
         # live queries()/demoted_queries() — a query moving between
-        # the lists without a regeneration fails the suite (r10
-        # verdict item 2: the ann_ivf demotion was invisible to the
-        # count-only check)
+        # the lists without a regeneration fails the suite
         reg = sorted(entrymod.queries())
-        dem = sorted(getattr(entrymod, "demoted_queries", dict)())
+        dem = sorted(entrymod.demoted_queries())
         print(f"\nregistered ({len(reg)}): {' '.join(reg)}")
         print(f"demoted ({len(dem)}): {' '.join(dem)}")
     return 1 if bad else 0

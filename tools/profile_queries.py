@@ -43,9 +43,7 @@ def main() -> int:
         "spark.ui.showConsoleProgress": "false",
     })
     spark.sparkContext.setLogLevel("ERROR")
-    queries = entrymod.queries()
-    demoted = entrymod.demoted_queries()
-    queries.update({k: v for k, v in demoted.items() if k not in queries})
+    queries = {**entrymod.queries(), **entrymod.demoted_queries()}
 
     bad = [n for n in args.names if n not in queries]
     if bad:
