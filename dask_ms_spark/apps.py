@@ -160,9 +160,10 @@ def main(argv: list[str] | None = None) -> int:
     if args.command == "bda":
         from .operators.bda import bda_average
         from .session import get_spark
+        from .sources.parquet import scan_parquet
 
         spark = get_spark("dask-ms-spark-bda")
-        df = spark.read.parquet(args.input)
+        df = scan_parquet(spark, args.input)
         out = bda_average(
             df, args.time_col, _csv(args.baseline_cols),
             args.uvdist_col, args.base_interval, args.ref_uvdist,

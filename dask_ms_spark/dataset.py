@@ -95,7 +95,12 @@ def partition_datasets(df: DataFrame,
        daskms/ordering.py:68-71);
     2. run ONE small distinct-groups aggregation (the TAQL GROUPBY
        analogue, daskms/ordering.py:165-192) — this is the only eager
-       step and touches only the group columns (column-pruned scan);
+       step and touches only the group columns (column-pruned scan).
+       It costs two Spark jobs: the distinct's shuffle, then one final
+       task that sorts the distinct tuples, which are few by
+       construction (a global ``orderBy`` would add a range-sampling
+       job and a second shuffle: four jobs).  The order is
+       ``orderBy``'s: ascending, NULLs first, NaN last;
     3. per group, return a lazily-filtered view sorted by
        ``index_cols`` (within-group sort, O2 —
        daskms/ordering.py:102-117).
@@ -131,9 +136,11 @@ def partition_datasets(df: DataFrame,
         return [Dataset(sess.createDataFrame([tuple(r) + (i,)], schema),
                         {ROWID: i}) for i, r in enumerate(rows)]
 
-    # Eager metadata-only query: distinct group tuples (small).
+    # Eager metadata-only query: distinct group tuples (small), sorted
+    # in one task.
     groups = [tuple(r) for r in
-              df.select(*group_cols).distinct().orderBy(*group_cols).collect()]
+              df.select(*group_cols).distinct().coalesce(1)
+              .sortWithinPartitions(*group_cols).collect()]
 
     partition_key = tuple((c, df.schema[c].dataType.simpleString())
                           for c in group_cols)

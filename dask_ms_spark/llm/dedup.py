@@ -1000,7 +1000,11 @@ def _edits_arrow_kernel(pairs: DataFrame) -> DataFrame:
     points (``('café', 'cafe')`` is 2 there, 1 on the JVM), so DuckDB
     scores ASCII pairs only; a pair with a non-ASCII text gets the JVM
     banded ``levenshtein(ta, tb, __k)`` (input column ``__k``) after
-    the spread and before the batch reaches DuckDB.  The DuckDB oracle
+    the spread and before the batch reaches DuckDB.  So does a pair
+    whose band ``2*__k + 1`` is under half of ``__L``: there the band
+    skips most of the O(n^2) matrix DuckDB would fill (two long,
+    unrelated, same-length texts cost O(k * n), not O(n^2)), and
+    the result is the same by the argument above.  The DuckDB oracle
     of ``dedup_edit_distance`` still scores with the byte-based
     function; it agrees only because the test data is ASCII.
 
@@ -1017,6 +1021,7 @@ def _edits_arrow_kernel(pairs: DataFrame) -> DataFrame:
     schema = f"{out_fields}, __edits int"
     ascii_pair = ((F.octet_length("ta") == F.length("ta"))
                   & (F.octet_length("tb") == F.length("tb")))
+    narrow_band = (2 * F.col("__k") + 1) * 2 < F.col("__L")
 
     def score(batches):
         import duckdb
@@ -1036,7 +1041,7 @@ def _edits_arrow_kernel(pairs: DataFrame) -> DataFrame:
             yield from out.to_batches()
 
     return (pairs.repartition(n_parts)
-            .withColumn("__jvm", F.when(~ascii_pair, F.expr(
+            .withColumn("__jvm", F.when(~ascii_pair | narrow_band, F.expr(
                 "levenshtein(ta, tb, __k)")))
             .drop("__k").mapInArrow(score, schema))
 
@@ -1059,10 +1064,14 @@ def edit_distance_pairs(docs: DataFrame, text_col: str = "text",
     (ids-only shuffles, bucket caps apply), and payload text joins in
     ONLY for the surviving candidate set — two id-keyed joins on a
     small relation, never a corpus-wide text shuffle.  The distance
-    runs JVM-side via ``levenshtein(l, r, threshold)``: the banded
-    O(max_edits * n) form, so a pathological candidate pair (two long
-    unrelated docs that collided in a band) costs the cap, not the
-    full O(n^2) matrix.
+    counts code points.  With duckdb installed, DuckDB's unbanded
+    ``levenshtein`` scores ASCII pairs whose band is wide, and the JVM
+    banded ``levenshtein(l, r, k)`` (O(k * n)) scores the rest: the
+    non-ASCII pairs and every pair whose band ``2k + 1`` is under half
+    the longer text, so a pathological candidate pair (two long
+    unrelated docs that collided in a band) costs the band, not the
+    full O(n^2) matrix.  Without duckdb the JVM form scores every
+    pair (see :func:`_edits_arrow_kernel`).
 
     Emits ``(id_a, id_b, edits, edit_ratio)`` for pairs with
     ``edits <= max_edits`` and ``edit_ratio = edits /

@@ -127,6 +127,14 @@ def projection_coefficients(seed: str, component: int,
     return vals
 
 
+def _double_array(vals: list[float]) -> Column:
+    """A literal ``array<double>`` as ONE parsed expression (one Py4J
+    call, not one ``F.lit`` per element).  ``repr`` is the shortest
+    string that round-trips a float and the ``D`` suffix parses it as
+    a double, never a decimal, so every element is bit-exact."""
+    return F.expr(f"array({', '.join(f'{v!r}D' for v in vals)})")
+
+
 def random_projection(vectors: DataFrame, dim: int, out_dim: int = 8,
                       id_col: str = "vec_id",
                       vec_col: str = "embedding",
@@ -146,9 +154,7 @@ def random_projection(vectors: DataFrame, dim: int, out_dim: int = 8,
     vec = F.transform(F.col(vec_col), lambda x: x.cast("double"))
     cols = [F.col(id_col), *[F.col(c) for c in keep]]
     for j in range(out_dim):
-        plane = F.array(*[
-            F.lit(v) for v in
-            projection_coefficients(seed, j, dim)])
+        plane = _double_array(projection_coefficients(seed, j, dim))
         cols.append(dot(vec, plane).alias(f"p{j}"))
     return vectors.select(*cols)
 
@@ -162,7 +168,7 @@ def hyperplane_signature(vec: Column, dim: int, num_planes: int = 8,
     """
     bucket = F.lit(0)
     for j in range(num_planes):
-        plane = F.array(*[F.lit(v) for v in _seeded_unit(f"{seed}:{j}", dim)])
+        plane = _double_array(_seeded_unit(f"{seed}:{j}", dim))
         bit = (dot(vec, plane) >= 0).cast("int")
         bucket = bucket + bit * F.lit(2 ** j)
     return bucket

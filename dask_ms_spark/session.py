@@ -21,6 +21,10 @@ that matter at scale:
   working directory.  Override either with ``extra_conf``, e.g.
   ``{"spark.python.daemon.module": "pyspark.daemon"}`` for the stock
   daemon.
+* The JVM talks to Python workers over Unix domain sockets, not TCP
+  on localhost: an empty one-task ``mapInArrow`` task runs in 10-19 ms
+  instead of 48-53 ms (4 cores), so Python-kernel stages such as the
+  zarr read lose most of their fixed per-task cost.
 """
 
 from __future__ import annotations
@@ -75,6 +79,7 @@ def session_conf(extra_conf: dict | None = None) -> dict:
         # --- Python workers: no per-task zip archive re-reads ---
         "spark.python.daemon.module": DAEMON_MODULE,
         "spark.executorEnv.PYTHONPATH": _ROOT,
+        "spark.python.unix.domain.socket.enabled": "true",
     }
     conf.update(extra_conf or {})
     return conf

@@ -10,10 +10,20 @@ On Spark both directions are native: ``spark.read.parquet`` does
 partition discovery + pruning, ``df.write.partitionBy(...).parquet``
 produces the identical Hive layout.  What remains is the dataset-list
 facade and the partition-key round trip (G3).
+
+Every read of a parquet store goes through :func:`scan_parquet`, which
+holds the reference's open-once table handle
+(daskms/table_proxy.py:146-169) in Spark terms: an unchanged local
+store is opened with the schema Spark inferred the first time, so a
+re-read starts no schema-inference job.
 """
 
 from __future__ import annotations
 
+import os
+import stat
+import threading
+import weakref
 from typing import Iterable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -21,14 +31,90 @@ from pyspark.sql import DataFrame, SparkSession
 from ..dataset import Dataset, concat, partition_datasets
 from ..types import PARTITION_KEY
 
-__all__ = ["xds_from_parquet", "xds_to_parquet", "read_table",
-           "compact_parquet", "table_health"]
+__all__ = ["scan_parquet", "xds_from_parquet", "xds_to_parquet",
+           "read_table", "compact_parquet", "table_health"]
+
+# Session confs that change what parquet schema inference returns;
+# their values are part of every memo key.
+_INFERENCE_CONFS = (
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.mergeSchema",
+    "spark.sql.caseSensitive",
+    "spark.sql.sources.partitionColumnTypeInference.enabled",
+    "spark.sql.legacy.parquet.nanosAsLong",
+)
+_MEMO_ENTRIES = 64
+# per session: memo key -> the JVM StructType Spark inferred, least
+# recently used first; driver threads share it under the lock
+_SCHEMA_MEMO: "weakref.WeakKeyDictionary[SparkSession, dict]" = \
+    weakref.WeakKeyDictionary()
+_MEMO_LOCK = threading.Lock()
+
+
+def _store_files(path: str) -> tuple | None:
+    """``(relative path, size, mtime_ns)`` of every file of a local
+    store, sorted; ``None`` for a URI, a glob or an unreadable path
+    (those are never memoised)."""
+    if "://" in path or path.startswith("file:") or \
+            any(c in path for c in "*?[{"):
+        return None
+    try:
+        st = os.stat(path)
+        if not stat.S_ISDIR(st.st_mode):
+            return (("", st.st_size, st.st_mtime_ns),)
+        files = []
+        for root, _, names in os.walk(path, followlinks=True):
+            for name in names:
+                full = os.path.join(root, name)
+                st = os.stat(full)
+                files.append((os.path.relpath(full, path), st.st_size,
+                              st.st_mtime_ns))
+    except OSError:
+        return None
+    return tuple(sorted(files))
+
+
+def scan_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)`` without a schema job on re-reads.
+
+    Spark infers a parquet schema with a one-task job on every read.
+    The schema it inferred (the JVM ``StructType``, so types, field
+    metadata and partition columns round-trip exactly) is memoised
+    per session, keyed by the absolute path, the session confs that
+    change inference, and each file's relative path, size and
+    ``mtime_ns``; a hit hands it to the reader, so no job starts.  Any
+    change to the store or to those confs misses, and a miss (or any
+    non-local URI) reads exactly as ``spark.read.parquet`` does.
+    """
+    files = _store_files(path)
+    if files is None:
+        return spark.read.parquet(path)
+    key = (os.path.abspath(path),
+           tuple(spark.conf.get(k, None) for k in _INFERENCE_CONFS), files)
+    with _MEMO_LOCK:
+        memo = _SCHEMA_MEMO.setdefault(spark, {})
+        schema = memo.pop(key, None)
+        if schema is not None:
+            memo[key] = schema    # most recently used last
+    if schema is not None:
+        reader = spark.read
+        reader._jreader.schema(schema)
+        return reader.parquet(path)
+    df = spark.read.parquet(path)
+    schema = df._jdf.schema()
+    with _MEMO_LOCK:
+        memo[key] = schema
+        while len(memo) > _MEMO_ENTRIES:
+            memo.pop(next(iter(memo)))
+    return df
 
 
 def read_table(spark: SparkSession, path: str,
                columns: Iterable[str] | None = None) -> DataFrame:
     """Plain lazy parquet scan; column pruning via select."""
-    df = spark.read.parquet(path)
+    df = scan_parquet(spark, path)
     if columns is not None:
         df = df.select(*columns)
     return df
@@ -47,7 +133,7 @@ def xds_from_parquet(spark: SparkSession, store: str,
     ``where`` is pushed into the scan by Catalyst (PushedFilters);
     ``group_cols`` matching Hive partition dirs prune partitions.
     """
-    df = spark.read.parquet(store)
+    df = scan_parquet(spark, store)
     return partition_datasets(df, group_cols, index_cols, where, columns)
 
 
@@ -102,7 +188,7 @@ def compact_parquet(spark: SparkSession, store: str, out_store: str,
     (daskms/ordering.py:18-57), achieved declaratively.  Returns the
     number of output files written.
     """
-    df = spark.read.parquet(store)
+    df = scan_parquet(spark, store)
     if target_files is None:
         target_files = max(1, df.rdd.getNumPartitions() // 8)
     sort_cols = list(sort_cols)

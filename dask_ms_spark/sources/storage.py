@@ -25,7 +25,7 @@ from pyspark.sql import SparkSession
 
 from ..dataset import Dataset, concat, partition_datasets, regroup_stored
 from . import casa, zarr
-from .parquet import xds_from_parquet, xds_to_parquet
+from .parquet import scan_parquet, xds_from_parquet, xds_to_parquet
 
 __all__ = ["TableStore", "infer_format", "xds_from_storage_table",
            "xds_to_storage_table"]
@@ -251,7 +251,7 @@ def xds_from_storage_table(spark: SparkSession, url: str,
     fmt = infer_format(store.path, spark)
     if deferred_taql is not None:
         if fmt == "parquet" and store.scheme in ("", "file"):
-            peek = spark.read.parquet(store.path).schema
+            peek = scan_parquet(spark, store.path).schema
             translated = taql_where_to_sql(taql_where, schema=peek,
                                            mscal=taql_mscal)
         elif fmt == "casa":

@@ -22,6 +22,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+from ..sources.parquet import scan_parquet
+
 __all__ = ["normalize_ts", "read_events", "read_events_stream",
            "windowed_counts", "sliding_value_stats", "correlate_events",
            "dedup_events", "sessionize", "run_stream_to_memory",
@@ -64,7 +66,7 @@ def read_events(spark: SparkSession, path: str) -> DataFrame:
     own session).
     """
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    return normalize_ts(spark.read.parquet(path))
+    return normalize_ts(scan_parquet(spark, path))
 
 
 def read_events_stream(spark: SparkSession, path: str,
@@ -77,7 +79,7 @@ def read_events_stream(spark: SparkSession, path: str,
     """
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     if schema is None:
-        schema = spark.read.parquet(path).schema
+        schema = scan_parquet(spark, path).schema
     if os.path.isfile(path):
         # staging dir must be a pure function of the source path:
         # checkpointed streams record source files by absolute path, so

@@ -24,7 +24,8 @@ def spark():
 
     from dask_ms_spark.session import DAEMON_MODULE
 
-    # Python workers fork from the library's daemon, as under get_spark
+    # Python workers fork from the library's daemon and talk to the JVM
+    # over Unix domain sockets, as under get_spark
     s = (SparkSession.builder.master("local[4]")
          .appName("dask-ms-spark-tests")
          .config("spark.sql.shuffle.partitions", "4")
@@ -32,6 +33,7 @@ def spark():
          .config("spark.ui.enabled", "false")
          .config("spark.sql.legacy.parquet.nanosAsLong", "true")
          .config("spark.python.daemon.module", DAEMON_MODULE)
+         .config("spark.python.unix.domain.socket.enabled", "true")
          .getOrCreate())
     s.sparkContext.setLogLevel("ERROR")
     yield s

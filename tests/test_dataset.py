@@ -118,3 +118,46 @@ def test_dataset_assign_select_where(lineitem):
              .select("l_orderkey", "double_qty"))
     rows = out.df.collect()
     assert rows and all(r.double_qty >= 98 for r in rows)
+
+
+def test_group_order_equals_order_by(spark):
+    """Groups come out in ``orderBy`` order: NULLs first, NaN last,
+    negative numbers, mixed-case strings, two group columns."""
+    nan = float("nan")
+    rows = [(x, s) for x in (None, nan, -2.5, -0.5, 0.0, 3.0, 1e9)
+            for s in (None, "b", "B", "a", "Zed", "")]
+    df = spark.createDataFrame(rows * 3, "x double, s string") \
+        .repartition(4)
+    dss = partition_datasets(df, group_cols=["x", "s"])
+    want = df.select("x", "s").distinct().orderBy("x", "s").collect()
+    got = [(ds.attrs["x"], ds.attrs["s"]) for ds in dss]
+    assert len(got) == len(rows)
+    assert [tuple(map(repr, g)) for g in got] == \
+        [tuple(map(repr, w)) for w in want]
+    assert dss[0].attrs[PARTITION_KEY] == (("x", "double"),
+                                           ("s", "string"))
+    for ds in dss[:8]:
+        assert ds.df.count() == 3
+
+
+def test_group_discovery_starts_two_jobs(spark, tmp_path):
+    """A grouped read of an unchanged store starts at most two jobs
+    before its action: no schema inference, and the distinct groups
+    are sorted in one task, not by a range-partitioned sort."""
+    from dask_ms_spark import xds_from_table
+    from tests.conftest import jobs_in
+
+    store = str(tmp_path / "grouped.parquet")
+    spark.range(0, 400, 1, 4).selectExpr(
+        "id", "id % 3 AS g", "CAST(id % 2 AS string) AS h") \
+        .write.parquet(store)
+
+    def read():
+        return xds_from_table(spark, store, group_cols=["g", "h"],
+                              index_cols=["id"])
+
+    read()
+    dss, n = jobs_in(spark, "grouped-read", read)
+    assert n <= 2
+    assert [(ds.attrs["g"], ds.attrs["h"]) for ds in dss] == \
+        [(0, "0"), (0, "1"), (1, "0"), (1, "1"), (2, "0"), (2, "1")]

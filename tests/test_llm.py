@@ -1906,3 +1906,88 @@ def test_cache_scope_is_thread_local(spark):
         t.join(timeout=60)
     assert not errs
     assert tracked == {"a": 1, "bb": 1}   # one frame per scope, not 0/2
+
+
+def test_literal_planes_bit_identical_to_per_element_lits(embeddings):
+    """Hyperplane and projection planes built as one SQL array of
+    double literals give the same bits as per-element ``F.lit``
+    arrays."""
+    import struct
+
+    from dask_ms_spark.functions.vector import dot
+    from dask_ms_spark.llm.similarity import (_seeded_unit,
+                                              hyperplane_signature,
+                                              projection_coefficients,
+                                              random_projection)
+
+    sample = embeddings.where("vec_id < 40")
+    dim = len(sample.first().embedding)
+    vec = F.transform(F.col("embedding"), lambda x: x.cast("double"))
+
+    def lits(vals):
+        return F.array(*[F.lit(v) for v in vals])
+
+    want_proj = sample.select("vec_id", *[
+        dot(vec, lits(projection_coefficients("dask-ms-spark", j, dim)))
+        .alias(f"p{j}") for j in range(4)])
+    bucket = F.lit(0)
+    for j in range(8):
+        bit = (dot(vec, lits(_seeded_unit(f"dask-ms-spark:{j}", dim)))
+               >= 0).cast("int")
+        bucket = bucket + bit * F.lit(2 ** j)
+    want_sig = sample.select("vec_id", bucket.alias("sig"))
+
+    def bits(rows):
+        return sorted(tuple(struct.pack("<d", v) if isinstance(v, float)
+                            else v for v in r) for r in rows)
+
+    got_proj = random_projection(sample, dim=dim, out_dim=4)
+    assert bits(got_proj.collect()) == bits(want_proj.collect())
+    got_sig = sample.select("vec_id", hyperplane_signature(
+        vec, dim, num_planes=8).alias("sig"))
+    assert sorted(got_sig.collect()) == sorted(want_sig.collect())
+    # every element of the literal round-trips exactly, tiny and
+    # negative values included
+    from dask_ms_spark.llm.similarity import _double_array
+
+    vals = [1e-05, -0.5, 0.1, -1.0, 5e-324, 1.7976931348623157e308,
+            -0.0, 2.0 ** -40]
+    got = sample.sparkSession.range(1).select(
+        _double_array(vals).alias("a")).first().a
+    assert [struct.pack("<d", v) for v in got] == \
+        [struct.pack("<d", v) for v in vals]
+
+
+def test_edit_distance_long_unrelated_pair_is_banded(spark):
+    """Two long, same-length, unrelated texts cost the band, not
+    DuckDB's full O(n^2) matrix; short pairs still score exactly."""
+    pytest.importorskip("duckdb")
+    import random
+    import time
+
+    from dask_ms_spark.llm import dedup
+
+    rnd = random.Random(7)
+    n = 50_000
+    long_a = "".join(rnd.choice("abcdefghij ") for _ in range(n))
+    long_b = "".join(rnd.choice("abcdefghij ") for _ in range(n))
+    short = [("kitten", "sitting"), ("flaw", "lawn"),
+             ("the quick brown fox", "the quick brown cat"),
+             ("abcdef", "azcdefg"), ("", "abc"),
+             ("abcdefghij" * 10, ("abcdefghij" * 10).replace("e", "E", 3))]
+    rows = [(1, 2, long_a, long_b, 120)]
+    rows += [(10 + i, 20 + i, a, b, 10) for i, (a, b) in enumerate(short)]
+    pairs = spark.createDataFrame(
+        rows, "id_a long, id_b long, ta string, tb string, __k int") \
+        .withColumn("__L", F.greatest(F.length("ta"), F.length("tb"),
+                                      F.lit(1)))
+    out = dedup._edits_arrow_kernel(pairs)
+    out.collect()                      # warm the workers
+    t0 = time.perf_counter()
+    got = {r["id_a"]: r["__edits"] for r in out.collect()}
+    assert time.perf_counter() - t0 < 4.0
+    # over the band: the banded form reports -1, which the caller's
+    # edits >= 0 filter drops, as it drops the exact distance > k
+    assert got[1] == -1
+    for i, (a, b) in enumerate(short):
+        assert got[10 + i] == _levenshtein(a, b), (a, b)

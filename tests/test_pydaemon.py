@@ -98,6 +98,10 @@ def test_session_conf_selects_daemon_and_extra_conf_wins():
     stock = session_conf({"spark.python.daemon.module": "pyspark.daemon"})
     assert stock["spark.python.daemon.module"] == "pyspark.daemon"
     assert stock["spark.sql.session.timeZone"] == "UTC"
+    assert conf["spark.python.unix.domain.socket.enabled"] == "true"
+    tcp = session_conf({"spark.python.unix.domain.socket.enabled":
+                        "false"})
+    assert tcp["spark.python.unix.domain.socket.enabled"] == "false"
 
 
 def test_workers_run_under_the_daemon(spark):

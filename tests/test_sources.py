@@ -54,6 +54,160 @@ def test_parquet_roundtrip_partitioned(spark, orders, tmp_path):
     assert orig == rt
 
 
+def _fresh_schema(spark, store):
+    """The JSON of the schema Spark infers now, memo bypassed."""
+    return spark.read.parquet(store)._jdf.schema().json()
+
+
+def _scan_schema(spark, store):
+    return read_table(spark, store)._jdf.schema().json()
+
+
+def test_parquet_reread_starts_no_schema_job(spark, tmp_path):
+    """A second read of an unchanged local store starts no job before
+    its action, and gets the identical schema and rows."""
+    from tests.conftest import jobs_in
+
+    store = str(tmp_path / "t.parquet")
+    spark.range(0, 50, 1, 2).selectExpr(
+        "id", "CAST(id AS string) AS s", "array(id, id) AS a") \
+        .write.parquet(store)
+    first = read_table(spark, store)
+    again, n = jobs_in(spark, "reread", lambda: read_table(spark, store))
+    assert n == 0
+    assert again._jdf.schema().json() == _fresh_schema(spark, store)
+    assert sorted(again.collect()) == sorted(first.collect())
+    _, n = jobs_in(spark, "reread-xds",
+                   lambda: xds_from_parquet(spark, store + "/"))
+    assert n == 0
+
+
+def test_parquet_schema_memo_never_stale(spark, tmp_path):
+    """The memoised schema follows every change that alters what
+    Spark would infer: a rewrite, an appended file, a flipped
+    inference conf, new Hive partitions."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    # the same path rewritten with a different schema
+    store = str(tmp_path / "rw.parquet")
+    spark.range(5).selectExpr("id", "id * 2 AS v").write.parquet(store)
+    assert read_table(spark, store).columns == ["id", "v"]
+    spark.range(5).selectExpr("CAST(id AS string) AS w") \
+        .write.mode("overwrite").parquet(store)
+    assert _scan_schema(spark, store) == _fresh_schema(spark, store)
+    assert read_table(spark, store).columns == ["w"]
+
+    # a file appended (with schema merging on, it adds a column)
+    merge = "spark.sql.parquet.mergeSchema"
+    spark.conf.set(merge, "true")
+    try:
+        store = str(tmp_path / "app.parquet")
+        spark.range(5).selectExpr("id").write.parquet(store)
+        assert read_table(spark, store).columns == ["id"]
+        spark.range(5).selectExpr("id", "id AS extra") \
+            .write.mode("append").parquet(store)
+        assert _scan_schema(spark, store) == _fresh_schema(spark, store)
+        assert read_table(spark, store).columns == ["id", "extra"]
+        assert read_table(spark, store).count() == 10
+    finally:
+        spark.conf.unset(merge)
+
+    # binaryAsString flipped (a non-Spark writer: no Spark schema in
+    # the footer, so the conf decides the type)
+    store = str(tmp_path / "bin.parquet")
+    os.makedirs(store)
+    pq.write_table(pa.table({"b": pa.array([b"x", b"y"], pa.binary())}),
+                   os.path.join(store, "part-0.parquet"))
+    flag = "spark.sql.parquet.binaryAsString"
+    assert read_table(spark, store).schema["b"].dataType.simpleString() \
+        == "binary"
+    spark.conf.set(flag, "true")
+    try:
+        assert _scan_schema(spark, store) == _fresh_schema(spark, store)
+        assert read_table(spark, store).schema["b"].dataType \
+            .simpleString() == "string"
+    finally:
+        spark.conf.unset(flag)
+    assert read_table(spark, store).schema["b"].dataType.simpleString() \
+        == "binary"
+
+    # a Hive-partitioned store: partition column types are equal to a
+    # fresh read's, also after partitions are added and after type
+    # inference is switched off
+    store = str(tmp_path / "hive.parquet")
+    spark.range(6).selectExpr("id", "id % 2 AS p", "id % 3 AS q") \
+        .write.partitionBy("p", "q").parquet(store)
+    for _ in range(2):
+        df = read_table(spark, store)
+        assert df._jdf.schema().json() == _fresh_schema(spark, store)
+        assert [df.schema[c].dataType.simpleString() for c in "pq"] == \
+            ["int", "int"]
+    spark.range(6, 8).selectExpr("id", "id * 1.5 AS p", "id % 3 AS q") \
+        .write.mode("append").partitionBy("p", "q").parquet(store)
+    assert _scan_schema(spark, store) == _fresh_schema(spark, store)
+    assert read_table(spark, store).schema["p"].dataType \
+        .simpleString() == "double"
+    infer = "spark.sql.sources.partitionColumnTypeInference.enabled"
+    spark.conf.set(infer, "false")
+    try:
+        assert _scan_schema(spark, store) == _fresh_schema(spark, store)
+        assert read_table(spark, store).schema["q"].dataType \
+            .simpleString() == "string"
+    finally:
+        spark.conf.unset(infer)
+    assert read_table(spark, store).where("p = 1.0").count() == 3
+
+
+def test_parquet_schema_memo_shared_by_threads(spark, tmp_path,
+                                              monkeypatch):
+    """Driver threads reading through a memo smaller than the set of
+    stores always get each store's own schema, and the memo stays
+    within its bound."""
+    import random
+    import sys
+    import threading
+
+    from dask_ms_spark.sources import parquet
+
+    monkeypatch.setattr(parquet, "_MEMO_ENTRIES", 3)
+    stores = []
+    for i in range(6):
+        store = str(tmp_path / f"s{i}.parquet")
+        spark.range(3).selectExpr(*[f"id AS c{i}_{j}"
+                                    for j in range(i + 1)]) \
+            .write.parquet(store)
+        stores.append(store)
+    bad: list = []
+
+    def reader(seed):
+        rnd = random.Random(seed)
+        for _ in range(8):
+            i = rnd.randrange(len(stores))
+            try:
+                cols = read_table(spark, stores[i]).columns
+            except Exception as err:  # noqa: BLE001 - reported below
+                bad.append((i, err))
+                continue
+            if cols != [f"c{i}_{j}" for j in range(i + 1)]:
+                bad.append((i, cols))
+
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        threads = [threading.Thread(target=reader, args=(t,))
+                   for t in range(8)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=120)
+    finally:
+        sys.setswitchinterval(old)
+    assert not any(t.is_alive() for t in threads)
+    assert bad == []
+    assert len(parquet._SCHEMA_MEMO[spark]) <= 3
+
+
 def test_compact_parquet_shrinks_files_and_sorts(spark, orders,
                                                  tmp_path):
     from dask_ms_spark.sources.parquet import compact_parquet
