@@ -152,7 +152,13 @@ def _profile_grouping_sets(df: DataFrame, cols: list[str]) -> DataFrame:
             F.max(F.when(mine, F.col(c))).cast("string")
              .alias(f"__mx_{c}"),
         ]
-    wide = g.agg(*aggs)
+    return _long_format(g.agg(*aggs), cols)
+
+
+def _long_format(wide: DataFrame, cols: list[str]) -> DataFrame:
+    """Stack a one-row wide profile (``__nn_/__nd_/__mn_/__mx_<c>``)
+    into one ``(col_name, n_nulls, n_distinct, min_s, max_s)`` row per
+    column."""
     stacked = F.explode(F.array(*[
         F.struct(F.lit(c).alias("col_name"),
                  F.col(f"__nn_{c}").alias("n_nulls"),
@@ -188,8 +194,6 @@ def profile_table(df: DataFrame, columns: list[str] | None = None,
     ``(col_name, n_nulls, n_distinct, min_s, max_s)`` with min/max
     rendered to strings so mixed types share one schema.
     """
-    from pyspark.sql import functions as F
-
     cols = columns or [f.name for f in df.schema.fields]
     if not cols:
         raise ValueError("no columns to profile")
@@ -213,25 +217,15 @@ def profile_table(df: DataFrame, columns: list[str] | None = None,
             part = _profile_grouping_sets(df, batch)
             out = part if out is None else out.unionByName(part)
         return out
-    ndv = (F.countDistinct if exact_ndv
-           else lambda c: F.approx_count_distinct(c))
     aggs = []
     for c in cols:
         aggs += [
             F.sum(F.col(c).isNull().cast("long")).alias(f"__nn_{c}"),
-            ndv(F.col(c)).alias(f"__nd_{c}"),
+            F.approx_count_distinct(F.col(c)).alias(f"__nd_{c}"),
             F.min(F.col(c)).cast("string").alias(f"__mn_{c}"),
             F.max(F.col(c)).cast("string").alias(f"__mx_{c}"),
         ]
-    wide = df.agg(*aggs)
-    stacked = F.explode(F.array(*[
-        F.struct(F.lit(c).alias("col_name"),
-                 F.col(f"__nn_{c}").alias("n_nulls"),
-                 F.col(f"__nd_{c}").alias("n_distinct"),
-                 F.col(f"__mn_{c}").alias("min_s"),
-                 F.col(f"__mx_{c}").alias("max_s"))
-        for c in cols]))
-    return wide.select(stacked.alias("p")).select("p.*")
+    return _long_format(df.agg(*aggs), cols)
 
 
 def robust_stats(df, value_col: str, group_cols=None):

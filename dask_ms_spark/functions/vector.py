@@ -98,24 +98,31 @@ def masked_bin_average(vec: Column, mask: Column,
     # otherwise re-evaluate inside every bin's slice
     def run(v, m):
         nbins = F.ceil(F.size(v) / F.lit(bin_size)).cast("int")
-
-        def bin_avg(b):
-            start = b * bin_size + 1      # slice() is 1-based
-            vals = F.slice(v, start, bin_size)
-            kept = F.zip_with(vals, F.slice(m, start, bin_size),
-                              lambda x, mm: F.when(mm, x)
-                              .otherwise(F.lit(None)))
-            s = F.aggregate(kept, F.lit(0.0),
-                            lambda acc, x: acc
-                            + F.coalesce(x, F.lit(0.0)))
-            n = F.aggregate(kept, F.lit(0),
-                            lambda acc, x: acc
-                            + F.when(x.isNotNull(), 1).otherwise(0))
-            return F.when(n > 0, s / n).otherwise(F.lit(None))
-        return F.transform(F.sequence(F.lit(0), nbins - 1),
-                           lambda b: bin_avg(b))
+        return _masked_bin_means(v, m, nbins, bin_size)
 
     return _bind_once(run, v=vec, m=mask)
+
+
+def _masked_bin_means(v: Column, m: Column, nbins: Column,
+                      bin_size: int | Column) -> Column:
+    """The bin fold of :func:`masked_bin_average`: ``nbins`` bins of
+    ``bin_size`` elements (an int or a per-row Column), each the
+    left-to-right mean of its elements whose mask is true."""
+    def bin_avg(b):
+        start = b * bin_size + 1      # slice() is 1-based
+        vals = F.slice(v, start, bin_size)
+        kept = F.zip_with(vals, F.slice(m, start, bin_size),
+                          lambda x, mm: F.when(mm, x)
+                          .otherwise(F.lit(None)))
+        s = F.aggregate(kept, F.lit(0.0),
+                        lambda acc, x: acc
+                        + F.coalesce(x, F.lit(0.0)))
+        n = F.aggregate(kept, F.lit(0),
+                        lambda acc, x: acc
+                        + F.when(x.isNotNull(), 1).otherwise(0))
+        return F.when(n > 0, s / n).otherwise(F.lit(None))
+    return F.transform(F.sequence(F.lit(0), nbins - 1),
+                       lambda b: bin_avg(b))
 
 
 def weighted_bin_average(vec: Column, weights: Column,
@@ -141,6 +148,17 @@ def weighted_bin_average(vec: Column, weights: Column,
                            lambda b: bin_avg(b))
 
     return _bind_once(run, v=vec, w=weights)
+
+
+def _ls_sums(kept: Column) -> tuple[Column, Column, Column, Column]:
+    """(Σx, Σy, Σx², Σxy) over an array of (x, y) structs, each a
+    left-to-right ``aggregate`` fold (engine-portable order)."""
+    return (F.aggregate(kept, F.lit(0.0), lambda a, p: a + p["x"]),
+            F.aggregate(kept, F.lit(0.0), lambda a, p: a + p["y"]),
+            F.aggregate(kept, F.lit(0.0),
+                        lambda a, p: a + p["x"] * p["x"]),
+            F.aggregate(kept, F.lit(0.0),
+                        lambda a, p: a + p["x"] * p["y"]))
 
 
 def log_log_fit(vec: Column, xs: list[float],
@@ -175,12 +193,7 @@ def log_log_fit(vec: Column, xs: list[float],
     # re-evaluate for each of the five fold sums below
     def run(kept):
         n = F.size(kept)
-        sx = F.aggregate(kept, F.lit(0.0), lambda a, p: a + p["x"])
-        sy = F.aggregate(kept, F.lit(0.0), lambda a, p: a + p["y"])
-        sxx = F.aggregate(kept, F.lit(0.0),
-                          lambda a, p: a + p["x"] * p["x"])
-        sxy = F.aggregate(kept, F.lit(0.0),
-                          lambda a, p: a + p["x"] * p["y"])
+        sx, sy, sxx, sxy = _ls_sums(kept)
         denom = n * sxx - sx * sx
         alpha = F.when((n >= 2) & (denom != 0),
                        (n * sxy - sx * sy) / denom)
@@ -288,22 +301,7 @@ def masked_bin_average_dyn(vec: Column, mask: Column,
 
     def run(v, m):
         nbins = F.ceil(F.size(v) / guarded.cast("double")).cast("int")
-
-        def bin_avg(b):
-            start = b * guarded + 1
-            vals = F.slice(v, start, guarded)
-            kept = F.zip_with(vals, F.slice(m, start, guarded),
-                              lambda x, mm: F.when(mm, x)
-                              .otherwise(F.lit(None)))
-            s = F.aggregate(kept, F.lit(0.0),
-                            lambda acc, x: acc
-                            + F.coalesce(x, F.lit(0.0)))
-            n = F.aggregate(kept, F.lit(0),
-                            lambda acc, x: acc
-                            + F.when(x.isNotNull(), 1).otherwise(0))
-            return F.when(n > 0, s / n).otherwise(F.lit(None))
-        return F.transform(F.sequence(F.lit(0), nbins - 1),
-                           lambda b: bin_avg(b))
+        return _masked_bin_means(v, m, nbins, guarded)
 
     return _bind_once(run, v=vec, m=mask)
 
@@ -365,12 +363,7 @@ def uvcontsub(vec: Column, mask: Column | None = None) -> Column:
     def run(v, kept):
         idx = F.sequence(F.lit(0), F.size(v) - 1)
         n = F.size(kept).cast("double")
-        sx = F.aggregate(kept, F.lit(0.0), lambda a, p: a + p["x"])
-        sy = F.aggregate(kept, F.lit(0.0), lambda a, p: a + p["y"])
-        sxx = F.aggregate(kept, F.lit(0.0),
-                          lambda a, p: a + p["x"] * p["x"])
-        sxy = F.aggregate(kept, F.lit(0.0),
-                          lambda a, p: a + p["x"] * p["y"])
+        sx, sy, sxx, sxy = _ls_sums(kept)
         denom = n * sxx - sx * sx
         slope = F.when(denom != 0, (n * sxy - sx * sy) / denom) \
             .otherwise(F.lit(0.0))

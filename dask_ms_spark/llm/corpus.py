@@ -12,7 +12,7 @@ partial-merge map-side; shuffles carry (id, 8-byte hash) or
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..cache import scoped_persist
@@ -98,6 +98,21 @@ def dedup_paragraphs(docs: DataFrame, text_col: str = "text",
                     "n_paragraphs", "n_kept"))
 
 
+def _word_grams(toks: Column, n: int) -> Column:
+    """The space-joined word ``n``-grams of a token array, in order.
+
+    The token array binds ONCE: ``element_at`` over the tokenize
+    EXPRESSION inside the lambda would re-split the text per gram —
+    O(len^2), >120 s at 64 KB docs where the bound form takes ~2 s."""
+    def grams_of(tk):
+        return F.transform(
+            F.sequence(F.lit(1), F.size(tk) - F.lit(n - 1)),
+            lambda i: F.concat_ws(
+                " ", *[F.element_at(tk, i + j) for j in range(n)]))
+
+    return _bind_once(grams_of, tk=toks)
+
+
 def ngram_novelty(docs: DataFrame, text_col: str = "text",
                   id_col: str = "doc_id", n: int = 3,
                   reference: DataFrame | None = None) -> DataFrame:
@@ -127,20 +142,9 @@ def ngram_novelty(docs: DataFrame, text_col: str = "text",
         # gram STRINGS build inside the transform; the md5 hash runs
         # POST-explode so it stays in whole-stage codegen — hashing
         # inside the array lambda executes interpreted (the
-        # phrase_boilerplate discipline; review r8).  The token array
-        # binds ONCE (r11 audit: element_at over the tokenize
-        # EXPRESSION inside the lambda re-split the text per gram —
-        # O(len^2), >120 s at 64 KB docs where the bound form takes
-        # ~2 s; the word_shingles class)
+        # phrase_boilerplate discipline; review r8)
         toks = tokens(F.lower(F.col(text_col)))
-
-        def grams_of(tk):
-            return F.transform(
-                F.sequence(F.lit(1), F.size(tk) - F.lit(n - 1)),
-                lambda i: F.concat_ws(
-                    " ", *[F.element_at(tk, i + j) for j in range(n)]))
-
-        grams = _bind_once(grams_of, tk=toks)
+        grams = _word_grams(toks, n)
         return (frame.where(F.size(toks) >= n)
                 .select(F.col(id_col).alias("id"),
                         F.explode(F.array_distinct(grams))
@@ -308,18 +312,7 @@ def phrase_boilerplate(docs: DataFrame, text_col: str = "text",
     from pyspark.sql import Window
     toks = tokens(F.lower(F.col(text_col)))
     nt = F.size(toks)
-
-    # bind the token array ONCE (r11 audit: the element_at calls
-    # inside the lambda re-evaluated the tokenize expression per
-    # gram — O(len^2); this was also the suite's slowest query at
-    # sf0.1 for exactly that reason)
-    def grams_of(tk):
-        return F.transform(
-            F.sequence(F.lit(1), F.size(tk) - F.lit(n - 1)),
-            lambda i: F.concat_ws(
-                " ", *[F.element_at(tk, i + j) for j in range(n)]))
-
-    grams = _bind_once(grams_of, tk=toks)
+    grams = _word_grams(toks, n)
     pairs = (ensure_parallelism(docs.where(nt >= n))
              .select(F.col(id_col).alias("id"),
                      F.explode(grams).alias("gram"))

@@ -310,6 +310,18 @@ def _cap_buckets(banded: DataFrame, max_bucket_size: int | None
                        ["band_id", "band_hash"])
 
 
+def _rows_per_band(num_hashes: int, num_bands: int) -> int:
+    """Signature rows per LSH band; rejects a banding with none."""
+    rows_per_band = num_hashes // num_bands
+    if rows_per_band < 1:
+        raise ValueError(
+            f"num_bands ({num_bands}) > num_hashes ({num_hashes}): "
+            "rows_per_band would be 0 and EVERY document would "
+            "collide in every band — an all-pairs self-join; use "
+            "lsh_plan(threshold, num_hashes) to pick a banding")
+    return rows_per_band
+
+
 def _banded_table(sigged: DataFrame, num_bands: int,
                   rows_per_band: int,
                   max_bucket_size: int | None) -> DataFrame:
@@ -349,13 +361,7 @@ def minhash_lsh_pairs(docs: DataFrame, text_col: str = "text",
     :func:`_cap_buckets`) — set it (e.g. 500) on any corpus where
     many documents share templates.
     """
-    rows_per_band = num_hashes // num_bands
-    if rows_per_band < 1:
-        raise ValueError(
-            f"num_bands ({num_bands}) > num_hashes ({num_hashes}): "
-            "rows_per_band would be 0 and EVERY document would "
-            "collide in every band — an all-pairs self-join; use "
-            "lsh_plan(threshold, num_hashes) to pick a banding")
+    rows_per_band = _rows_per_band(num_hashes, num_bands)
     with_sig = scoped_persist(with_minhash(docs, text_col, id_col,
                                            num_hashes, shingle_k))
     # Band join and pair-dedup on ids ONLY; signatures re-attach to the
@@ -587,13 +593,7 @@ def lsh_jaccard_pairs(docs: DataFrame, text_col: str = "text",
     """
     import math
 
-    rows_per_band = num_hashes // num_bands
-    if rows_per_band < 1:
-        raise ValueError(
-            f"num_bands ({num_bands}) > num_hashes ({num_hashes}): "
-            "rows_per_band would be 0 and EVERY document would "
-            "collide in every band — an all-pairs self-join; use "
-            "lsh_plan(threshold, num_hashes) to pick a banding")
+    rows_per_band = _rows_per_band(num_hashes, num_bands)
     min_matches = math.ceil(max(threshold - prefilter_margin, 0.0)
                             * num_hashes)
     # The shingle-hash SET (int64s) replaces the string set for the

@@ -132,6 +132,19 @@ def binary_features(media: DataFrame) -> DataFrame:
                  .mapInPandas(compute, schema=_BINARY_FEATURE_SCHEMA))
 
 
+def _map_images(batches: Iterator[pd.DataFrame], fn,
+                columns: list[str]) -> Iterator[pd.DataFrame]:
+    """The image kernels' row loop: per Arrow batch, one output row
+    ``fn(media_id, px)`` per input row, ``px`` its payload decoded at
+    the metadata size (a missing width or height reads as 1)."""
+    for pdf in batches:
+        yield pd.DataFrame(
+            [fn(row.media_id,
+                _decode_image_stub(row.payload or b"", int(row.width or 1),
+                                   int(row.height or 1)))
+             for row in pdf.itertuples(index=False)], columns=columns)
+
+
 _FEATURE_SCHEMA = ("media_id long, mean_px double, std_px double, "
                    "n_px long")
 
@@ -146,16 +159,10 @@ def decode_image_features(media: DataFrame) -> DataFrame:
     """
 
     def compute(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for row in pdf.itertuples(index=False):
-                px = _decode_image_stub(row.payload or b"",
-                                        int(row.width or 1),
-                                        int(row.height or 1))
-                out.append((row.media_id, float(px.mean()),
-                            float(px.std()), int(px.size)))
-            yield pd.DataFrame(out, columns=["media_id", "mean_px",
-                                             "std_px", "n_px"])
+        return _map_images(
+            batches, lambda mid, px: (mid, float(px.mean()),
+                                      float(px.std()), int(px.size)),
+            ["media_id", "mean_px", "std_px", "n_px"])
 
     return (media.select("media_id", "width", "height", "payload")
                  .mapInPandas(compute, schema=_FEATURE_SCHEMA))
@@ -178,23 +185,18 @@ def resize_images(media: DataFrame, out_width: int = 32,
     the property that keeps executor memory flat on mixed-size corpora.
     """
 
+    def resize(media_id, px):
+        # index with the DECODED raster's own shape, not the metadata
+        # dims: a real PIL decode whose size disagrees with the
+        # metadata would otherwise IndexError (image_dhash does too)
+        ys = (np.arange(out_height) * px.shape[0]) // out_height
+        xs = (np.arange(out_width) * px.shape[1]) // out_width
+        return (media_id, out_width, out_height,
+                px[np.ix_(ys, xs)].tobytes())
+
     def compute(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for row in pdf.itertuples(index=False):
-                h, w = int(row.height or 1), int(row.width or 1)
-                px = _decode_image_stub(row.payload or b"", w, h)
-                # index with the DECODED raster's own shape, not the
-                # metadata dims: a real PIL decode whose size disagrees
-                # with the metadata would otherwise IndexError
-                # (review r9; image_dhash already does this)
-                ys = (np.arange(out_height) * px.shape[0]) // out_height
-                xs = (np.arange(out_width) * px.shape[1]) // out_width
-                resized = px[np.ix_(ys, xs)]
-                out.append((row.media_id, out_width, out_height,
-                            resized.tobytes()))
-            yield pd.DataFrame(out, columns=["media_id", "width",
-                                             "height", "payload"])
+        return _map_images(batches, resize,
+                           ["media_id", "width", "height", "payload"])
 
     return (media.where(F.col("kind") == "image")
                  .select("media_id", "width", "height", "payload")
@@ -295,23 +297,19 @@ def image_dhash(media: DataFrame, rows: int = 7, cols: int = 9) -> DataFrame:
         raise ValueError(f"image_dhash: rows*cols must be in [1, 63] "
                          f"to fit a signed bigint, got {rows}x{cols}")
 
+    def dhash(media_id, px):
+        if px.ndim == 3:  # RGB(A) from a real decode
+            px = px[..., :3].mean(axis=2)
+        ys = (np.arange(rows) * px.shape[0]) // rows
+        xs = (np.arange(cols + 1) * px.shape[1]) // (cols + 1)
+        grid = px[np.ix_(ys, xs)].astype(np.int64)
+        bits = (grid[:, :-1] < grid[:, 1:]).astype(np.int64)
+        weights = (np.int64(1)
+                   << np.arange(rows * cols, dtype=np.int64))
+        return (media_id, int((bits.reshape(-1) * weights).sum()))
+
     def compute(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for row in pdf.itertuples(index=False):
-                h, w = int(row.height or 1), int(row.width or 1)
-                px = _decode_image_stub(row.payload or b"", w, h)
-                if px.ndim == 3:  # RGB(A) from a real decode
-                    px = px[..., :3].mean(axis=2)
-                ys = (np.arange(rows) * px.shape[0]) // rows
-                xs = (np.arange(cols + 1) * px.shape[1]) // (cols + 1)
-                grid = px[np.ix_(ys, xs)].astype(np.int64)
-                bits = (grid[:, :-1] < grid[:, 1:]).astype(np.int64)
-                weights = (np.int64(1)
-                           << np.arange(rows * cols, dtype=np.int64))
-                out.append((row.media_id,
-                            int((bits.reshape(-1) * weights).sum())))
-            yield pd.DataFrame(out, columns=["media_id", "dhash"])
+        return _map_images(batches, dhash, ["media_id", "dhash"])
 
     return (media.select("media_id", "width", "height", "payload")
                  .mapInPandas(compute, schema="media_id long, dhash long"))

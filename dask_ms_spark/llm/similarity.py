@@ -349,14 +349,16 @@ def ivf_query_indexed(spark, path: str, queries: DataFrame, k: int = 10,
     exact cosine within probed cells."""
     import os
 
-    cents = spark.read.parquet(os.path.join(path, "centroids"))
+    from ..sources.parquet import scan_parquet
+
+    cents = scan_parquet(spark, os.path.join(path, "centroids"))
     probes = ivf_assign(queries, cents, query_id, query_vec,
                         nprobe=nprobe) \
         .select(F.col("id").alias("query_id"),
                 F.col("vec").alias("qvec"), "cell")
     probes = probes.localCheckpoint(eager=False)
     needed = [r.cell for r in probes.select("cell").distinct().collect()]
-    corpus = (spark.read.parquet(os.path.join(path, "cells"))
+    corpus = (scan_parquet(spark, os.path.join(path, "cells"))
               .where(F.col("cell").isin(needed))
               .select(F.col("id").alias("neighbor_id"),
                       F.col("vec").alias("cvec2"), "cell"))
@@ -398,6 +400,72 @@ def _subvectors(df: DataFrame, id_col: str, vec_col: str, dim: int,
             .select("id", "m",
                     F.slice(F.col("v"), F.col("m") * sub + 1,
                             sub).alias("sv")))
+
+
+def _pq_lut(queries: DataFrame, query_id: str, query_vec: str,
+            codebooks: DataFrame, dim: int, num_sub: int,
+            scale: int) -> DataFrame:
+    """(query_id, lut): per query, ``lut[m][k]`` is the fixed-point
+    l2² between the query's m-th subvector and centroid k — the
+    codebook join is broadcast, two sorted ``collect_list`` folds
+    assemble the rows, then the table."""
+    qsv = _subvectors(queries, query_id, query_vec, dim, num_sub)
+    pd_rows = (qsv.join(F.broadcast(codebooks), on="m")
+               .select(F.col("id").alias("query_id"), "m", "k",
+                       _l2sq_fixed(F.col("sv"), F.col("cv"),
+                                   scale).alias("pd")))
+    return (pd_rows.groupBy("query_id", "m")
+            .agg(F.transform(
+                F.array_sort(F.collect_list(F.struct("k", "pd"))),
+                lambda s: s["pd"]).alias("lrow"))
+            .groupBy("query_id")
+            .agg(F.transform(
+                F.array_sort(F.collect_list(F.struct("m", "lrow"))),
+                lambda s: s["lrow"]).alias("lut")))
+
+
+def _adc_ranked(pairs: DataFrame) -> DataFrame:
+    """Rank (query_id, neighbor_id, codes, lut) pairs by asymmetric
+    distance ``approx_d = Σ_m lut[m][codes[m]]`` (ties by neighbour
+    id), self-pairs dropped: (query_id, neighbor_id, approx_d, rank)."""
+    scored = (pairs.where(F.col("query_id") != F.col("neighbor_id"))
+              .select("query_id", "neighbor_id",
+                      F.aggregate(
+                          F.zip_with("codes", "lut",
+                                     lambda c, row: F.element_at(
+                                         row, c.cast("int") + 1)),
+                          F.lit(0).cast("long"),
+                          lambda acc, t: acc + t).alias("approx_d")))
+    w = Window.partitionBy("query_id").orderBy(
+        F.col("approx_d").asc(), F.col("neighbor_id").asc())
+    return scored.withColumn("rank", F.row_number().over(w))
+
+
+def _rerank_exact(ranked: DataFrame, k: int, rerank: int,
+                  corpus: DataFrame, corpus_id: str, corpus_vec: str,
+                  queries: DataFrame, query_id: str,
+                  query_vec: str) -> DataFrame:
+    """Top-k of ``ranked``; with ``rerank > 0``, the exact-cosine
+    top-k of its top-``rerank`` candidates per query (adds cos_sim)."""
+    if not rerank:
+        return ranked.where(F.col("rank") <= k)
+    cand = ranked.where(F.col("rank") <= rerank).drop("rank")
+    qv = queries.select(F.col(query_id).alias("query_id"),
+                        F.col(query_vec).alias("qvec"))
+    cv = corpus.select(F.col(corpus_id).alias("neighbor_id"),
+                       F.col(corpus_vec).alias("cvec"))
+    # candidates are |queries| * rerank rows — broadcast THEM against
+    # the corpus so the raw-vector table never shuffles for rerank
+    exact = (cv.join(F.broadcast(cand.join(F.broadcast(qv),
+                                           on="query_id")),
+                     on="neighbor_id")
+             .select("query_id", "neighbor_id", "approx_d",
+                     cosine(F.col("qvec"), F.col("cvec"))
+                     .alias("cos_sim")))
+    w = Window.partitionBy("query_id").orderBy(
+        F.col("cos_sim").desc(), F.col("neighbor_id").asc())
+    return (exact.withColumn("rank", F.row_number().over(w))
+                 .where(F.col("rank") <= k))
 
 
 def pq_codebooks(corpus: DataFrame, dim: int, num_sub: int = 8,
@@ -483,51 +551,11 @@ def pq_topk(corpus: DataFrame, queries: DataFrame, dim: int,
                        corpus_id, corpus_vec)
     codes = pq_encode(corpus, cbs, dim, num_sub, corpus_id,
                       corpus_vec, scale)
-    qsv = _subvectors(queries, query_id, query_vec, dim, num_sub)
-    pd_rows = (qsv.join(F.broadcast(cbs), on="m")
-               .select(F.col("id").alias("query_id"), "m", "k",
-                       _l2sq_fixed(F.col("sv"), F.col("cv"),
-                                   scale).alias("pd")))
-    lut_m = (pd_rows.groupBy("query_id", "m")
-             .agg(F.transform(
-                 F.array_sort(F.collect_list(F.struct("k", "pd"))),
-                 lambda s: s["pd"]).alias("lrow")))
-    lut = (lut_m.groupBy("query_id")
-           .agg(F.transform(
-               F.array_sort(F.collect_list(F.struct("m", "lrow"))),
-               lambda s: s["lrow"]).alias("lut")))
-    scored = (codes.withColumnRenamed("id", "neighbor_id")
-              .crossJoin(F.broadcast(lut))
-              .where(F.col("query_id") != F.col("neighbor_id"))
-              .select("query_id", "neighbor_id",
-                      F.aggregate(
-                          F.zip_with("codes", "lut",
-                                     lambda c, row: F.element_at(
-                                         row, c.cast("int") + 1)),
-                          F.lit(0).cast("long"),
-                          lambda acc, t: acc + t).alias("approx_d")))
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("approx_d").asc(), F.col("neighbor_id").asc())
-    ranked = scored.withColumn("rank", F.row_number().over(w))
-    if not rerank:
-        return ranked.where(F.col("rank") <= k)
-    cand = ranked.where(F.col("rank") <= rerank).drop("rank")
-    qv = queries.select(F.col(query_id).alias("query_id"),
-                        F.col(query_vec).alias("qvec"))
-    cv = corpus.select(F.col(corpus_id).alias("neighbor_id"),
-                       F.col(corpus_vec).alias("cvec"))
-    # candidates are |queries| * rerank rows — broadcast THEM against
-    # the corpus so the raw-vector table never shuffles for rerank
-    exact = (cv.join(F.broadcast(cand.join(F.broadcast(qv),
-                                           on="query_id")),
-                     on="neighbor_id")
-             .select("query_id", "neighbor_id", "approx_d",
-                     cosine(F.col("qvec"), F.col("cvec"))
-                     .alias("cos_sim")))
-    w2 = Window.partitionBy("query_id").orderBy(
-        F.col("cos_sim").desc(), F.col("neighbor_id").asc())
-    return (exact.withColumn("rank", F.row_number().over(w2))
-                 .where(F.col("rank") <= k))
+    lut = _pq_lut(queries, query_id, query_vec, cbs, dim, num_sub, scale)
+    ranked = _adc_ranked(codes.withColumnRenamed("id", "neighbor_id")
+                         .crossJoin(F.broadcast(lut)))
+    return _rerank_exact(ranked, k, rerank, corpus, corpus_id, corpus_vec,
+                         queries, query_id, query_vec)
 
 
 def build_pq_index(embs: DataFrame, path: str, dim: int,
@@ -563,35 +591,14 @@ def pq_query_indexed(spark, path: str, queries: DataFrame, dim: int,
     the query set against the stored codebooks map-side."""
     import os
 
-    cbs = spark.read.parquet(os.path.join(path, "codebooks"))
-    codes = spark.read.parquet(os.path.join(path, "codes"))
-    qsv = _subvectors(queries, query_id, query_vec, dim, num_sub)
-    pd_rows = (qsv.join(F.broadcast(cbs), on="m")
-               .select(F.col("id").alias("query_id"), "m", "k",
-                       _l2sq_fixed(F.col("sv"), F.col("cv"),
-                                   scale).alias("pd")))
-    lut_m = (pd_rows.groupBy("query_id", "m")
-             .agg(F.transform(
-                 F.array_sort(F.collect_list(F.struct("k", "pd"))),
-                 lambda s: s["pd"]).alias("lrow")))
-    lut = (lut_m.groupBy("query_id")
-           .agg(F.transform(
-               F.array_sort(F.collect_list(F.struct("m", "lrow"))),
-               lambda s: s["lrow"]).alias("lut")))
-    scored = (codes.withColumnRenamed("id", "neighbor_id")
-              .crossJoin(F.broadcast(lut))
-              .where(F.col("query_id") != F.col("neighbor_id"))
-              .select("query_id", "neighbor_id",
-                      F.aggregate(
-                          F.zip_with("codes", "lut",
-                                     lambda c, row: F.element_at(
-                                         row, c.cast("int") + 1)),
-                          F.lit(0).cast("long"),
-                          lambda acc, t: acc + t).alias("approx_d")))
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("approx_d").asc(), F.col("neighbor_id").asc())
-    return (scored.withColumn("rank", F.row_number().over(w))
-                  .where(F.col("rank") <= k))
+    from ..sources.parquet import scan_parquet
+
+    cbs = scan_parquet(spark, os.path.join(path, "codebooks"))
+    codes = scan_parquet(spark, os.path.join(path, "codes"))
+    lut = _pq_lut(queries, query_id, query_vec, cbs, dim, num_sub, scale)
+    ranked = _adc_ranked(codes.withColumnRenamed("id", "neighbor_id")
+                         .crossJoin(F.broadcast(lut)))
+    return ranked.where(F.col("rank") <= k)
 
 
 def ivfpq_topk(corpus: DataFrame, queries: DataFrame, dim: int,
@@ -634,47 +641,8 @@ def ivfpq_topk(corpus: DataFrame, queries: DataFrame, dim: int,
     probes = ivf_assign(queries, cents, query_id, query_vec,
                         nprobe=nprobe) \
         .select(F.col("id").alias("query_id"), "cell")
-    qsv = _subvectors(queries, query_id, query_vec, dim, num_sub)
-    pd_rows = (qsv.join(F.broadcast(cbs), on="m")
-               .select(F.col("id").alias("query_id"), "m", "k",
-                       _l2sq_fixed(F.col("sv"), F.col("cv"),
-                                   scale).alias("pd")))
-    lut = (pd_rows.groupBy("query_id", "m")
-           .agg(F.transform(
-               F.array_sort(F.collect_list(F.struct("k", "pd"))),
-               lambda s: s["pd"]).alias("lrow"))
-           .groupBy("query_id")
-           .agg(F.transform(
-               F.array_sort(F.collect_list(F.struct("m", "lrow"))),
-               lambda s: s["lrow"]).alias("lut")))
+    lut = _pq_lut(queries, query_id, query_vec, cbs, dim, num_sub, scale)
     probelut = probes.join(F.broadcast(lut), on="query_id")
-
-    scored = (cellcodes.join(F.broadcast(probelut), on="cell")
-              .where(F.col("query_id") != F.col("neighbor_id"))
-              .select("query_id", "neighbor_id",
-                      F.aggregate(
-                          F.zip_with("codes", "lut",
-                                     lambda c, row: F.element_at(
-                                         row, c.cast("int") + 1)),
-                          F.lit(0).cast("long"),
-                          lambda acc, t: acc + t).alias("approx_d")))
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("approx_d").asc(), F.col("neighbor_id").asc())
-    ranked = scored.withColumn("rank", F.row_number().over(w))
-    if not rerank:
-        return ranked.where(F.col("rank") <= k)
-    cand = ranked.where(F.col("rank") <= rerank).drop("rank")
-    qv = queries.select(F.col(query_id).alias("query_id"),
-                        F.col(query_vec).alias("qvec"))
-    cv = corpus.select(F.col(corpus_id).alias("neighbor_id"),
-                       F.col(corpus_vec).alias("cvec2"))
-    exact = (cv.join(F.broadcast(cand.join(F.broadcast(qv),
-                                           on="query_id")),
-                     on="neighbor_id")
-             .select("query_id", "neighbor_id", "approx_d",
-                     cosine(F.col("qvec"), F.col("cvec2"))
-                     .alias("cos_sim")))
-    w2 = Window.partitionBy("query_id").orderBy(
-        F.col("cos_sim").desc(), F.col("neighbor_id").asc())
-    return (exact.withColumn("rank", F.row_number().over(w2))
-                 .where(F.col("rank") <= k))
+    ranked = _adc_ranked(cellcodes.join(F.broadcast(probelut), on="cell"))
+    return _rerank_exact(ranked, k, rerank, corpus, corpus_id, corpus_vec,
+                         queries, query_id, query_vec)

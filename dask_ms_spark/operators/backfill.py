@@ -27,8 +27,10 @@ from __future__ import annotations
 
 import os
 import re
+from concurrent.futures import FIRST_COMPLETED, ThreadPoolExecutor, wait
 from typing import Callable, Sequence
 
+from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame
 
 __all__ = ["backfill", "completed_partitions", "read_backfill"]
@@ -70,13 +72,14 @@ def backfill(spark, partitions: Sequence[str],
     submitting after ``max_failures`` failures (0 = stop at first);
     in-flight partitions finish and commit.
 
-    ``max_concurrent > 1`` drives that many partition JOBS through
-    the SparkSession at once (Spark's scheduler interleaves jobs
-    freely; the commit protocol is already per-partition-atomic, so
-    concurrency changes throughput, not semantics).  Use it when one
-    partition's job cannot saturate the cluster — e.g. many small
-    historical days — and leave it at 1 when each partition already
-    fills the executors.
+    ``max_concurrent`` partition JOBS run through the SparkSession at
+    once, from a pool of that many driver threads (Spark's scheduler
+    interleaves jobs freely; the commit protocol is already
+    per-partition-atomic, so concurrency changes throughput, not
+    semantics).  Raise it when one partition's job cannot saturate the
+    cluster — e.g. many small historical days — and leave it at 1 when
+    each partition already fills the executors.  Every partition job
+    runs under the caller's job group and description.
     """
     # two labels must not share one sanitised key ("a/b" vs "a_b"):
     # the second would silently skip as already-committed (review r9)
@@ -109,41 +112,30 @@ def backfill(spark, partitions: Sequence[str],
         os.replace(tmp, os.path.join(store, "_done", key))
         return "done"
 
-    if max_concurrent <= 1:
-        failures = 0
-        for part in todo:
-            try:
-                status[part] = run_one(part)
-            except Exception as exc:  # noqa: BLE001 - isolation
-                status[part] = f"failed: {exc}"
-                failures += 1
-                if failures > max_failures:
+    # the caller's local properties (job group, description, pool)
+    # reach every partition job, whichever pool thread runs it
+    target = inheritable_thread_target(run_one)
+    workers = max(1, max_concurrent)
+    failures = 0
+    with ThreadPoolExecutor(max_workers=workers) as pool:
+        pending = {}
+        it = iter(todo)
+        active = True
+        while pending or active:
+            while active and len(pending) < workers:
+                nxt = next(it, None)
+                if nxt is None or failures > max_failures:
+                    active = False
                     break
-    else:
-        from concurrent.futures import ThreadPoolExecutor
-
-        failures = 0
-        with ThreadPoolExecutor(max_workers=max_concurrent) as pool:
-            pending = {}
-            it = iter(todo)
-            active = True
-            while pending or active:
-                while active and len(pending) < max_concurrent:
-                    nxt = next(it, None)
-                    if nxt is None or failures > max_failures:
-                        active = False
-                        break
-                    pending[pool.submit(run_one, nxt)] = nxt
-                if not pending:
-                    break
-                from concurrent.futures import FIRST_COMPLETED, wait
-
-                ready, _ = wait(pending, return_when=FIRST_COMPLETED)
-                for fut in ready:
-                    part = pending.pop(fut)
-                    try:
-                        status[part] = fut.result()
-                    except Exception as exc:  # noqa: BLE001
-                        status[part] = f"failed: {exc}"
-                        failures += 1
+                pending[pool.submit(target, nxt)] = nxt
+            if not pending:
+                break
+            ready, _ = wait(pending, return_when=FIRST_COMPLETED)
+            for fut in ready:
+                part = pending.pop(fut)
+                try:
+                    status[part] = fut.result()
+                except Exception as exc:  # noqa: BLE001 - isolation
+                    status[part] = f"failed: {exc}"
+                    failures += 1
     return [(p, status[p]) for p in partitions if p in status]

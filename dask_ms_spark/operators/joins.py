@@ -128,6 +128,18 @@ def asof_join(left: DataFrame, right: DataFrame, on: str = "ts",
     return out.drop("__asof_match")
 
 
+def _as_seconds(df: DataFrame, colname: str):
+    """``colname`` as double epoch seconds for the bucketed joins."""
+    # timestamps (incl. _ntz) won't cast to double directly
+    t = dict(df.dtypes)[colname]
+    c = F.col(colname)
+    if t.startswith("timestamp"):
+        return F.unix_micros(c.cast("timestamp")).cast("double") / 1e6
+    if t == "date":
+        return F.unix_date(c).cast("double") * 86_400.0
+    return c.cast("double")
+
+
 def range_join(left: DataFrame, right: DataFrame, point: str,
                start: str, end: str, by: str | Sequence[str] = (),
                bucket_width: float = 86_400.0) -> DataFrame:
@@ -150,20 +162,10 @@ def range_join(left: DataFrame, right: DataFrame, point: str,
     positives to filter.  ``point``/``start``/``end`` must be distinct
     column names across the two frames.  Inner-join semantics.
     """
-    def as_seconds(df: DataFrame, colname: str):
-        # timestamps (incl. _ntz) won't cast to double directly
-        t = dict(df.dtypes)[colname]
-        c = F.col(colname)
-        if t.startswith("timestamp"):
-            return F.unix_micros(c.cast("timestamp")).cast("double") / 1e6
-        if t == "date":
-            return F.unix_date(c).cast("double") * 86_400.0
-        return c.cast("double")
-
     bys = [by] if isinstance(by, str) else list(by)
     w = float(bucket_width)
-    p, s, e = (as_seconds(left, point), as_seconds(right, start),
-               as_seconds(right, end))
+    p, s, e = (_as_seconds(left, point), _as_seconds(right, start),
+               _as_seconds(right, end))
     lb = left.withColumn("__rj_b", F.floor(p / F.lit(w)))
     rb = right.withColumn(
         "__rj_b",
@@ -197,19 +199,10 @@ def interval_overlap_join(left: DataFrame, right: DataFrame,
     have distinct names across the frames; bounds are coerced to epoch
     seconds the same way as :func:`range_join`.  Inner-join semantics.
     """
-    def as_seconds(df: DataFrame, colname: str):
-        t = dict(df.dtypes)[colname]
-        c = F.col(colname)
-        if t.startswith("timestamp"):
-            return F.unix_micros(c.cast("timestamp")).cast("double") / 1e6
-        if t == "date":
-            return F.unix_date(c).cast("double") * 86_400.0
-        return c.cast("double")
-
     bys = [by] if isinstance(by, str) else list(by)
     w = float(bucket_width)
-    ls, le = as_seconds(left, l_start), as_seconds(left, l_end)
-    rs, re_ = as_seconds(right, r_start), as_seconds(right, r_end)
+    ls, le = _as_seconds(left, l_start), _as_seconds(left, l_end)
+    rs, re_ = _as_seconds(right, r_start), _as_seconds(right, r_end)
     lb = left.withColumn(
         "__ij_b",
         F.explode(F.sequence(F.floor(ls / F.lit(w)),

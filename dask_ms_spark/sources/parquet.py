@@ -11,11 +11,15 @@ partition discovery + pruning, ``df.write.partitionBy(...).parquet``
 produces the identical Hive layout.  What remains is the dataset-list
 facade and the partition-key round trip (G3).
 
-Every read of a parquet store goes through :func:`scan_parquet`, which
-holds the reference's open-once table handle
-(daskms/table_proxy.py:146-169) in Spark terms: an unchanged local
-store is opened with the schema Spark inferred the first time, so a
-re-read starts no schema-inference job.
+:func:`scan_parquet` reads ONE path and holds the reference's
+open-once table handle (daskms/table_proxy.py:146-169) in Spark terms:
+an unchanged local store is opened with the schema Spark inferred the
+first time, so a re-read starts no schema-inference job.  A URI or a
+glob reads as plain ``spark.read.parquet``.  Multi-path reads
+(``spark.read.parquet(*dirs)`` over committed version dirs, as in
+``streaming.maintenance.read_join_view`` and
+``operators.backfill.read_backfill``) do not go through it and infer
+their schema on every call.
 """
 
 from __future__ import annotations

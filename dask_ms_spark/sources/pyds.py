@@ -53,7 +53,8 @@ from pyspark.sql.types import (ArrayType, LongType, StructField,
                                StructType)
 
 from ..types import ROWID
-from .zarr import _group_dirs, _np_to_spark, _read_cell_chunks, _read_json
+from .zarr import (_group_dirs, _load_arrays, _native, _np_to_spark,
+                   _read_cell_chunks)
 
 __all__ = ["ZarrDataSource", "CasaDataSource", "register_python_sources"]
 
@@ -75,36 +76,6 @@ def _resolve_group(path: str, group: str | None) -> str:
     if group not in groups:
         raise KeyError(f"group {group!r} not in {groups}")
     return os.path.join(path, group)
-
-
-def _load_arrays(group_dir: str, columns: list[str] | None) -> dict:
-    arrays = {}
-    for name in sorted(os.listdir(group_dir)):
-        zpath = os.path.join(group_dir, name, ".zarray")
-        if os.path.exists(zpath):
-            arrays[name] = _read_json(zpath)
-    if columns is not None:
-        missing = set(columns) - set(arrays)
-        if missing:
-            raise KeyError(f"columns not in store: {sorted(missing)}")
-        arrays = {c: arrays[c] for c in columns}
-    if not arrays:
-        raise ValueError(f"no zarr arrays under {group_dir}")
-    def _native(z: dict) -> bool:
-        comp = z.get("compressor")
-        if z.get("filters") not in (None, []):
-            return False
-        # _read_cell_chunks decodes zlib/gzip codecs with stdlib
-        return comp is None or (isinstance(comp, dict)
-                                and comp.get("id") in ("zlib", "gzip"))
-
-    compressed = [c for c, z in arrays.items() if not _native(z)]
-    if compressed:
-        raise NotImplementedError(
-            f"arrays {compressed[:3]} use non-native codecs/filters — "
-            "use the zarr package path (xds_from_zarr) or parquet "
-            "conversion")
-    return arrays
 
 
 @dataclass
@@ -180,6 +151,12 @@ class ZarrReader(_RowidChunkPruning, DataSourceReader):
                  rowid_max: int | None = None):
         self.group_dir = _resolve_group(path, group)
         self.arrays = _load_arrays(self.group_dir, columns)
+        compressed = [c for c, z in self.arrays.items() if not _native(z)]
+        if compressed:
+            raise NotImplementedError(
+                f"arrays {compressed[:3]} use non-native codecs/filters — "
+                "use the zarr package path (xds_from_zarr) or parquet "
+                "conversion")
         shapes = {c: z["shape"] for c, z in self.arrays.items()}
         nrows = {s[0] for s in shapes.values()}
         if len(nrows) != 1:

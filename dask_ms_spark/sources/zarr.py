@@ -697,15 +697,9 @@ def _arrow_column(arr: "np.ndarray", typ) -> "pa.Array":
         offsets, pa.array(arr.reshape(-1), type=typ.value_type), type=typ)
 
 
-def _read_group(spark: SparkSession, group_dir: str,
-                columns: Iterable[str] | None = None,
-                slices: dict | None = None) -> Dataset:
-    attrs_path = os.path.join(group_dir, ".zattrs")
-    attrs = _read_json(attrs_path) if os.path.exists(attrs_path) else {}
-    if PARTITION_KEY in attrs:
-        attrs[PARTITION_KEY] = tuple(
-            tuple(p) for p in attrs[PARTITION_KEY])
-
+def _load_arrays(group_dir: str, columns: Iterable[str] | None) -> dict:
+    """``{name: .zarray metadata}`` of the group's arrays, restricted
+    to ``columns`` (in that order) when given."""
     arrays = {}
     for name in sorted(os.listdir(group_dir)):
         zpath = os.path.join(group_dir, name, ".zarray")
@@ -718,6 +712,28 @@ def _read_group(spark: SparkSession, group_dir: str,
         arrays = {c: arrays[c] for c in columns}
     if not arrays:
         raise ValueError(f"no zarr arrays under {group_dir}")
+    return arrays
+
+
+def _native(z: dict) -> bool:
+    """True when :func:`_read_cell_chunks` decodes the array itself: no
+    filters, and uncompressed or a stdlib-decodable codec (numcodecs
+    zlib, a raw stream, or gzip, framed)."""
+    comp = z.get("compressor")
+    return z.get("filters") in (None, []) and (comp is None or (
+        isinstance(comp, dict) and comp.get("id") in ("zlib", "gzip")))
+
+
+def _read_group(spark: SparkSession, group_dir: str,
+                columns: Iterable[str] | None = None,
+                slices: dict | None = None) -> Dataset:
+    attrs_path = os.path.join(group_dir, ".zattrs")
+    attrs = _read_json(attrs_path) if os.path.exists(attrs_path) else {}
+    if PARTITION_KEY in attrs:
+        attrs[PARTITION_KEY] = tuple(
+            tuple(p) for p in attrs[PARTITION_KEY])
+
+    arrays = _load_arrays(group_dir, columns)
     slices = dict(slices or {})
     bad = set(slices) - set(arrays)
     if bad:
@@ -729,13 +745,6 @@ def _read_group(spark: SparkSession, group_dir: str,
                 f"column {c} is scalar; slices apply to tensor "
                 "columns only")
         slabs[c] = _cell_slab(arrays[c]["shape"][1:], tuple(sl))
-
-    def _native(z: dict) -> bool:
-        # no filters, and uncompressed or a stdlib-decodable codec:
-        # numcodecs zlib (raw stream) / gzip (framed)
-        comp = z.get("compressor")
-        return z.get("filters") in (None, []) and (comp is None or (
-            isinstance(comp, dict) and comp.get("id") in ("zlib", "gzip")))
 
     compressed = [c for c, z in arrays.items() if not _native(z)]
     if compressed and not HAVE_ZARR:

@@ -36,6 +36,10 @@ merge base + committed deltas, and a compaction folds the log into a
 new base snapshot every ``compact_every`` batches — per-batch cost is
 independent of history size, and every step is idempotent under
 replay (a re-run batch overwrites its own delta dir and re-renames).
+It is :func:`maintain_mergeable` with ``merge=merge_rollups`` and the
+same per-batch rollup delta :func:`maintain_rollup` merges, and
+:func:`read_rollup_log` is :func:`read_mergeable` over
+``merge_rollups``.
 """
 
 from __future__ import annotations
@@ -43,6 +47,7 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 
 from ..operators.timeseries import (DEFAULT_ORIGIN, bucket_aggregate,
                                     merge_rollups)
@@ -96,24 +101,13 @@ def _publish(store: str, batch_id: int, keep: int = 2) -> None:
                           ignore_errors=True)
 
 
-def maintain_rollup(stream_df: DataFrame, store: str,
-                    ts_col: str = "ts", key_col: str = "user_id",
-                    value_col: str = "value", step_seconds: int = 3600,
-                    origin: str = DEFAULT_ORIGIN,
-                    value_cast: str | None = None,
-                    checkpoint: str | None = None):
-    """Start the maintenance query; returns the StreamingQuery.
-
-    ``value_cast`` (e.g. ``"decimal(18,2)"``) makes the running sums
-    order-independent and hence bit-identical to a batch re-aggregate
-    — pass it whenever exact parity matters.
-    """
-    from pyspark.sql import functions as F
-
-    os.makedirs(store, exist_ok=True)
+def _guard_identity(store: str, checkpoint: str | None,
+                    has_state: bool) -> None:
+    """Record the checkpoint identity on an empty store; refuse to
+    attach a different (or missing) checkpoint to a store with state."""
     ident_file = os.path.join(store, ".stream_identity")
     ident = os.path.abspath(checkpoint) if checkpoint else None
-    if committed_batch(store) is not None:
+    if has_state:
         recorded = (open(ident_file).read()
                     if os.path.exists(ident_file) else None)
         if ident is None or recorded != ident:
@@ -127,27 +121,58 @@ def maintain_rollup(stream_df: DataFrame, store: str,
         with open(ident_file, "w") as fh:
             fh.write(ident)
 
-    def apply(batch_df: DataFrame, batch_id: int) -> None:
-        committed = committed_batch(store)
-        if committed is not None and batch_id <= committed:
-            return  # replayed after publish: already merged
+
+def _start(stream_df: DataFrame, apply, checkpoint: str | None):
+    """Start ``apply`` as the stream's ``foreachBatch`` sink."""
+    writer = stream_df.writeStream.foreachBatch(apply) \
+        .trigger(processingTime="0 seconds")
+    if checkpoint:
+        writer = writer.option("checkpointLocation", checkpoint)
+    return writer.start()
+
+
+def _rollup_delta(ts_col, key_col, value_col, step_seconds, origin,
+                  value_cast):
+    """``build(batch_df)``: the micro-batch's bucket rollup."""
+    def build(batch_df: DataFrame) -> DataFrame:
         batch_df = normalize_ts(batch_df, ts_col)
         if value_cast:
             batch_df = batch_df.withColumn(
                 value_col, F.col(value_col).cast(value_cast))
-        delta = bucket_aggregate(batch_df, ts_col, key_col, value_col,
-                                 step_seconds, origin)
+        return bucket_aggregate(batch_df, ts_col, key_col, value_col,
+                                step_seconds, origin)
+    return build
+
+
+def maintain_rollup(stream_df: DataFrame, store: str,
+                    ts_col: str = "ts", key_col: str = "user_id",
+                    value_col: str = "value", step_seconds: int = 3600,
+                    origin: str = DEFAULT_ORIGIN,
+                    value_cast: str | None = None,
+                    checkpoint: str | None = None):
+    """Start the maintenance query; returns the StreamingQuery.
+
+    ``value_cast`` (e.g. ``"decimal(18,2)"``) makes the running sums
+    order-independent and hence bit-identical to a batch re-aggregate
+    — pass it whenever exact parity matters.
+    """
+    os.makedirs(store, exist_ok=True)
+    _guard_identity(store, checkpoint, committed_batch(store) is not None)
+    build = _rollup_delta(ts_col, key_col, value_col, step_seconds, origin,
+                          value_cast)
+
+    def apply(batch_df: DataFrame, batch_id: int) -> None:
+        committed = committed_batch(store)
+        if committed is not None and batch_id <= committed:
+            return  # replayed after publish: already merged
+        delta = build(batch_df)
         prev = read_rollup(batch_df.sparkSession, store)
         merged = delta if prev is None else merge_rollups(prev, delta)
         merged.write.mode("overwrite").parquet(
             os.path.join(store, f"v{batch_id}"))
         _publish(store, batch_id)
 
-    writer = stream_df.writeStream.foreachBatch(apply) \
-        .trigger(processingTime="0 seconds")
-    if checkpoint:
-        writer = writer.option("checkpointLocation", checkpoint)
-    return writer.start()
+    return _start(stream_df, apply, checkpoint)
 
 
 # ---------------------------------------------------------------------------
@@ -178,15 +203,7 @@ def _committed_deltas(store: str, above: int) -> list[tuple[int, str]]:
 def read_rollup_log(spark, store: str) -> DataFrame | None:
     """Committed state of a delta-log store: base snapshot merged with
     every committed delta above the base's fold point."""
-    base_name, upto = _base_state(store)
-    deltas = _committed_deltas(store, upto)
-    frames = []
-    if base_name is not None:
-        frames.append(spark.read.parquet(os.path.join(store, base_name)))
-    frames.extend(spark.read.parquet(p) for _, p in deltas)
-    if not frames:
-        return None
-    return merge_rollups(*frames)
+    return read_mergeable(spark, store, merge_rollups)
 
 
 def maintain_rollup_log(stream_df: DataFrame, store: str,
@@ -210,77 +227,11 @@ def maintain_rollup_log(stream_df: DataFrame, store: str,
     replaces nothing new; batches at or below the base fold point are
     skipped outright.
     """
-    from pyspark.sql import functions as F
-
-    os.makedirs(os.path.join(store, "delta"), exist_ok=True)
-    ident_file = os.path.join(store, ".stream_identity")
-    ident = os.path.abspath(checkpoint) if checkpoint else None
-    has_state = (_base_state(store)[0] is not None
-                 or bool(_committed_deltas(store, -1)))
-    if has_state:
-        recorded = (open(ident_file).read()
-                    if os.path.exists(ident_file) else None)
-        if ident is None or recorded != ident:
-            raise ValueError(
-                "store already holds state committed under checkpoint "
-                f"{recorded!r}; batch ids are per-checkpoint — resume "
-                "with the original checkpoint or start an empty store")
-    elif ident is not None:
-        with open(ident_file, "w") as fh:
-            fh.write(ident)
-
-    def apply(batch_df: DataFrame, batch_id: int) -> None:
-        import shutil
-
-        _, upto = _base_state(store)
-        if batch_id <= upto:
-            return  # already folded into the base snapshot
-        batch_df = normalize_ts(batch_df, ts_col)
-        if value_cast:
-            batch_df = batch_df.withColumn(
-                value_col, F.col(value_col).cast(value_cast))
-        delta = bucket_aggregate(batch_df, ts_col, key_col, value_col,
-                                 step_seconds, origin)
-        staging = os.path.join(store, "delta", f".tmp-{batch_id}")
-        final = os.path.join(store, "delta", f"v{batch_id}")
-        delta.write.mode("overwrite").parquet(staging)
-        if os.path.isdir(final):
-            shutil.rmtree(final)     # replayed batch: replace its delta
-        os.replace(staging, final)   # atomic commit
-
-        committed = _committed_deltas(store, upto)
-        if len(committed) >= compact_every:
-            spark = batch_df.sparkSession
-            old_base, old_upto = _base_state(store)
-            frames = ([spark.read.parquet(os.path.join(store, old_base))]
-                      if old_base else [])
-            frames += [spark.read.parquet(p) for _, p in committed]
-            folded_to = committed[-1][0]
-            new_base = f"base-v{folded_to}"
-            merge_rollups(*frames).write.mode("overwrite").parquet(
-                os.path.join(store, new_base))
-            tmp = os.path.join(store, ".BASE.tmp")
-            with open(tmp, "w") as fh:
-                fh.write(f"{new_base} {folded_to}")
-            os.replace(tmp, os.path.join(store, "BASE"))
-            # prune with ONE COMPACTION OF LAG: a reader that listed
-            # dirs under the previous marker still has every dir it
-            # needs alive; only state the PREVIOUS fold already
-            # superseded is removed now
-            for b, p in _committed_deltas(store, -1):
-                if b <= old_upto:
-                    shutil.rmtree(p, ignore_errors=True)
-            for d in os.listdir(store):
-                if (d.startswith("base-v")
-                        and d not in (new_base, old_base)):
-                    shutil.rmtree(os.path.join(store, d),
-                                  ignore_errors=True)
-
-    writer = stream_df.writeStream.foreachBatch(apply) \
-        .trigger(processingTime="0 seconds")
-    if checkpoint:
-        writer = writer.option("checkpointLocation", checkpoint)
-    return writer.start()
+    return maintain_mergeable(
+        stream_df, store,
+        _rollup_delta(ts_col, key_col, value_col, step_seconds, origin,
+                      value_cast),
+        merge_rollups, compact_every, checkpoint)
 
 
 # ---------------------------------------------------------------------------
@@ -350,25 +301,11 @@ def maintain_join(stream_df: DataFrame, store: str, on,
     each side (defaults: every non-side column).  Returns the
     StreamingQuery; read the view with :func:`read_join_view`.
     """
-    from pyspark.sql import functions as F
-
     from ..operators.joins import append_join_delta
 
     keys = [on] if isinstance(on, str) else list(on)
     os.makedirs(store, exist_ok=True)
-    ident_file = os.path.join(store, ".stream_identity")
-    ident = os.path.abspath(checkpoint) if checkpoint else None
-    if _join_committed(store) is not None:
-        recorded = (open(ident_file).read()
-                    if os.path.exists(ident_file) else None)
-        if ident is None or recorded != ident:
-            raise ValueError(
-                "store already holds state committed under checkpoint "
-                f"{recorded!r}; batch ids are per-checkpoint — resume "
-                "with the original checkpoint or start an empty store")
-    elif ident is not None:
-        with open(ident_file, "w") as fh:
-            fh.write(ident)
+    _guard_identity(store, checkpoint, _join_committed(store) is not None)
 
     def hist(spark, prefix: str, schema) -> DataFrame:
         dirs = _committed_dirs(store, prefix)
@@ -402,11 +339,7 @@ def maintain_join(stream_df: DataFrame, store: str, on,
             os.path.join(store, f"b_d{batch_id}"))
         _join_commit(store, batch_id)
 
-    writer = stream_df.writeStream.foreachBatch(apply) \
-        .trigger(processingTime="0 seconds")
-    if checkpoint:
-        writer = writer.option("checkpointLocation", checkpoint)
-    return writer.start()
+    return _start(stream_df, apply, checkpoint)
 
 
 # ---------------------------------------------------------------------------
@@ -452,21 +385,9 @@ def maintain_mergeable(stream_df: DataFrame, store: str, build, merge,
     exactly like the rollup log.
     """
     os.makedirs(os.path.join(store, "delta"), exist_ok=True)
-    ident_file = os.path.join(store, ".stream_identity")
-    ident = os.path.abspath(checkpoint) if checkpoint else None
-    has_state = (_base_state(store)[0] is not None
-                 or bool(_committed_deltas(store, -1)))
-    if has_state:
-        recorded = (open(ident_file).read()
-                    if os.path.exists(ident_file) else None)
-        if ident is None or recorded != ident:
-            raise ValueError(
-                "store already holds state committed under checkpoint "
-                f"{recorded!r}; batch ids are per-checkpoint — resume "
-                "with the original checkpoint or start an empty store")
-    elif ident is not None:
-        with open(ident_file, "w") as fh:
-            fh.write(ident)
+    _guard_identity(store, checkpoint,
+                    _base_state(store)[0] is not None
+                    or bool(_committed_deltas(store, -1)))
 
     def apply(batch_df: DataFrame, batch_id: int) -> None:
         import shutil
@@ -497,6 +418,10 @@ def maintain_mergeable(stream_df: DataFrame, store: str, build, merge,
             with open(tmp, "w") as fh:
                 fh.write(f"{new_base} {folded_to}")
             os.replace(tmp, os.path.join(store, "BASE"))
+            # prune with ONE COMPACTION OF LAG: a reader that listed
+            # dirs under the previous marker still has every dir it
+            # needs alive; only state the PREVIOUS fold already
+            # superseded is removed now
             for b, p in _committed_deltas(store, -1):
                 if b <= old_upto:
                     shutil.rmtree(p, ignore_errors=True)
@@ -506,8 +431,4 @@ def maintain_mergeable(stream_df: DataFrame, store: str, build, merge,
                     shutil.rmtree(os.path.join(store, d),
                                   ignore_errors=True)
 
-    writer = stream_df.writeStream.foreachBatch(apply) \
-        .trigger(processingTime="0 seconds")
-    if checkpoint:
-        writer = writer.option("checkpointLocation", checkpoint)
-    return writer.start()
+    return _start(stream_df, apply, checkpoint)

@@ -985,6 +985,37 @@ def test_backfill_concurrent_matches_sequential(spark, tmp_path):
     assert got.select("p2").distinct().count() == 8
 
 
+@pytest.mark.parametrize("max_concurrent", [1, 4])
+def test_backfill_jobs_inherit_callers_job_group(spark, tmp_path,
+                                                 max_concurrent):
+    """Every partition job runs under the caller's job group and
+    description, whichever pool thread runs it, so job-group metrics
+    and cancellation cover the whole backfill."""
+    from dask_ms_spark.operators.backfill import backfill
+
+    seen = []
+
+    def run(s, p):
+        sc = s.sparkContext
+        seen.append((sc.getLocalProperty("spark.jobGroup.id"),
+                     sc.getLocalProperty("spark.job.description")))
+        return s.range(2).selectExpr(f"'{p}' AS p2", "id")
+
+    sc = spark.sparkContext
+    sc.setJobGroup("bf-caller", "backfill under test")
+    try:
+        res = dict(backfill(spark, [f"d{i}" for i in range(6)], run,
+                            str(tmp_path / "bfg"),
+                            max_concurrent=max_concurrent))
+        jobs = sc.statusTracker().getJobIdsForGroup("bf-caller")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert set(res.values()) == {"done"}
+    assert seen == [("bf-caller", "backfill under test")] * 6
+    assert len(jobs) >= 6   # one write job per partition at least
+
+
 def test_fragment_reference_name_aliases(spark, tmp_path):
     """Reference users call xds_to_table_fragment /
     xds_from_table_fragment (daskms/experimental/fragments) — the

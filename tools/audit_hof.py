@@ -676,10 +676,27 @@ DF_OP_WHITELIST = {
         "orchestrator that WRITES a Hive-partitioned index; its "
         "scoring kernels (dot/argmin/l2sq) are budget-run via "
         "kmeans_assign, pq_encode and pq_topk",
-    "similarity.pq_query_indexed":
-        "reads a previously WRITTEN index; the scoring path is "
-        "ivfpq_topk's LUT scan, which is budget-run wide",
     # -- r12: package-wide enumeration pulled these in ----------------
+    "vector._masked_bin_means":
+        "the bin fold shared by masked_bin_average and "
+        "masked_bin_average_dyn, whose inputs it receives already "
+        "bound; both callers are budget-run wide in invocations()",
+    "vector._ls_sums":
+        "the four least-squares fold sums shared by log_log_fit and "
+        "uvcontsub over their already-bound kept-pairs array; both "
+        "callers are budget-run wide in invocations()",
+    "corpus._word_grams":
+        "the bound word-gram builder shared by ngram_novelty and "
+        "phrase_boilerplate; both callers are budget-run on the wide "
+        "text fixture in df_ops()",
+    "similarity._pq_lut":
+        "the per-query LUT build shared by pq_topk, pq_query_indexed "
+        "and ivfpq_topk; pq_topk and ivfpq_topk are budget-run wide "
+        "in df_ops()",
+    "similarity._adc_ranked":
+        "the asymmetric-distance scan shared by pq_topk, "
+        "pq_query_indexed and ivfpq_topk; pq_topk and ivfpq_topk are "
+        "budget-run wide in df_ops()",
     "vector._bind_once":
         "the binding primitive itself — a transform wrapper every "
         "kernel invocation above drives; no independent re-expansion "
