@@ -113,8 +113,11 @@ def backfill(spark, partitions: Sequence[str],
         return "done"
 
     # the caller's local properties (job group, description, pool)
-    # reach every partition job, whichever pool thread runs it
-    target = inheritable_thread_target(run_one)
+    # and job tags reach every partition job, whichever pool thread
+    # runs it; with pinned-thread mode off the call returns the
+    # session itself, and run_one runs unwrapped
+    wrap = inheritable_thread_target(spark)
+    target = run_one if wrap is spark else wrap(run_one)
     workers = max(1, max_concurrent)
     failures = 0
     with ThreadPoolExecutor(max_workers=workers) as pool:

@@ -24,6 +24,7 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
+from ..sources.parquet import scan_parquet
 from ..types import ROWID
 from .overlay import overlay
 
@@ -80,7 +81,7 @@ def _load(spark: SparkSession, store: str, name: str):
             f"{[m['name'] for m in list_flagversions(store)]}")
     with open(meta_path) as fh:
         meta = json.load(fh)
-    return spark.read.parquet(vdir), meta
+    return scan_parquet(spark, vdir), meta
 
 
 def restore_flagversion(spark: SparkSession, df: DataFrame,

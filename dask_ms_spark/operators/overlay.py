@@ -24,6 +24,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..sources import sidecar
+from ..sources.parquet import scan_parquet
 from ..types import ROWID
 
 __all__ = ["overlay", "write_fragment", "read_fragment", "get_ancestry",
@@ -129,7 +130,7 @@ def read_fragment(spark: SparkSession, store: str,
     (reference ``xds_from_table_fragment``,
     daskms/experimental/fragments/__init__.py:154-187)."""
     chain = get_ancestry(store)
-    frames = [spark.read.parquet(url) for url in chain]
+    frames = [scan_parquet(spark, url) for url in chain]
     return consolidate(frames, key=key)
 
 

@@ -29,6 +29,8 @@ from typing import Mapping
 
 from pyspark.sql import DataFrame
 
+from ..sources.parquet import scan_parquet
+
 __all__ = ["publish_snapshot", "read_snapshot", "current_version",
            "snapshot_diff"]
 
@@ -96,7 +98,7 @@ def read_snapshot(spark, store: str,
     vdir = os.path.join(store, f"v{version}")
     out = {}
     for name in sorted(os.listdir(vdir)):
-        out[name] = spark.read.parquet(os.path.join(vdir, name))
+        out[name] = scan_parquet(spark, os.path.join(vdir, name))
     return out
 
 

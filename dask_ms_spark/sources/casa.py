@@ -8,11 +8,13 @@ shape is Spark-native:
 * the driver opens the table once for **metadata only** (row count,
   column names, a one-row dtype probe — the analogue of the
   reference's eager descriptor read);
-* ``mapInPandas`` over ``spark.range(n_chunks)`` reads row ranges on
-  executors, each task holding its own table handle (the reference's
-  TableProxy-per-worker pattern, daskms/table_proxy.py) and calling
-  ``getcol(col, startrow, nrow)`` — so the scan parallelises across
-  row chunks without ever materialising the table on the driver;
+* the table is a :class:`~.chunks.ChunkSource` read by the shared
+  chunk kernel (one ``mapInArrow`` over ``spark.range(n_chunks)``,
+  :func:`~.chunks.scan_chunks`): each task holds its own table handle
+  (the reference's TableProxy-per-worker pattern,
+  daskms/table_proxy.py) and calls ``getcol(col, startrow, nrow)`` —
+  so the scan parallelises across row chunks without ever
+  materialising the table on the driver;
 * complex columns arrive as interleaved re/im float arrays and
   N-d cells as flat arrays, per ``types.py`` conventions.
 
@@ -44,6 +46,7 @@ from pyspark.sql.types import (ArrayType, BooleanType, DataType, DoubleType,
 from ..dataset import Dataset, partition_datasets
 from ..types import (ROWID, infer_ms_table, ms_column_dims,
                      tensor_field)
+from .chunks import ChunkSource, cell_slab, scan_chunks
 
 try:  # pragma: no cover - casacore absent in this environment
     import casacore.tables as _ct  # type: ignore
@@ -104,34 +107,6 @@ def _np_cell_to_spark(dtype: np.dtype, ndim: int) -> tuple[DataType, str]:
     return spark, "scalar"
 
 
-def _resolve_slab(cell_shape: tuple[int, ...],
-                  sl: tuple) -> tuple[list[int], list[int], list[int]]:
-    """Normalise a tuple of python slices over the cell (non-row) dims
-    into casacore ``getcolslice`` ``(blc, trc, inc)`` — inclusive
-    bottom-left / top-right corners plus strides, one entry per cell
-    axis (missing trailing axes are taken whole)."""
-    if len(sl) > len(cell_shape):
-        raise ValueError(
-            f"slice rank {len(sl)} exceeds cell rank {len(cell_shape)}")
-    blc, trc, inc = [], [], []
-    for axis, dim in enumerate(cell_shape):
-        s = sl[axis] if axis < len(sl) else slice(None)
-        if not isinstance(s, slice):           # plain int -> width-1
-            i = int(s)
-            if i < 0:                          # python index semantics
-                i += dim
-            s = slice(i, i + 1)
-        start, stop, step = s.indices(dim)
-        if step < 1:
-            raise ValueError("negative slice steps are not supported")
-        if stop <= start:
-            raise ValueError(f"empty slice on axis {axis}: {s}")
-        blc.append(start)
-        trc.append(stop - 1)                   # casacore trc inclusive
-        inc.append(step)
-    return blc, trc, inc
-
-
 def probe_casa_table(table_factory: Callable, path: str,
                      columns: Iterable[str] | None = None,
                      slices: dict | None = None):
@@ -139,7 +114,7 @@ def probe_casa_table(table_factory: Callable, path: str,
     count and a ONE-row dtype exemplar per column (the reference's
     eager descriptor + exemplar-row read, daskms/columns.py:103-262).
     Returns ``(schema, specs, slabs, nrow)`` — everything both the
-    mapInPandas path and the Python DataSource need to plan a scan."""
+    dataset API and the Python DataSource need to plan a scan."""
     slices = dict(slices or {})
     t = table_factory(path)
     try:
@@ -164,8 +139,10 @@ def probe_casa_table(table_factory: Callable, path: str,
                     raise ValueError(
                         f"column {c} is scalar; slices apply to "
                         "tensor columns only")
-                slabs[c] = _resolve_slab(probe.shape[1:],
-                                         tuple(slices[c]))
+                blc, stop, inc = zip(*cell_slab(probe.shape[1:],
+                                                tuple(slices[c])))
+                # getcolslice (blc, trc, inc): trc is inclusive
+                slabs[c] = (list(blc), [s - 1 for s in stop], list(inc))
             specs[c] = kind
             if probe.ndim >= 2 and isinstance(spark_t, ArrayType):
                 # tensor column: attach MS dim names (or {col}-{i}
@@ -184,33 +161,35 @@ def probe_casa_table(table_factory: Callable, path: str,
 
 def read_casa_chunk(table, specs: dict, slabs: dict,
                     lo: int, hi: int) -> dict:
-    """Executor-side chunk kernel: getcol/getcolslice the ``[lo, hi)``
-    row range of every planned column into numpy, applying the
-    complex-interleave and N-d-flatten transfer conventions of
-    ``types.py``.  Shared by the mapInPandas reader and the Python
-    DataSource."""
+    """Executor-side chunk kernel: the ``[lo, hi)`` rows of every
+    planned column as numpy blocks (``getcol``, or ``getcolslice`` for
+    a sliced column), plus ``ROWID``.  Blocks keep their cell shape
+    and complex dtype; the Arrow conversion of
+    :func:`~.chunks.read_batches` flattens cells and interleaves
+    re/im per ``types.py``.  Shared by ``xds_from_casa`` and the
+    Python DataSource."""
     out = {ROWID: np.arange(lo, hi, dtype=np.int64)}
-    for c, kind in specs.items():
+    for c in specs:
         if c in slabs:
             blc, trc, inc = slabs[c]
-            arr = np.asarray(table.getcolslice(
+            out[c] = np.asarray(table.getcolslice(
                 c, blc, trc, inc, lo, hi - lo))
         else:
-            arr = np.asarray(table.getcol(c, lo, hi - lo))
-        if kind == "complex":
-            flat = arr.reshape(hi - lo, -1)
-            inter = np.empty(
-                (hi - lo, flat.shape[1] * 2),
-                dtype=np.float32 if arr.dtype.itemsize == 8
-                else np.float64)
-            inter[:, 0::2] = flat.real
-            inter[:, 1::2] = flat.imag
-            out[c] = list(inter)
-        elif kind == "flat":
-            out[c] = list(arr.reshape(hi - lo, -1))
-        else:
-            out[c] = arr
+            out[c] = np.asarray(table.getcol(c, lo, hi - lo))
     return out
+
+
+def _casa_source(table_factory: Callable, path: str,
+                columns: Iterable[str] | None = None,
+                slices: dict | None = None,
+                row_chunk: int = DEFAULT_CASA_ROW_CHUNK) -> ChunkSource:
+    """The :class:`~.chunks.ChunkSource` of a CASA table: probed once
+    on the driver, each task opening its own handle."""
+    schema, specs, slabs, nrow = probe_casa_table(
+        table_factory, path, columns, slices)
+    return ChunkSource(
+        schema, nrow, row_chunk, lambda: table_factory(path),
+        lambda t, ci, lo, hi: read_casa_chunk(t, specs, slabs, lo, hi))
 
 
 def xds_from_casa(spark: SparkSession, path: str,
@@ -257,8 +236,7 @@ def xds_from_casa(spark: SparkSession, path: str,
     if table_factory is None:
         _require_casacore()
         table_factory = _casacore_factory
-    schema, specs, slabs, nrow = probe_casa_table(
-        table_factory, path, columns, slices)
+    src = _casa_source(table_factory, path, columns, slices, row_chunk)
     if taql_where:
         # reference call sites pass TAQL (daskms/dask_ms.py:236-241);
         # here the same filter becomes a Catalyst predicate over the
@@ -269,29 +247,11 @@ def xds_from_casa(spark: SparkSession, path: str,
         # format below its motivating idiom).
         from ..taql import taql_where_to_sql
 
-        translated = taql_where_to_sql(taql_where, schema=schema,
+        translated = taql_where_to_sql(taql_where, schema=src.schema,
                                        mscal=taql_mscal)
         where = f"({where}) AND ({translated})" if where else translated
-    n_chunks = max(1, math.ceil(nrow / row_chunk))
-
-    def read_chunks(batches):
-        import pandas as pd
-
-        table = None
-        for pdf in batches:
-            for ci in pdf["id"].astype(int):
-                if table is None:
-                    table = table_factory(path)
-                lo = ci * row_chunk
-                hi = min(nrow, lo + row_chunk)
-                yield pd.DataFrame(read_casa_chunk(
-                    table, specs, slabs, lo, hi))
-
-    if nrow == 0:
-        df = spark.createDataFrame([], schema)
-    else:
-        df = spark.range(n_chunks).mapInPandas(read_chunks, schema)
-    return partition_datasets(df, group_cols, index_cols, where, None)
+    return partition_datasets(scan_chunks(spark, src), group_cols,
+                              index_cols, where, None)
 
 
 def xds_from_ms(spark: SparkSession, path: str, **kw) -> list[Dataset]:

@@ -12,12 +12,13 @@ Spark-native ingest shape (implemented here, katdal-or-fake loader):
   only (dump count, timestamps, correlation products, per-dump
   field/scan ids) — the analogue of the reference's eager
   ``katdal.open``;
-* ``mapInPandas`` over ``spark.range(n_chunks)`` gives one task per
-  dump-chunk; each task opens its own loader (the reference's
-  per-worker table handle), reads its time slice, and transposes the
-  dense (dump, chan, corrprod) block to MSv2 row-major
-  (row, chan, corr) with pure numpy indexing — the numba transpose
-  kernel re-expressed as a gather;
+* the archive is a :class:`~.chunks.ChunkSource` of dump-chunks read
+  by the shared chunk kernel (one ``mapInArrow`` over
+  ``spark.range(n_chunks)``, :func:`~.chunks.scan_chunks`); each task
+  opens its own loader (the reference's per-worker table handle),
+  reads its time slices, and transposes each dense (dump, chan,
+  corrprod) block to MSv2 row-major (row, chan, corr) with pure numpy
+  indexing — the numba transpose kernel re-expressed as a gather;
 * the result is the standard main-table layout of ``types.py``
   (interleaved-complex flat DATA, flat UVW/FLAG/WEIGHT_SPECTRUM,
   deterministic ROWID), grouped into Datasets by
@@ -32,7 +33,6 @@ loader below adapts the public katdal API behind the import gate.
 
 from __future__ import annotations
 
-import math
 from typing import Callable, Iterable
 
 import numpy as np
@@ -42,6 +42,7 @@ from pyspark.sql.types import (ArrayType, BooleanType, DoubleType, FloatType,
 
 from ..dataset import Dataset, partition_datasets
 from ..types import ROWID
+from .chunks import ChunkSource, scan_chunks
 
 try:  # pragma: no cover - katdal absent in this environment
     import katdal as _katdal  # type: ignore
@@ -225,10 +226,10 @@ def xds_from_katdal(spark: SparkSession, url: str,
     meta = loader_factory(url).meta()
     n_dumps = int(meta["n_dumps"])
     nchan = int(meta["n_chans"])
-    times = [float(t) for t in meta["timestamps"]]
+    times = np.asarray(meta["timestamps"], dtype=np.float64)
     cp = [(int(a), int(b), int(c)) for a, b, c in meta["corr_products"]]
-    field_ids = [int(f) for f in meta["field_ids"]]
-    scan_numbers = [int(s) for s in meta["scan_numbers"]]
+    field_ids = np.asarray(meta["field_ids"], dtype=np.int64)
+    scan_numbers = np.asarray(meta["scan_numbers"], dtype=np.int64)
     ddid = int(meta.get("data_desc_id", 0))
 
     # baseline/corr gather index: cp_map[b, c] = corrprod column
@@ -245,78 +246,53 @@ def xds_from_katdal(spark: SparkSession, url: str,
     ant1 = np.array([a for a, _ in baselines], dtype=np.int64)
     ant2 = np.array([b for _, b in baselines], dtype=np.int64)
 
-    n_chunks = max(1, math.ceil(n_dumps / dumps_per_chunk))
-    schema = _ms_schema(nchan, ncorr)
+    def read_chunk(loader, ci, lo, hi):
+        block = loader.read(lo, hi)
+        nd = hi - lo
+        # (nd, nchan, ncp) -> (nd * nbl, nchan, ncorr): the transpose
+        # kernel as one vectorised fancy-index + swapaxes per array
+        vis, fl, wt = (np.swapaxes(np.asarray(block[k])[:, :, cp_map], 1, 2)
+                       .reshape(nd * nbl, nchan, ncorr)
+                       for k in ("vis", "flags", "weights"))
+        if "uvw" in block:
+            uvw = np.asarray(block["uvw"], dtype=np.float64) \
+                .reshape(nd * nbl, 3)
+        elif all(k in block for k in ("u", "v", "w")):
+            # per-corr-product (nd, n_cp) u/v/w — identical across a
+            # baseline's polarisation products, so gather one cp per
+            # baseline
+            sel = cp_map[:, 0]
+            uvw = np.stack(
+                [np.asarray(block[k], dtype=np.float64)[:, sel]
+                 for k in ("u", "v", "w")],
+                axis=-1).reshape(nd * nbl, 3)
+        else:
+            import warnings
 
-    def load_chunks(batches):
-        import pandas as pd
+            warnings.warn(
+                "katdal loader returned no uvw/u/v/w — writing ZERO UVW "
+                "coordinates; uv-dependent results (BDA, imaging, "
+                "uvdist RFI) will be wrong", stacklevel=2)
+            uvw = np.zeros((nd * nbl, 3), dtype=np.float64)
+        dump_idx = np.repeat(np.arange(lo, hi), nbl)
+        return {
+            ROWID: dump_idx * nbl + np.tile(np.arange(nbl), nd),
+            "FIELD_ID": field_ids[dump_idx],
+            "DATA_DESC_ID": np.full(nd * nbl, ddid),
+            "SCAN_NUMBER": scan_numbers[dump_idx],
+            "TIME": times[dump_idx],
+            "ANTENNA1": np.tile(ant1, nd),
+            "ANTENNA2": np.tile(ant2, nd),
+            "UVW": uvw,
+            "DATA": vis.astype(np.complex64, copy=False),
+            "FLAG": fl,
+            "WEIGHT_SPECTRUM": wt.astype(np.float32, copy=False),
+        }
 
-        loader = None
-        for pdf in batches:
-            for ci in pdf["id"].astype(int):
-                if loader is None:
-                    loader = loader_factory(url)
-                lo = ci * dumps_per_chunk
-                hi = min(n_dumps, lo + dumps_per_chunk)
-                block = loader.read(lo, hi)
-                vis = np.asarray(block["vis"])  # (nd, nchan, ncp)
-                flags = np.asarray(block["flags"])
-                weights = np.asarray(block["weights"])
-                nd = hi - lo
-                # gather to (nd, nbl, nchan, ncorr): the transpose
-                # kernel as one vectorised fancy-index + swapaxes
-                g = vis[:, :, cp_map]          # (nd, nchan, nbl, ncorr)
-                g = np.swapaxes(g, 1, 2)       # (nd, nbl, nchan, ncorr)
-                fl = np.swapaxes(flags[:, :, cp_map], 1, 2)
-                wt = np.swapaxes(weights[:, :, cp_map], 1, 2)
-                flat = g.reshape(nd * nbl, nchan * ncorr)
-                inter = np.empty((nd * nbl, nchan * ncorr * 2),
-                                 dtype=np.float32)
-                inter[:, 0::2] = flat.real
-                inter[:, 1::2] = flat.imag
-                if "uvw" in block:
-                    uvw = np.asarray(block["uvw"], dtype=np.float64) \
-                        .reshape(nd * nbl, 3)
-                elif all(k in block for k in ("u", "v", "w")):
-                    # per-corr-product (nd, n_cp) u/v/w — identical
-                    # across a baseline's polarisation products, so
-                    # gather one cp per baseline
-                    sel = cp_map[:, 0]
-                    uvw = np.stack(
-                        [np.asarray(block[k],
-                                    dtype=np.float64)[:, sel]
-                         for k in ("u", "v", "w")],
-                        axis=-1).reshape(nd * nbl, 3)
-                else:
-                    import warnings
-
-                    warnings.warn(
-                        "katdal loader returned no uvw/u/v/w — "
-                        "writing ZERO UVW coordinates; uv-dependent "
-                        "results (BDA, imaging, uvdist RFI) will be "
-                        "wrong", stacklevel=2)
-                    uvw = np.zeros((nd * nbl, 3), dtype=np.float64)
-                dump_idx = np.repeat(np.arange(lo, hi), nbl)
-                yield pd.DataFrame({
-                    ROWID: (dump_idx * nbl
-                            + np.tile(np.arange(nbl), nd)),
-                    "FIELD_ID": np.array(field_ids)[dump_idx],
-                    "DATA_DESC_ID": np.full(nd * nbl, ddid),
-                    "SCAN_NUMBER": np.array(scan_numbers)[dump_idx],
-                    "TIME": np.array(times)[dump_idx],
-                    "ANTENNA1": np.tile(ant1, nd),
-                    "ANTENNA2": np.tile(ant2, nd),
-                    "UVW": list(uvw),
-                    "DATA": list(inter),
-                    "FLAG": list(
-                        fl.reshape(nd * nbl, nchan * ncorr)),
-                    "WEIGHT_SPECTRUM": list(
-                        wt.reshape(nd * nbl, nchan * ncorr)
-                        .astype(np.float32)),
-                })
-
-    df = spark.range(n_chunks).mapInPandas(load_chunks, schema)
-    return partition_datasets(df, list(group_cols), list(index_cols))
+    src = ChunkSource(_ms_schema(nchan, ncorr), n_dumps, dumps_per_chunk,
+                      lambda: loader_factory(url), read_chunk)
+    return partition_datasets(scan_chunks(spark, src), list(group_cols),
+                              list(index_cols))
 
 
 def katdal_import(spark: SparkSession, url: str, out_store: str,

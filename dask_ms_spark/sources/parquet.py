@@ -15,11 +15,18 @@ facade and the partition-key round trip (G3).
 open-once table handle (daskms/table_proxy.py:146-169) in Spark terms:
 an unchanged local store is opened with the schema Spark inferred the
 first time, so a re-read starts no schema-inference job.  A URI or a
-glob reads as plain ``spark.read.parquet``.  Multi-path reads
-(``spark.read.parquet(*dirs)`` over committed version dirs, as in
-``streaming.maintenance.read_join_view`` and
-``operators.backfill.read_backfill``) do not go through it and infer
-their schema on every call.
+glob reads as plain ``spark.read.parquet``.  The library's
+single-path reads go through it: this module's readers, the schema
+peek of ``sources.storage``, the ``apps`` CLI input,
+``streaming.events``, the rollup and delta-log stores of
+``streaming.maintenance``, ``operators.overlay`` fragment chains,
+``operators.snapshot``, ``operators.flagversions`` and the IVF/PQ
+index loads of ``llm.similarity``.  ``apps`` reads back the store it
+has just written directly, as no memo could hit there.  Multi-path
+reads (``spark.read.parquet(*dirs)`` over committed version dirs, as
+in ``streaming.maintenance.read_join_view``,
+``operators.backfill.read_backfill`` and ``sources.manifest``) do not
+go through it and infer their schema on every call.
 """
 
 from __future__ import annotations

@@ -4,8 +4,10 @@
 ``xds_from_zarr`` is the dataset-list API (one Dataset per
 ``{table}_{i}`` group, the reference's read surface —
 daskms/experimental/zarr/__init__.py:380-528).  This module exposes the
-SAME chunk-reading kernel through PySpark 4's ``pyspark.sql.datasource``
-API, so a zarr group is a first-class relational source:
+SAME chunk source (``zarr._group_source``, a
+:class:`~.chunks.ChunkSource`) through PySpark 4's
+``pyspark.sql.datasource`` API, so a zarr group is a first-class
+relational source:
 
     spark.dataSource.register(ZarrDataSource)
     df = (spark.read.format("zarr")
@@ -13,14 +15,18 @@ API, so a zarr group is a first-class relational source:
           .option("columns", "TIME,DATA")    # optional projection
           .load("/path/to/store.zarr"))
 
-Scale shape — identical to ``xds_from_zarr``: the driver touches only
-the JSON metadata (``.zarray``/``.zattrs``); ``partitions()`` emits one
-``InputPartition`` per row-chunk so a 1000-executor cluster reads 1000
-chunks concurrently; ``read()`` runs executor-side and yields Arrow
-record batches (one language crossing per chunk).  Explicit
-``rowid_min`` / ``rowid_max`` options prune whole chunk partitions at
+Both sources share one reader, ``_ChunkReader``: the driver touches
+only metadata (the zarr ``.zarray``/``.zattrs`` JSON, a one-row CASA
+probe); ``partitions()`` splits the row-chunks into at most
+``max_partitions`` contiguous runs; ``read()`` runs executor-side and
+yields one Arrow record batch per chunk through the same chunk read
+and Arrow conversion as the dataset API (:func:`~.chunks.read_batches`).
+Explicit ``rowid_min`` / ``rowid_max`` options prune whole chunks at
 plan time — the Python-source analogue of parquet row-group pruning
-(reference row-run selection, daskms/ordering.py:18-57).
+(reference row-run selection, daskms/ordering.py:18-57).  The
+partition cap is an option, not ``defaultParallelism``, because
+PySpark plans a DataSource read in a Python worker that has no
+SparkContext.
 
 Why the bounds are OPTIONS and not ``pushFilters``: measured on this
 Spark (4.1), the Python-source scan object is cached per relation and
@@ -45,16 +51,14 @@ from __future__ import annotations
 import os
 from dataclasses import dataclass
 
-import numpy as np
-
 from pyspark.sql.datasource import (DataSource, DataSourceReader,
                                     InputPartition)
-from pyspark.sql.types import (ArrayType, LongType, StructField,
-                               StructType)
+from pyspark.sql.types import StructType
 
-from ..types import ROWID
-from .zarr import (_group_dirs, _load_arrays, _native, _np_to_spark,
-                   _read_cell_chunks)
+from .casa import (DEFAULT_CASA_ROW_CHUNK, _casa_source, _casacore_factory,
+                   _require_casacore, probe_casa_table)
+from .chunks import ChunkSource, read_batches
+from .zarr import _group_dirs, _group_source
 
 __all__ = ["ZarrDataSource", "CasaDataSource", "register_python_sources"]
 
@@ -82,23 +86,23 @@ def _resolve_group(path: str, group: str | None) -> str:
 class _ChunkPartition(InputPartition):
     """A contiguous run of row-chunks ``[first, last]`` (inclusive).
     Grouping chunks per task matters: one task per 10k-row chunk
-    measured 3x slower than the mapInPandas path on a 2M-row store
-    purely from per-partition protocol overhead; with runs the two
-    paths match."""
+    measured 3x slower than the dataset API's scan (then a
+    ``mapInPandas``) on a 2M-row store, purely from per-partition
+    protocol overhead; with runs the two matched."""
 
     first_chunk: int
     last_chunk: int
 
 
-class _RowidChunkPruning:
-    """Shared ROWID range pruning: subclasses set ``nrow``,
-    ``row_chunk`` and call ``_init_bounds(lo, hi)`` with the
-    (inclusive) bounds from the load options; ``partitions()`` emits
-    only the intersecting chunks and ``read()`` trims the boundary
-    chunks, so rows outside the bounds never leave the reader."""
+class _ChunkReader(DataSourceReader):
+    """The one reader of both sources: a :class:`~.chunks.ChunkSource`
+    read in contiguous chunk runs through the shared chunk read and
+    Arrow conversion (:func:`~.chunks.read_batches`).  The inclusive
+    ROWID bounds ``rowid_min`` / ``rowid_max`` keep only the
+    intersecting chunks in ``partitions()`` and trim the boundary
+    chunks in ``read()``, so rows outside them never leave the
+    reader."""
 
-    nrow: int
-    row_chunk: int
     # Default task granularity: 2x driver cores.  Measured sweep on a
     # 2M-row store (200 chunks, 32 cores): one-partition-per-chunk
     # 1.3-1.6 s, 64 partitions 0.54 s, 32 partitions 0.42 s — the
@@ -108,17 +112,19 @@ class _RowidChunkPruning:
     # to ~2-3x total executor cores.
     max_partitions: int = max(16, 2 * (os.cpu_count() or 8))
 
-    def _init_bounds(self, lo: int | None = None,
-                     hi: int | None = None):
-        self.lo_bound = 0 if lo is None else max(0, int(lo))
-        top = max(self.nrow - 1, 0)
-        self.hi_bound = top if hi is None else min(top, int(hi))
+    def __init__(self, source: ChunkSource, rowid_min=None,
+                 rowid_max=None):
+        self.source = source
+        self.lo_bound = 0 if rowid_min is None else max(0, int(rowid_min))
+        top = max(source.nrow - 1, 0)
+        self.hi_bound = top if rowid_max is None else min(top,
+                                                          int(rowid_max))
 
     def partitions(self):
-        n_chunks = max(1, (self.nrow + self.row_chunk - 1)
-                       // self.row_chunk)
-        first = max(0, self.lo_bound // self.row_chunk)
-        last = min(n_chunks - 1, self.hi_bound // self.row_chunk)
+        row_chunk = self.source.row_chunk
+        first = max(0, self.lo_bound // row_chunk)
+        last = min(max(1, self.source.n_chunks) - 1,
+                   self.hi_bound // row_chunk)
         if last < first:
             return [_ChunkPartition(first, first)]
         span = last - first + 1
@@ -132,80 +138,62 @@ class _RowidChunkPruning:
             c += size
         return out
 
-    def _chunks(self, partition: "_ChunkPartition"):
-        """Yield ``(lo, hi)`` row ranges for every chunk in the run."""
-        for ci in range(partition.first_chunk,
-                        partition.last_chunk + 1):
-            lo = ci * self.row_chunk
-            hi = min(self.nrow, lo + self.row_chunk)
-            if hi > lo:
-                yield ci, lo, hi
+    def read(self, partition: _ChunkPartition):
+        return read_batches(
+            self.source, range(partition.first_chunk,
+                               partition.last_chunk + 1),
+            self.lo_bound, self.hi_bound)
 
 
-class ZarrReader(_RowidChunkPruning, DataSourceReader):
-    """One partition per row-chunk; ROWID bound options prune chunks."""
+class ZarrReader(_ChunkReader):
+    """The chunk reader over one zarr group."""
 
     def __init__(self, path: str, group: str | None,
                  columns: list[str] | None,
                  rowid_min: int | None = None,
                  rowid_max: int | None = None):
-        self.group_dir = _resolve_group(path, group)
-        self.arrays = _load_arrays(self.group_dir, columns)
-        compressed = [c for c, z in self.arrays.items() if not _native(z)]
-        if compressed:
-            raise NotImplementedError(
-                f"arrays {compressed[:3]} use non-native codecs/filters — "
-                "use the zarr package path (xds_from_zarr) or parquet "
-                "conversion")
-        shapes = {c: z["shape"] for c, z in self.arrays.items()}
-        nrows = {s[0] for s in shapes.values()}
-        if len(nrows) != 1:
-            raise ValueError(f"row-count mismatch: {shapes}")
-        self.nrow = nrows.pop()
-        row_chunks = {z["chunks"][0] for z in self.arrays.values()}
-        if len(row_chunks) != 1:
-            raise ValueError("arrays disagree on row chunking")
-        self.row_chunk = row_chunks.pop()
-        self._init_bounds(rowid_min, rowid_max)
-
-    def read(self, partition: _ChunkPartition):
-        import pyarrow as pa
-
-        for ci, lo, hi in self._chunks(partition):
-            rowid = np.arange(lo, hi, dtype=np.int64)
-            # trim the bound residual inside the boundary chunks
-            keep = (rowid >= self.lo_bound) & (rowid <= self.hi_bound)
-            if not keep.any():
-                continue
-            cols: dict[str, pa.Array] = {
-                ROWID: pa.array(rowid[keep], type=pa.int64())}
-            for c, z in self.arrays.items():
-                arr = _read_cell_chunks(self.group_dir, c, z, ci,
-                                        hi - lo, None)[keep]
-                if arr.ndim > 1:
-                    cols[c] = pa.array(list(arr))
-                elif arr.dtype.kind == "M":
-                    cols[c] = pa.array(arr.astype("datetime64[us]"))
-                else:
-                    cols[c] = pa.array(arr)
-            yield pa.RecordBatch.from_pydict(cols)
+        super().__init__(_group_source(_resolve_group(path, group),
+                                       columns), rowid_min, rowid_max)
 
 
-def _bound_options(options) -> tuple[int | None, int | None]:
-    lo = options.get("rowid_min")
-    hi = options.get("rowid_max")
-    return (int(lo) if lo is not None else None,
-            int(hi) if hi is not None else None)
+class CasaReader(_ChunkReader):
+    """The chunk reader over a CASA table; each task opens its own
+    table handle via the factory (the reference's
+    TableProxy-per-worker pattern)."""
+
+    def __init__(self, table_factory, path: str,
+                 columns: list[str] | None, row_chunk: int,
+                 rowid_min: int | None = None,
+                 rowid_max: int | None = None):
+        super().__init__(_casa_source(table_factory, path, columns,
+                                      row_chunk=row_chunk),
+                         rowid_min, rowid_max)
 
 
-def _apply_max_partitions(reader, options):
-    mp = options.get("max_partitions")
-    if mp is not None:
-        reader.max_partitions = max(1, int(mp))
-    return reader
+class _ChunkDataSource(DataSource):
+    """Options both sources share: ``load(path)``, ``columns``
+    (comma-separated projection), ``rowid_min`` / ``rowid_max``
+    (inclusive chunk-pruning bounds) and ``max_partitions``."""
+
+    def _path_columns(self):
+        path = self.options.get("path")
+        if not path:
+            raise ValueError(
+                f"load(path) is required for format({self.name()!r})")
+        columns = self.options.get("columns")
+        return path, ([c.strip() for c in columns.split(",") if c.strip()]
+                      if columns else None)
+
+    def _reader(self, reader_cls, *args) -> _ChunkReader:
+        opts = self.options
+        reader = reader_cls(*args, opts.get("rowid_min"),
+                            opts.get("rowid_max"))
+        if opts.get("max_partitions") is not None:
+            reader.max_partitions = max(1, int(opts["max_partitions"]))
+        return reader
 
 
-class ZarrDataSource(DataSource):
+class ZarrDataSource(_ChunkDataSource):
     """``spark.read.format("zarr")`` over the repo's zarr-v2 store
     layout.  Options: ``group`` (required when the store holds several
     ``{table}_{i}`` groups), ``columns`` (comma-separated projection),
@@ -215,81 +203,18 @@ class ZarrDataSource(DataSource):
     def name(cls) -> str:
         return "zarr"
 
-    def _reader_args(self):
-        path = self.options.get("path")
-        if not path:
-            raise ValueError("load(path) is required for format('zarr')")
-        group = self.options.get("group")
-        columns = self.options.get("columns")
-        cols = ([c.strip() for c in columns.split(",") if c.strip()]
-                if columns else None)
-        return path, group, cols
-
     def schema(self) -> StructType:
-        path, group, cols = self._reader_args()
-        arrays = _load_arrays(_resolve_group(path, group), cols)
-        fields = [StructField(ROWID, LongType(), False)]
-        for c, z in arrays.items():
-            t = _np_to_spark(z["dtype"])
-            fields.append(StructField(
-                c, ArrayType(t) if len(z["shape"]) > 1 else t))
-        return StructType(fields)
+        path, cols = self._path_columns()
+        return _group_source(_resolve_group(path, self.options.get("group")),
+                             cols).schema
 
     def reader(self, schema: StructType) -> ZarrReader:
-        path, group, cols = self._reader_args()
-        lo, hi = _bound_options(self.options)
-        return _apply_max_partitions(
-            ZarrReader(path, group, cols, lo, hi), self.options)
+        path, cols = self._path_columns()
+        return self._reader(ZarrReader, path, self.options.get("group"),
+                            cols)
 
 
-class CasaReader(_RowidChunkPruning, DataSourceReader):
-    """One partition per row-chunk of a CASA table; each task opens
-    its own table handle via the factory (the reference's
-    TableProxy-per-worker pattern) and reads with getcol/getcolslice
-    through the shared chunk kernel."""
-
-    def __init__(self, table_factory, path: str,
-                 columns: list[str] | None, row_chunk: int,
-                 rowid_min: int | None = None,
-                 rowid_max: int | None = None):
-        from .casa import probe_casa_table
-
-        self.table_factory = table_factory
-        self.path = path
-        self.row_chunk = row_chunk
-        _, self.specs, self.slabs, self.nrow = probe_casa_table(
-            table_factory, path, columns)
-        self._init_bounds(rowid_min, rowid_max)
-
-    def read(self, partition: _ChunkPartition):
-        import pyarrow as pa
-
-        from .casa import read_casa_chunk
-
-        table = self.table_factory(self.path)
-        try:
-            for _, lo, hi in self._chunks(partition):
-                cols = read_casa_chunk(table, self.specs, self.slabs,
-                                       lo, hi)
-                rowid = cols[ROWID]
-                keep = ((rowid >= self.lo_bound)
-                        & (rowid <= self.hi_bound))
-                if not keep.any():
-                    continue
-                out = {}
-                for c, v in cols.items():
-                    if isinstance(v, list):
-                        out[c] = pa.array(
-                            [x for x, k in zip(v, keep) if k])
-                    else:
-                        out[c] = pa.array(v[keep])
-                yield pa.RecordBatch.from_pydict(out)
-        finally:
-            if hasattr(table, "close"):
-                table.close()
-
-
-class CasaDataSource(DataSource):
+class CasaDataSource(_ChunkDataSource):
     """``spark.read.format("casa")`` over a CASA table.  Options:
     ``columns`` (comma-separated projection), ``row_chunk``,
     ``rowid_min`` / ``rowid_max`` (inclusive chunk-pruning bounds).
@@ -306,37 +231,19 @@ class CasaDataSource(DataSource):
     def _factory(self):
         if type(self).table_factory is not None:
             return type(self).table_factory
-        from .casa import _casacore_factory, _require_casacore
-
         _require_casacore()
         return _casacore_factory
 
-    def _reader_args(self):
-        path = self.options.get("path")
-        if not path:
-            raise ValueError("load(path) is required for format('casa')")
-        columns = self.options.get("columns")
-        cols = ([c.strip() for c in columns.split(",") if c.strip()]
-                if columns else None)
-        from .casa import DEFAULT_CASA_ROW_CHUNK
-
-        row_chunk = int(self.options.get("row_chunk",
-                                         DEFAULT_CASA_ROW_CHUNK))
-        return path, cols, row_chunk
-
     def schema(self) -> StructType:
-        from .casa import probe_casa_table
-
-        path, cols, _ = self._reader_args()
-        schema, _, _, _ = probe_casa_table(self._factory(), path, cols)
-        return schema
+        path, cols = self._path_columns()
+        return probe_casa_table(self._factory(), path, cols)[0]
 
     def reader(self, schema: StructType) -> CasaReader:
-        path, cols, row_chunk = self._reader_args()
-        lo, hi = _bound_options(self.options)
-        return _apply_max_partitions(
-            CasaReader(self._factory(), path, cols, row_chunk, lo, hi),
-            self.options)
+        path, cols = self._path_columns()
+        row_chunk = int(self.options.get("row_chunk",
+                                         DEFAULT_CASA_ROW_CHUNK))
+        return self._reader(CasaReader, self._factory(), path, cols,
+                            row_chunk)
 
 
 def register_python_sources(spark) -> None:

@@ -27,14 +27,14 @@ Spark-side:
   Arrow list's one flat value buffer.  The driver only writes the
   tiny JSON metadata (``.zgroup``/``.zarray``/``.zattrs``) —
   mirroring the reference's eager DDL step — never the data.
-* **read**: the driver reads only the JSON metadata, then
-  ``mapInArrow`` over a ``spark.range(n_chunks)`` frame of
-  ``min(n_chunks, defaultParallelism)`` partitions (no empty Python
-  task) loads chunk files on executors — the analogue of the
-  reference's per-chunk ``zarr_getter``
-  (daskms/experimental/zarr/__init__.py:367-372).  Tensor columns are
-  Arrow list columns over the chunk's one numpy buffer.  No
-  full-table driver materialisation on any path.  A grouped read
+* **read**: the driver reads only the JSON metadata; each group is
+  a :class:`~.chunks.ChunkSource` whose chunk reads load chunk files
+  on executors — the analogue of the reference's per-chunk
+  ``zarr_getter`` (daskms/experimental/zarr/__init__.py:367-372) —
+  scanned by the shared chunk kernel (:func:`~.chunks.scan_chunks`,
+  one ``mapInArrow``; ``spark.read.format("zarr")`` reads the same
+  source, ``pyds.py``).  No full-table driver materialisation on any
+  path.  A grouped read
   whose keys the stored partition key covers builds its datasets
   from the stored groups (``dataset.regroup_stored``), so each
   dataset reads only its own groups' chunks and no job runs before
@@ -63,10 +63,10 @@ from pyspark.sql.types import (ArrayType, BooleanType, DataType, DoubleType,
                                FloatType, IntegerType, LongType, ShortType,
                                StringType, StructField, StructType,
                                TimestampType)
-from pyspark.sql.pandas.types import to_arrow_schema
 
 from ..dataset import Dataset
 from ..types import PARTITION_KEY, ROWID
+from .chunks import ChunkSource, cell_slab, scan_chunks
 
 try:  # pragma: no cover - zarr absent in this environment
     import zarr as _zarr  # type: ignore
@@ -580,32 +580,6 @@ def _group_dirs(store: str) -> list[str]:
     return sorted(subs, key=order)
 
 
-def _cell_slab(cell_shape: list[int],
-               sl: tuple) -> list[tuple[int, int]]:
-    """Normalise python slices over the cell (non-row) dims into
-    inclusive-exclusive (start, stop) ranges, one per axis (missing
-    trailing axes taken whole; step must be 1 — chunk pruning is about
-    contiguous slabs)."""
-    if len(sl) > len(cell_shape):
-        raise ValueError(
-            f"slice rank {len(sl)} exceeds cell rank {len(cell_shape)}")
-    out = []
-    for axis, dim in enumerate(cell_shape):
-        s = sl[axis] if axis < len(sl) else slice(None)
-        if not isinstance(s, slice):
-            i = int(s)
-            if i < 0:                          # python index semantics
-                i += dim
-            s = slice(i, i + 1)
-        start, stop, step = s.indices(dim)
-        if step != 1:
-            raise ValueError("strided cell slices are not supported")
-        if stop <= start:
-            raise ValueError(f"empty slice on axis {axis}: {s}")
-        out.append((start, stop))
-    return out
-
-
 def _read_cell_chunks(group_dir: str, col: str, z: dict, ci: int,
                       n_valid: int, slab: list | None) -> "np.ndarray":
     """Assemble one row-chunk of a column from its cell-chunk files,
@@ -624,7 +598,7 @@ def _read_cell_chunks(group_dir: str, col: str, z: dict, ci: int,
     decompression (a compressed chunk is an indivisible I/O unit, so
     the slab applies AFTER decode — whole-file pruning still holds);
     other codecs (blosc, ...) take the zarr-package path in
-    ``_read_group``.
+    ``_group_source``.
     """
     cell_shape = list(z["shape"][1:])
     cell_chunks = list(z["chunks"][1:])
@@ -681,22 +655,6 @@ def _read_cell_chunks(group_dir: str, col: str, z: dict, ci: int,
             if len(cell_shape) > 1 else buf)
 
 
-def _arrow_column(arr: "np.ndarray", typ) -> "pa.Array":
-    """One Arrow column of Spark type ``typ`` from a chunk's numpy
-    block: a 1-d array is the column itself, a 2-d ``(rows, width)``
-    block becomes a list column over its one flat buffer."""
-    import pyarrow as pa
-
-    if arr.dtype.kind == "M":       # epoch micros, whatever the unit
-        arr = arr.astype("datetime64[us]").view(np.int64)
-    if arr.ndim == 1:
-        return pa.array(arr, type=typ)
-    n, w = arr.shape
-    offsets = pa.array(np.arange(n + 1, dtype=np.int32) * np.int32(w))
-    return pa.ListArray.from_arrays(
-        offsets, pa.array(arr.reshape(-1), type=typ.value_type), type=typ)
-
-
 def _load_arrays(group_dir: str, columns: Iterable[str] | None) -> dict:
     """``{name: .zarray metadata}`` of the group's arrays, restricted
     to ``columns`` (in that order) when given."""
@@ -724,15 +682,11 @@ def _native(z: dict) -> bool:
         isinstance(comp, dict) and comp.get("id") in ("zlib", "gzip")))
 
 
-def _read_group(spark: SparkSession, group_dir: str,
-                columns: Iterable[str] | None = None,
-                slices: dict | None = None) -> Dataset:
-    attrs_path = os.path.join(group_dir, ".zattrs")
-    attrs = _read_json(attrs_path) if os.path.exists(attrs_path) else {}
-    if PARTITION_KEY in attrs:
-        attrs[PARTITION_KEY] = tuple(
-            tuple(p) for p in attrs[PARTITION_KEY])
-
+def _group_source(group_dir: str, columns: Iterable[str] | None = None,
+                  slices: dict | None = None) -> ChunkSource:
+    """The :class:`~.chunks.ChunkSource` of one group, checked on the
+    driver from its JSON metadata: codecs, one row count, one row
+    chunk, and ``slices`` (tensor column -> cell slab)."""
     arrays = _load_arrays(group_dir, columns)
     slices = dict(slices or {})
     bad = set(slices) - set(arrays)
@@ -744,7 +698,11 @@ def _read_group(spark: SparkSession, group_dir: str,
             raise ValueError(
                 f"column {c} is scalar; slices apply to tensor "
                 "columns only")
-        slabs[c] = _cell_slab(arrays[c]["shape"][1:], tuple(sl))
+        slab = cell_slab(arrays[c]["shape"][1:], tuple(sl))
+        if any(k != 1 for _, _, k in slab):
+            # chunk pruning is about contiguous slabs
+            raise ValueError("strided cell slices are not supported")
+        slabs[c] = [(a, b) for a, b, _ in slab]
 
     compressed = [c for c, z in arrays.items() if not _native(z)]
     if compressed and not HAVE_ZARR:
@@ -763,49 +721,40 @@ def _read_group(spark: SparkSession, group_dir: str,
         t = _np_to_spark(z["dtype"])
         fields.append(StructField(
             c, ArrayType(t) if len(z["shape"]) > 1 else t))
-    schema = StructType(fields)
-    if nrow == 0:
-        return Dataset(spark.createDataFrame([], schema), attrs)
     row_chunks = {z["chunks"][0] for z in arrays.values()}
-    if len(row_chunks) != 1:
+    if nrow and len(row_chunks) != 1:
         raise ValueError("arrays disagree on row chunking; rechunk first")
-    row_chunk = row_chunks.pop()
-    n_chunks = max(1, (nrow + row_chunk - 1) // row_chunk)
-    metas = {c: dict(arrays[c]) for c in arrays}
-    use_zarr_pkg = bool(compressed)
-    arrow_schema = to_arrow_schema(schema)
 
-    def read_chunks(batches):
-        import pyarrow as pa
+    def open_group():
+        return _zarr.open_group(group_dir, mode="r") \
+            if compressed else None  # pragma: no cover
 
-        zroot = _zarr.open_group(group_dir, mode="r") \
-            if use_zarr_pkg else None  # pragma: no cover
-        for batch in batches:
-            for ci in batch.column(0).to_pylist():
-                lo = ci * row_chunk
-                hi = min(nrow, lo + row_chunk)
-                cols = [pa.array(np.arange(lo, hi, dtype=np.int64))]
-                for c, z in metas.items():
-                    slab = slabs.get(c)
-                    if use_zarr_pkg:  # pragma: no cover
-                        if slab is None:
-                            arr = zroot[c][lo:hi]
-                        else:      # zarr prunes cell chunks natively
-                            sel = tuple(slice(a, b) for a, b in slab)
-                            arr = zroot[c][(slice(lo, hi),) + sel]
-                        if arr.ndim > 2:
-                            arr = arr.reshape(arr.shape[0], -1)
-                    else:
-                        arr = _read_cell_chunks(
-                            group_dir, c, z, ci, hi - lo, slab)
-                    cols.append(_arrow_column(
-                        arr, arrow_schema.field(c).type))
-                yield pa.RecordBatch.from_arrays(cols, schema=arrow_schema)
+    def read_chunk(zroot, ci, lo, hi):
+        out = {ROWID: np.arange(lo, hi, dtype=np.int64)}
+        for c, z in arrays.items():
+            slab = slabs.get(c)
+            if zroot is None:
+                out[c] = _read_cell_chunks(group_dir, c, z, ci, hi - lo,
+                                           slab)
+            else:  # pragma: no cover - zarr prunes cell chunks natively
+                out[c] = zroot[c][(slice(lo, hi),) + tuple(
+                    slice(a, b) for a, b in slab or ())]
+        return out
 
-    sc = spark.sparkContext
-    df = spark.range(0, n_chunks, 1, min(n_chunks, sc.defaultParallelism)
-                     ).mapInArrow(read_chunks, schema)
-    return Dataset(df, attrs)
+    return ChunkSource(StructType(fields), nrow, max(row_chunks),
+                       open_group, read_chunk)
+
+
+def _read_group(spark: SparkSession, group_dir: str,
+                columns: Iterable[str] | None = None,
+                slices: dict | None = None) -> Dataset:
+    attrs_path = os.path.join(group_dir, ".zattrs")
+    attrs = _read_json(attrs_path) if os.path.exists(attrs_path) else {}
+    if PARTITION_KEY in attrs:
+        attrs[PARTITION_KEY] = tuple(
+            tuple(p) for p in attrs[PARTITION_KEY])
+    return Dataset(scan_chunks(spark, _group_source(group_dir, columns,
+                                                    slices)), attrs)
 
 
 def xds_from_zarr(spark: SparkSession, store: str,

@@ -51,6 +51,7 @@ from pyspark.sql import functions as F
 
 from ..operators.timeseries import (DEFAULT_ORIGIN, bucket_aggregate,
                                     merge_rollups)
+from ..sources.parquet import scan_parquet
 from .events import normalize_ts
 
 __all__ = ["maintain_rollup", "committed_batch", "read_rollup",
@@ -80,7 +81,7 @@ def read_rollup(spark, store: str) -> DataFrame | None:
     batch = committed_batch(store)
     if batch is None:
         return None
-    return spark.read.parquet(os.path.join(store, f"v{batch}"))
+    return scan_parquet(spark, os.path.join(store, f"v{batch}"))
 
 
 def _publish(store: str, batch_id: int, keep: int = 2) -> None:
@@ -358,8 +359,8 @@ def read_mergeable(spark, store: str, merge) -> DataFrame | None:
     deltas = _committed_deltas(store, upto)
     frames = []
     if base_name is not None:
-        frames.append(spark.read.parquet(os.path.join(store, base_name)))
-    frames.extend(spark.read.parquet(p) for _, p in deltas)
+        frames.append(scan_parquet(spark, os.path.join(store, base_name)))
+    frames.extend(scan_parquet(spark, p) for _, p in deltas)
     if not frames:
         return None
     return merge(*frames)
@@ -407,9 +408,9 @@ def maintain_mergeable(stream_df: DataFrame, store: str, build, merge,
         if len(committed) >= compact_every:
             spark = batch_df.sparkSession
             old_base, old_upto = _base_state(store)
-            frames = ([spark.read.parquet(os.path.join(store, old_base))]
+            frames = ([scan_parquet(spark, os.path.join(store, old_base))]
                       if old_base else [])
-            frames += [spark.read.parquet(p) for _, p in committed]
+            frames += [scan_parquet(spark, p) for _, p in committed]
             folded_to = committed[-1][0]
             new_base = f"base-v{folded_to}"
             merge(*frames).write.mode("overwrite").parquet(

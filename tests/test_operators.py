@@ -157,6 +157,25 @@ def test_fragment_roundtrip_and_ancestry(spark, orders, tmp_path):
     assert merged2.where("o_totalprice = 2.0").count() == n_f
 
 
+def test_fragment_chain_reread_starts_no_job(spark, tmp_path):
+    """Re-reading an unchanged fragment chain starts no Spark job: every
+    store of the chain opens with the schema memoised on first read,
+    and the values are the same."""
+    from tests.conftest import jobs_in
+
+    root, frag = str(tmp_path / "root"), str(tmp_path / "frag")
+    spark.range(20).selectExpr("id AS ROWID", "id * 1.0 AS v") \
+        .write.parquet(root)
+    write_fragment(spark.range(5).selectExpr("id AS ROWID", "-1.0 AS v"),
+                   frag, parent=root)
+    first = read_fragment(spark, frag)
+    again, n = jobs_in(spark, "fragment-reread",
+                       lambda: read_fragment(spark, frag))
+    assert n == 0
+    assert sorted(again.collect()) == sorted(first.collect())
+    assert again.where("v < 0").count() == 5
+
+
 def test_consolidate_later_fragment_wins(spark, orders):
     base = orders.withColumn("ROWID", F.col("o_orderkey")) \
                  .select("ROWID", "o_totalprice")

@@ -154,3 +154,63 @@ def test_format_zarr_reads_zlib_compressed(spark, tmp_path):
     assert r.count() == 500
     got = {x.ROWID: x.V for x in r.where("ROWID IN (0, 499)").collect()}
     assert got == {0: 0.0, 499: 1497.0}
+
+
+def _agree(fmt, api):
+    """Same Spark types, rows and values from both read surfaces."""
+    assert [(f.name, f.dataType) for f in fmt.schema] == \
+        [(f.name, f.dataType) for f in api.schema]
+    assert fmt.orderBy("ROWID").collect() == api.orderBy("ROWID").collect()
+
+
+@pytest.mark.parametrize("layout", [
+    {}, {"compressor": {"id": "zlib", "level": 3}},
+    {"cell_chunks": {"DATA": 4, "FLAG": 2}}])
+def test_zarr_surfaces_agree(spark, tmp_path, layout):
+    """``spark.read.format("zarr")`` and ``xds_from_zarr`` read the
+    same rows, values and types — whole, and under ROWID bounds —
+    from uncompressed, zlib and cell-chunked stores."""
+    from dask_ms_spark.sources.zarr import xds_from_zarr
+
+    df = spark.range(500).selectExpr(
+        "id AS ROWID", "id / 2.0D AS TIME", "CAST(id % 7 AS int) AS ANT",
+        "timestamp_micros(1700000000000000 + id * 1000) AS T",
+        "concat('src', CAST(id % 13 AS string)) AS NAME",
+        "transform(sequence(0, 5), j -> CAST(id + j / 8.0 AS float)) "
+        "AS DATA",
+        "transform(sequence(0, 2), j -> (id + j) % 3 = 0) AS FLAG")
+    path = str(tmp_path / "s.zarr")
+    xds_to_zarr(df, path, row_chunk=64, **layout)
+    register_python_sources(spark)
+    (ds,) = xds_from_zarr(spark, path)
+    _agree(spark.read.format("zarr").load(path), ds.df)
+    bounded = (spark.read.format("zarr").option("rowid_min", "100")
+               .option("rowid_max", "300").load(path))
+    _agree(bounded, ds.df.where("ROWID BETWEEN 100 AND 300"))
+    assert bounded.count() == 201
+
+
+def test_casa_surfaces_agree(spark):
+    """``spark.read.format("casa")`` and ``xds_from_casa`` read the
+    same scalar, string, complex and tensor columns — whole, and
+    under ROWID bounds."""
+    from dask_ms_spark.sources.casa import xds_from_casa
+    from dask_ms_spark.sources.pyds import CasaDataSource
+    from tests.test_sources import FakeCasaTable
+
+    class FakeCasaSource(CasaDataSource):
+        table_factory = staticmethod(FakeCasaTable)
+
+        @classmethod
+        def name(cls):
+            return "fakecasa"
+
+    spark.dataSource.register(FakeCasaSource)
+    (ds,) = xds_from_casa(spark, "/fake/ms", table_factory=FakeCasaTable,
+                          row_chunk=10)
+    load = spark.read.format("fakecasa").option("row_chunk", "10")
+    _agree(load.load("/fake/ms"), ds.df)
+    bounded = (load.option("rowid_min", "13").option("rowid_max", "27")
+               .load("/fake/ms"))
+    _agree(bounded, ds.df.where("ROWID BETWEEN 13 AND 27"))
+    assert bounded.count() == 15

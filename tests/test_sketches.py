@@ -988,9 +988,12 @@ def test_backfill_concurrent_matches_sequential(spark, tmp_path):
 @pytest.mark.parametrize("max_concurrent", [1, 4])
 def test_backfill_jobs_inherit_callers_job_group(spark, tmp_path,
                                                  max_concurrent):
-    """Every partition job runs under the caller's job group and
-    description, whichever pool thread runs it, so job-group metrics
-    and cancellation cover the whole backfill."""
+    """Every partition job runs under the caller's job group,
+    description and job tags, whichever pool thread runs it, so
+    job-group metrics and cancellation cover the whole backfill; the
+    session-less wrapping warning is not raised."""
+    import warnings
+
     from dask_ms_spark.operators.backfill import backfill
 
     seen = []
@@ -998,22 +1001,29 @@ def test_backfill_jobs_inherit_callers_job_group(spark, tmp_path,
     def run(s, p):
         sc = s.sparkContext
         seen.append((sc.getLocalProperty("spark.jobGroup.id"),
-                     sc.getLocalProperty("spark.job.description")))
+                     sc.getLocalProperty("spark.job.description"),
+                     "bf-tag" in s.getTags()))
         return s.range(2).selectExpr(f"'{p}' AS p2", "id")
 
     sc = spark.sparkContext
     sc.setJobGroup("bf-caller", "backfill under test")
+    spark.addTag("bf-tag")
     try:
-        res = dict(backfill(spark, [f"d{i}" for i in range(6)], run,
-                            str(tmp_path / "bfg"),
-                            max_concurrent=max_concurrent))
+        with warnings.catch_warnings(record=True) as caught:
+            warnings.simplefilter("always")
+            res = dict(backfill(spark, [f"d{i}" for i in range(6)], run,
+                                str(tmp_path / "bfg"),
+                                max_concurrent=max_concurrent))
         jobs = sc.statusTracker().getJobIdsForGroup("bf-caller")
     finally:
+        spark.removeTag("bf-tag")
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)
     assert set(res.values()) == {"done"}
-    assert seen == [("bf-caller", "backfill under test")] * 6
+    assert seen == [("bf-caller", "backfill under test", True)] * 6
     assert len(jobs) >= 6   # one write job per partition at least
+    assert not [w for w in caught
+                if "Spark session is not provided" in str(w.message)]
 
 
 def test_fragment_reference_name_aliases(spark, tmp_path):

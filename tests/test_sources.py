@@ -772,16 +772,35 @@ def test_casa_slab_pushdown(spark):
                       slices={"TIME": (slice(0, 1),)})
 
 
+def _assert_chunk_scan(spark, df, n_chunks):
+    """One Python map (the shared ``mapInArrow`` chunk kernel) over a
+    Range of ``min(n_chunks, defaultParallelism)`` splits — no
+    driver-eager createDataFrame of the whole table."""
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    splits = min(n_chunks, spark.sparkContext.defaultParallelism)
+    assert plan.count("MapInArrow") == 1 and "MapInPandas" not in plan
+    assert f"Range (0, {n_chunks}, step=1, splits={splits})" in plan
+    assert "Scan ExistingRDD" not in plan
+
+
 def test_casa_read_plan_is_distributed(spark):
-    """The scan must be mapInPandas over Range — no driver-eager
+    """The scan must be mapInArrow over Range — no driver-eager
     createDataFrame of the whole table (the round-2 weakness)."""
     from dask_ms_spark.sources.casa import xds_from_casa
 
     (ds,) = xds_from_casa(spark, "/fake/ms",
                           table_factory=FakeCasaTable, row_chunk=10)
-    plan = ds.df._jdf.queryExecution().executedPlan().toString()
-    assert "MapInPandas" in plan and "Range" in plan
-    assert "Scan ExistingRDD" not in plan
+    _assert_chunk_scan(spark, ds.df, 4)     # 37 rows / 10-row chunks
+
+
+def test_katdal_read_plan_is_distributed(spark):
+    """The katdal ingest plans the same one-map chunk scan."""
+    from dask_ms_spark.sources.katdal import xds_from_katdal
+
+    for ds in xds_from_katdal(spark, "fake://archive",
+                              loader_factory=FakeKatdalLoader,
+                              dumps_per_chunk=4):  # 6 dumps: 2 chunks
+        _assert_chunk_scan(spark, ds.df, 2)
 
 
 def test_casa_descriptor_builder():
