@@ -37,12 +37,11 @@ from dask_ms_spark.functions.text import (  # noqa: E402
     STOPWORDS, langid, portable_hash64, quality_features, token_count,
     tokens, with_fingerprint)
 from dask_ms_spark.llm.dedup import (  # noqa: E402
-    MINHASH_COEFFS, MINHASH_P, embedding_dup_pairs_gemm, exact_dedup,
-    lsh_jaccard_pairs, normalize_text, with_simhash)
+    MINHASH_COEFFS, MINHASH_P, exact_dedup, lsh_jaccard_pairs,
+    normalize_text, with_simhash)
 from dask_ms_spark.llm.multimodal import (  # noqa: E402
     binary_features, media_table)
-from dask_ms_spark.llm.similarity import (  # noqa: E402
-    brute_force_topk, ivf_topk)
+from dask_ms_spark.llm.similarity import brute_force_topk  # noqa: E402
 from dask_ms_spark.operators.grouping import group_metadata  # noqa: E402
 from dask_ms_spark.operators.joins import (  # noqa: E402
     anti_filter, asof_join, broadcast_lookup, salted_join, semi_filter)
@@ -50,6 +49,7 @@ from pyspark.sql.window import Window  # noqa: E402
 from dask_ms_spark.operators.ordering import (  # noqa: E402
     attach_rowid, group_rank, top_k)
 from dask_ms_spark.operators.overlay import overlay  # noqa: E402
+from dask_ms_spark.sources.parquet import scan_parquet  # noqa: E402
 from dask_ms_spark.streaming.events import (  # noqa: E402
     dedup_events, read_events, sliding_value_stats, windowed_counts)
 
@@ -126,7 +126,7 @@ def _t(spark: SparkSession, sf_dir: str, name: str,
     per_session = _SCAN_MEMO.setdefault(spark, {})
     got = per_session.get(key)
     if got is None:
-        got = spark.read.parquet(path)
+        got = scan_parquet(spark, path)
         if widen and _path_bytes(path) >= _MIN_SPLIT_BYTES:
             got = ensure_parallelism(got)
         per_session[key] = got
@@ -1337,14 +1337,6 @@ def q_dedup_lsh_capped(spark, sf_dir):
                         F.round("jaccard", 6).alias("jaccard"))
 
 
-def q_dedup_embedding(spark, sf_dir):
-    """Embedding-cosine near-dup pairs via distributed blocked GEMM."""
-    pairs = embedding_dup_pairs_gemm(_t(spark, sf_dir, "embeddings"),
-                                     threshold=0.4, block_size=256)
-    return pairs.select("id_a", "id_b",
-                        F.round("cos_sim", 6).alias("cos_sim"))
-
-
 def q_dedup_embedding_bucketed(spark, sf_dir):
     """Embedding near-dup pairs with hyperplane-LSH bucketing in front
     of the blocked-GEMM scorer: block pairs form only within a bucket
@@ -1369,18 +1361,6 @@ def q_dedup_simhash(spark, sf_dir):
     docs = _t(spark, sf_dir, "documents")
     return with_simhash(docs, shingle_k=4, bits=16) \
         .select(F.col("id").alias("doc_id"), "simhash")
-
-
-def q_ann_ivf(spark, sf_dir):
-    """IVF-bucketed approximate nearest neighbours: 16 cells, 4 probes
-    — the ANN scale path (cell-local scoring joins only)."""
-    embs = _t(spark, sf_dir, "embeddings") \
-        .withColumn("embedding", F.col("embedding").cast("array<double>"))
-    queries = embs.where("vec_id < 5")
-    return ivf_topk(embs, queries, k=10, num_cells=16, nprobe=4) \
-        .select("query_id", "neighbor_id",
-                F.col("rank").cast("long").alias("rank"),
-                F.round("cos_sim", 6).alias("cos_sim"))
 
 
 def q_text_winnow(spark, sf_dir):
@@ -1776,21 +1756,6 @@ def q_corpus_mixture(spark, sf_dir):
                      F.round(F.avg("chars"), 4).alias("avg_chars")))
 
 
-def q_contamination(spark, sf_dir):
-    """Train/eval decontamination: train docs (source != src0) whose
-    20-char-gram shingles collide with the eval corpus (source ==
-    src0).  The eval shingle set broadcasts, so the train side never
-    shuffles its payload — the 100 TB decontamination shape."""
-    from dask_ms_spark.llm.contamination import contamination_report
-
-    docs = _t(spark, sf_dir, "documents")
-    report = contamination_report(
-        docs.where(F.col("source") != "src0"),
-        docs.where(F.col("source") == "src0"),
-        n=20, min_hits=1)
-    return report.orderBy("doc_id")
-
-
 def q_stratified_sample(spark, sf_dir):
     """Per-stratum deterministic sampling (the corpus_mixture
     materialization step): per-source keep-rates applied through the
@@ -1849,23 +1814,6 @@ def q_phrase_boilerplate(spark, sf_dir):
     from dask_ms_spark.llm.corpus import phrase_boilerplate
 
     return phrase_boilerplate(_t(spark, sf_dir, "documents"), n=5)
-
-
-def q_pagerank(spark, sf_dir):
-    """PageRank centrality over the near-dup candidate graph (same
-    LSH pair pipeline as split_leakage): template hubs rank high.
-    Two power iterations, fixed-point-quantised contributions so the
-    recursive SQL mirror is value-identical."""
-    from dask_ms_spark.llm.dedup import minhash_lsh_pairs
-    from dask_ms_spark.operators.graph import pagerank
-
-    docs = _t(spark, sf_dir, "documents")
-    pairs = minhash_lsh_pairs(docs, num_hashes=16, num_bands=4,
-                              shingle_k=5, threshold=0.5)
-    pr = pagerank(pairs, "id_a", "id_b",
-                  nodes=docs.select(F.col("doc_id").alias("id")))
-    return pr.select(F.col("id").alias("doc_id"),
-                     F.round("rank", 6).alias("rank"))
 
 
 def q_multimodal_features(spark, sf_dir):
@@ -2233,52 +2181,6 @@ def _langid_sql() -> str:
     """
 
 
-def _kmeans_sql(k: int = 8, iters: int = 2,
-                scale: int = 1 << 20) -> str:
-    """Mirror of llm.clustering.kmeans_assign: lowest-id init, exact
-    double argmin with (d2, cidx) tie-break, fixed-point centroid
-    update (round(x*2^20) summed as bigint).  The vector length is
-    derived from the data (len(vec)) so a regenerated testdata with a
-    different embedding dim cannot silently skew the oracle."""
-    assert iters == 2, "SQL mirror is written for exactly 2 iterations"
-    dist = ("list_sum(list_transform(range(1, len(vec) + 1), "
-            "i -> (vec[i] - cvec[i]) * (vec[i] - cvec[i])))")
-    return f"""
-        WITH pts AS (SELECT vec_id AS id,
-                            list_transform(embedding,
-                                           x -> cast(x as double)) AS vec
-                     FROM embeddings),
-        c0 AS (SELECT row_number() OVER (ORDER BY id) AS cidx,
-                      vec AS cvec
-               FROM (SELECT id, vec FROM pts ORDER BY id LIMIT {k})),
-        d1 AS (SELECT id, vec, cidx, {dist} AS d2
-               FROM pts CROSS JOIN c0),
-        a1 AS (SELECT id, vec, cidx,
-                      row_number() OVER (PARTITION BY id
-                                         ORDER BY d2, cidx) AS rn
-               FROM d1),
-        ex AS (SELECT cidx, i AS pos,
-                      cast(round(vec[i] * {scale}) as bigint) AS qx
-               FROM a1, UNNEST(range(1, len(vec) + 1)) AS t(i)
-               WHERE rn = 1),
-        m AS (SELECT cidx, pos,
-                     cast(sum(qx) as double)
-                     / cast(count(*) * {scale} as double) AS cx
-              FROM ex GROUP BY 1, 2),
-        c1 AS (SELECT cidx, list(cx ORDER BY pos) AS cvec
-               FROM m GROUP BY cidx),
-        d2t AS (SELECT id, cidx, {dist} AS d2
-                FROM pts CROSS JOIN c1),
-        a2 AS (SELECT id, cidx, d2,
-                      row_number() OVER (PARTITION BY id
-                                         ORDER BY d2, cidx) AS rn
-                FROM d2t)
-        SELECT id AS vec_id, cast(cidx as bigint) AS cluster,
-               round(sqrt(d2), 6) AS dist
-        FROM a2 WHERE rn = 1
-    """
-
-
 def _corpus_mixture_sql() -> str:
     """Mirror of q_corpus_mixture: the _langid_sql CASE over stopword
     scores, aggregated per (source, predicted language)."""
@@ -2331,34 +2233,6 @@ def _embed_project_sql(out_dim: int = 4,
             f"i -> cast(embedding[i] as double) * ({lit})[i])), 6) "
             f"AS p{j}")
     return "SELECT vec_id, " + ", ".join(comps) + " FROM embeddings"
-
-
-def _contamination_sql(n: int = 20, min_hits: int = 1) -> str:
-    """Mirror of llm.contamination.contamination_report: eval (src0)
-    distinct gram hashes joined against exploded train grams."""
-    norm = _DUCK_NORM.format(x="text")
-    shingles = (f"list_distinct(CASE WHEN length({norm}) <= {n - 1} "
-                f"THEN [{norm}] ELSE list_transform("
-                f"range(1, length({norm}) - {n - 2}), "
-                f"i -> substring({norm}, i, {n})) END)")
-    hashed = ("list_distinct(list_transform(grams, s -> "
-              + _DUCK_HASH.format(x="s") + "))")
-    return f"""
-        WITH g AS (SELECT doc_id, source, {hashed} AS ghash
-                   FROM (SELECT doc_id, source, {shingles} AS grams
-                         FROM documents)),
-        tg AS (SELECT doc_id, len(ghash) AS n_grams,
-                      unnest(ghash) AS gh
-               FROM g WHERE source <> 'src0'),
-        eg AS (SELECT DISTINCT unnest(ghash) AS gh
-               FROM g WHERE source = 'src0')
-        SELECT doc_id, count(*) AS n_hits, n_grams,
-               round(count(*) / n_grams, 6) AS contamination
-        FROM tg JOIN eg USING (gh)
-        GROUP BY doc_id, n_grams
-        HAVING count(*) >= {min_hits}
-        ORDER BY doc_id
-    """
 
 
 def _lsh_jaccard_sql(n: int = 5, num_hashes: int = 16,
@@ -2491,48 +2365,6 @@ def _winnow_sql(k: int = 8, window: int = 4) -> str:
     """
 
 
-def _ivf_sql(k: int = 10, num_cells: int = 16, nprobe: int = 4,
-             n_queries: int = 5) -> str:
-    """Mirror of llm.similarity.ivf_topk: nearest-centroid cell
-    assignment, nprobe probes per query, exact cosine in probed cells."""
-    cos_vc = _COS.replace("va", "v.vec").replace("vb", "c.cvec")
-    cos_qn = _COS.replace("va", "q.qvec").replace("vb", "n.nvec")
-    return f"""
-        WITH v AS (SELECT vec_id,
-                          list_transform(embedding, x -> cast(x as double))
-                          AS vec FROM embeddings),
-        cent AS (SELECT vec_id AS cent_id, vec AS cvec FROM v
-                 WHERE vec_id < {num_cells}),
-        aff AS (SELECT v.vec_id, v.vec, c.cent_id, {cos_vc} AS aff
-                FROM v, cent c),
-        cells AS (
-            SELECT vec_id AS neighbor_id, vec AS nvec, cent_id AS cell
-            FROM (SELECT *, row_number() OVER (
-                      PARTITION BY vec_id
-                      ORDER BY aff DESC, cent_id ASC) AS pr FROM aff)
-            WHERE pr = 1),
-        probes AS (
-            SELECT vec_id AS query_id, vec AS qvec, cent_id AS cell
-            FROM (SELECT *, row_number() OVER (
-                      PARTITION BY vec_id
-                      ORDER BY aff DESC, cent_id ASC) AS pr FROM aff
-                  WHERE vec_id < {n_queries})
-            WHERE pr <= {nprobe}),
-        scored AS (
-            SELECT DISTINCT q.query_id, n.neighbor_id, {cos_qn} AS cos
-            FROM probes q JOIN cells n ON q.cell = n.cell
-            WHERE q.query_id != n.neighbor_id),
-        ranked AS (
-            SELECT query_id, neighbor_id,
-                   row_number() OVER (PARTITION BY query_id
-                                      ORDER BY cos DESC, neighbor_id ASC)
-                   AS rank, cos
-            FROM scored)
-        SELECT query_id, neighbor_id, rank, round(cos, 6) AS cos_sim
-        FROM ranked WHERE rank <= {k}
-    """
-
-
 def _minhash_drop_sql(n: int = 5, num_hashes: int = 16,
                       num_bands: int = 4, threshold: float = 0.5) -> str:
     """Mirror of llm.dedup.minhash_dedup: banded candidates, estimated
@@ -2635,42 +2467,6 @@ def _lsh_graph_ctes(n: int = 5, num_hashes: int = 16,
             UNION SELECT id_b, id_a FROM edges)"""
 
 
-def _pagerank_sql(iterations: int = 2, damping: float = 0.85,
-                  scale: int = 1 << 20) -> str:
-    """Mirror of q_pagerank: the same candidate graph, two unrolled
-    power iterations with identical fixed-point quantisation; the
-    teleport base is inlined at full precision (``repr``) so both
-    engines use the bit-identical double."""
-    assert iterations == 2, "SQL mirror is written for 2 iterations"
-    base = repr(1.0 - damping)
-    d = repr(float(damping))
-    sc = repr(float(scale))
-    it = """,
-        c{i} AS (SELECT u.d,
-                      cast(round(r.rank / g.outdeg * {sc}) as bigint)
-                          AS qc
-               FROM undir u JOIN deg g ON g.s = u.s
-                            JOIN r{p} r ON r.s = u.s),
-        s{i} AS (SELECT d, cast(sum(qc) as bigint) AS qsum
-               FROM c{i} GROUP BY d),
-        r{i} AS (SELECT g.s,
-                      {b} + {d} * coalesce(s{i}.qsum, 0) / {sc} AS rank
-               FROM deg g LEFT JOIN s{i} ON s{i}.d = g.s)"""
-    iters = "".join(
-        it.format(i=i, p=i - 1, sc=sc, b=base, d=d)
-        for i in range(1, iterations + 1))
-    return f"""
-        WITH
-        {_lsh_graph_ctes()},
-        deg AS (SELECT s, count(*) AS outdeg FROM undir GROUP BY s),
-        r0 AS (SELECT s, 1.0 AS rank FROM deg){iters}
-        SELECT d.doc_id,
-               round(coalesce(r{iterations}.rank, {base}), 6) AS rank
-        FROM documents d
-        LEFT JOIN r{iterations} ON r{iterations}.s = d.doc_id
-    """
-
-
 _COS = ("list_dot_product(va, vb) / "
         "(sqrt(list_dot_product(va, va)) * sqrt(list_dot_product(vb, vb)))")
 
@@ -2737,19 +2533,6 @@ def _ann_lsh_sql(k: int = 10, num_planes: int = 8, dim: int = 64,
             FROM scored)
         SELECT query_id, neighbor_id, rank, round(cos, 6) AS cos_sim
         FROM ranked WHERE rank <= {k}
-    """
-
-
-def _embedding_dup_sql(threshold: float = 0.4) -> str:
-    return f"""
-        WITH v AS (SELECT vec_id,
-                          list_transform(embedding, x -> cast(x as double))
-                          AS vec FROM embeddings)
-        SELECT a.vec_id AS id_a, b.vec_id AS id_b,
-               round({_COS}, 6) AS cos_sim
-        FROM (SELECT vec_id, vec AS va FROM v) a,
-             (SELECT vec_id, vec AS vb FROM v) b
-        WHERE a.vec_id < b.vec_id AND {_COS} >= {threshold}
     """
 
 
@@ -2878,17 +2661,6 @@ def q_cardinality_kmv(spark, sf_dir):
           .where(F.length("t") >= 5)
           .select("lang", F.explode(grams).alias("v")))
     return kmv_distinct(sh, "v", ["lang"], k=64)
-
-
-def q_dedup_semantic(spark, sf_dir):
-    """SemDeDup: deterministic k-means coarse clustering, then cosine
-    near-dup drop *within* clusters only (llm/semantic.py) — catches
-    re-worded redundancy that lexical MinHash cannot see, without the
-    all-pairs join it would naively cost."""
-    from dask_ms_spark.llm.semantic import semantic_dedup
-
-    return semantic_dedup(_t(spark, sf_dir, "embeddings"),
-                          k=16, iters=2, threshold=0.4)
 
 
 def q_dedup_substring(spark, sf_dir):
@@ -3641,9 +3413,11 @@ def _edit_distance_sql(n: int = 5, num_hashes: int = 16,
                        max_ratio: float = 0.4) -> str:
     """Mirror of q_dedup_edit_distance: the _minhash_drop_sql
     candidate CTEs, then exact levenshtein over the shared normalised
-    text (DuckDB's levenshtein == Spark's, probed: unit-cost code
-    points), ratio filtered on the ROUNDED value exactly as the Spark
-    side does."""
+    text, ratio filtered on the ROUNDED value exactly as the Spark
+    side does.  DuckDB's levenshtein counts bytes, not code points
+    (duckdb 1.0.0: levenshtein('café', 'cafe') = 2, Spark's is 1), so
+    this oracle agrees with the code-point kernel only because the sf
+    text is ASCII; ROADMAP item 8 replaces it with one that is not."""
     rows_per_band = num_hashes // num_bands
     norm = _DUCK_NORM.format(x="text")
     shingles = (f"list_distinct(CASE WHEN length({norm}) <= {n - 1} "
@@ -4014,7 +3788,7 @@ def q_ann_ivf_indexed(spark, sf_dir):
 
 def _ivf_indexed_sql(k: int = 10, num_cells: int = 8, nprobe: int = 4,
                      n_queries: int = 5, scale: int = 1 << 20) -> str:
-    """Mirror of build_ivf_index + ivf_query_indexed: the _kmeans_sql
+    """Mirror of build_ivf_index + ivf_query_indexed: kmeans_assign's
     two-iteration Lloyd CTEs (lowest-id init, (d2, cidx) argmin,
     fixed-point centroid update), then the STORED centroids = quantised
     means over final members, probe assignment by cosine against them,
@@ -4123,62 +3897,6 @@ _FLAG_SUMMARY_SQL = """
            cast(round(cast(sum(nf) as double) / sum(nv) * 1000000)
                 as bigint) AS frac_q
     FROM r GROUP BY b
-"""
-
-
-def q_ann_pq(spark, sf_dir):
-    """Product-quantization ANN (llm/similarity.py pq_topk): corpus
-    vectors collapse to 8 codebook codes (the 32x scan-compression
-    move that makes exhaustive asymmetric-distance search affordable
-    at 100 TB), queries score via broadcast per-query lookup tables.
-    Distances are order-free fixed-point int64 sums, so ranking is
-    engine-exact and the oracle mirrors the argmin/LUT arithmetic
-    term by term."""
-    from dask_ms_spark.llm.similarity import pq_topk
-
-    embs = _t(spark, sf_dir, "embeddings") \
-        .withColumn("embedding", F.col("embedding").cast("array<double>"))
-    queries = embs.where("vec_id < 5")
-    return pq_topk(embs, queries, dim=64, k=10, num_sub=8,
-                   num_codes=8) \
-        .select("query_id", "neighbor_id",
-                F.col("rank").cast("long").alias("rank"), "approx_d")
-
-
-_ANN_PQ_SQL = """
-    WITH v AS (SELECT vec_id AS id,
-                      list_transform(embedding,
-                                     x -> cast(x as double)) AS vec
-               FROM embeddings),
-    sv AS (SELECT id, m, list_slice(vec, m * 8 + 1, m * 8 + 8) AS sv
-           FROM v, UNNEST(range(8)) AS t(m)),
-    cb AS (SELECT m, cast(id as int) AS k, sv AS cv
-           FROM sv WHERE id < 8),
-    dist AS (SELECT s.id, s.m, c.k,
-                    list_sum(list_transform(range(1, 9),
-                        i -> cast(round((s.sv[i] - c.cv[i])
-                                        * (s.sv[i] - c.cv[i])
-                                        * 1048576) as bigint))) AS d
-             FROM sv s JOIN cb c USING (m)),
-    enc AS (SELECT id, m, k AS code FROM (
-                SELECT id, m, k, row_number() OVER (
-                    PARTITION BY id, m ORDER BY d, k) AS rn
-                FROM dist)
-            WHERE rn = 1),
-    lut AS (SELECT id AS qid, m, k, d AS pd FROM dist WHERE id < 5),
-    scored AS (SELECT l.qid AS query_id, e.id AS neighbor_id,
-                      cast(sum(l.pd) as bigint) AS approx_d
-               FROM enc e JOIN lut l ON l.m = e.m AND l.k = e.code
-               WHERE l.qid != e.id
-               GROUP BY 1, 2),
-    ranked AS (SELECT query_id, neighbor_id, approx_d,
-                      row_number() OVER (PARTITION BY query_id
-                                         ORDER BY approx_d,
-                                                  neighbor_id) AS rank
-               FROM scored)
-    SELECT query_id, neighbor_id, cast(rank as bigint) AS rank,
-           approx_d
-    FROM ranked WHERE rank <= 10
 """
 
 
@@ -4778,51 +4496,6 @@ _FLAG_GROW_SQL = """
 """
 
 
-def q_ngram_novelty(spark, sf_dir):
-    """Per-document n-gram novelty (llm/corpus.py ngram_novelty):
-    fraction of a doc's distinct word trigrams appearing in no other
-    document — grams shuffle as 8-byte md5-derived hashes, never
-    strings; one explode, one df aggregation, one hash-keyed join
-    back, one doc-keyed aggregation."""
-    from dask_ms_spark.llm.corpus import ngram_novelty
-
-    docs = _t(spark, sf_dir, "documents")
-    out = ngram_novelty(docs, n=3)
-    return out.select(
-        "doc_id", F.col("n_distinct").cast("long").alias("n_distinct"),
-        F.col("n_novel").cast("long").alias("n_novel"),
-        F.round(F.col("novelty") * 1e6).cast("long").alias("novelty_q"))
-
-
-def _ngram_novelty_sql() -> str:
-    gram = "w[i] || ' ' || w[i + 1] || ' ' || w[i + 2]"
-    h = _DUCK_HASH.format(x=gram)
-    return f"""
-    WITH t AS (SELECT doc_id,
-                      CASE WHEN length(trim(text, ' \t\n\x0b\f\r')) = 0 THEN []
-                           ELSE regexp_split_to_array(
-                               trim(lower(text), ' \t\n\x0b\f\r'), '\\s+') END AS w
-               FROM documents),
-    g AS (SELECT doc_id,
-                 list_distinct(list_transform(
-                     generate_series(1, len(w) - 2), i -> {h}))
-                 AS grams
-          FROM t WHERE len(w) >= 3),
-    e AS (SELECT doc_id, unnest(grams) AS g FROM g),
-    dfq AS (SELECT g, count(*) AS df FROM e GROUP BY g),
-    sc AS (SELECT doc_id, cast(count(*) as bigint) AS n_distinct,
-                  cast(sum(CASE WHEN df = 1 THEN 1 ELSE 0 END)
-                       as bigint) AS n_novel
-           FROM e JOIN dfq USING (g) GROUP BY doc_id)
-    SELECT d.doc_id,
-           coalesce(sc.n_distinct, 0) AS n_distinct,
-           coalesce(sc.n_novel, 0) AS n_novel,
-           cast(round(cast(sc.n_novel as double) / sc.n_distinct
-                      * 1000000.0) as bigint) AS novelty_q
-    FROM documents d LEFT JOIN sc ON d.doc_id = sc.doc_id
-"""
-
-
 def q_channel_regrid(spark, sf_dir):
     """Doppler-frame channel regrid (functions/vector.py
     channel_regrid): per-row fractional shift via linear
@@ -4974,37 +4647,6 @@ def _imaging_weights_sql() -> str:
                               / mean_w)) * 1000000) as bigint) AS iw_q
     FROM n CROSS JOIN g
     """
-
-
-def q_sample_temperature(spark, sf_dir):
-    """Temperature-balanced mixture sampling (llm/sampling.py
-    sample_temperature, the mT5 rebalancing): per-source char mass
-    moves toward the alpha=0.5 share by pure downsampling — sqrt
-    spelling is IEEE-exact cross-engine, the rarest source keeps
-    rate 1, membership is the coordinated hash filter."""
-    from dask_ms_spark.llm.sampling import sample_temperature
-
-    docs = _t(spark, sf_dir, "documents")
-    out = sample_temperature(docs, "doc_id", "source", alpha=0.5,
-                             count_col="n_chars")
-    return out.select("doc_id", "source",
-                      F.col("n_chars").cast("long").alias("n_chars"))
-
-
-_SAMPLE_TEMPERATURE_SQL = """
-    WITH stats AS (SELECT source, CAST(sum(n_chars) AS DOUBLE) AS n
-                   FROM documents GROUP BY source),
-    r AS (SELECT source, sqrt(n) / n AS ratio FROM stats),
-    m AS (SELECT max(ratio) AS rmax FROM r),
-    rates AS (SELECT source, ratio / rmax AS rate
-              FROM r CROSS JOIN m)
-    SELECT d.doc_id, d.source, CAST(d.n_chars AS BIGINT) AS n_chars
-    FROM documents d JOIN rates t ON d.source = t.source
-    WHERE cast(('0x' || substring(md5(cast(doc_id as varchar)
-                                      || 'temperature'), 1, 15))
-               as bigint) % 1000000
-          < CAST(floor(t.rate * 1000000) AS BIGINT)
-"""
 
 
 def q_crossmatch_nearest(spark, sf_dir):
@@ -5352,62 +4994,6 @@ _STOKES_SQL = """
 """
 
 
-def q_closure_phase(spark, sf_dir):
-    """Closure phases (operators/calibration.py closure_phases): the
-    gain-independent triangle diagnostic arg(V_pq V_qr conj(V_pr));
-    baselines are a dimension-sized relation, so all three join legs
-    broadcast.  Synthetic per-baseline phases theta(p, q) make every
-    triangle's closure theta_pq + theta_qr - theta_pr, which the
-    oracle mirrors arithmetic-exactly."""
-    from dask_ms_spark.operators.calibration import closure_phases
-
-    embs = _t(spark, sf_dir, "embeddings")
-    base = embs.select((F.col("vec_id") % 8).alias("antenna1"),
-                       ((F.col("vec_id") / 8).cast("long") % 8)
-                       .alias("antenna2")).distinct() \
-        .where(F.col("antenna1") < F.col("antenna2"))
-    p = F.col("antenna1").cast("double")
-    q = F.col("antenna2").cast("double")
-    th = 0.1 * (p + q) + 0.05 * (p - q)
-    d = base.select("antenna1", "antenna2",
-                    F.array(F.cos(th), F.sin(th)).alias("vis"))
-    out = closure_phases(d)
-    return out.select(
-        "p", "q", "r",
-        F.round(F.col("closure_phase") * 1e6).cast("long")
-         .alias("cp_q"))
-
-
-_CLOSURE_SQL = """
-    WITH base AS (SELECT DISTINCT vec_id % 8 AS p,
-                                  (vec_id // 8) % 8 AS q
-                  FROM embeddings),
-    pairs AS (SELECT p, q,
-                     cos(0.1 * (cast(p as double) + cast(q as double))
-                         + 0.05 * (cast(p as double)
-                                   - cast(q as double))) AS re,
-                     sin(0.1 * (cast(p as double) + cast(q as double))
-                         + 0.05 * (cast(p as double)
-                                   - cast(q as double))) AS im
-              FROM base WHERE p < q),
-    tri AS (SELECT a.p, a.q, b.q AS r,
-                   a.re AS re1, a.im AS im1,
-                   b.re AS re2, b.im AS im2,
-                   c.re AS re3, c.im AS im3
-            FROM pairs a
-            JOIN pairs b ON b.p = a.q
-            JOIN pairs c ON c.p = a.p AND c.q = b.q)
-    SELECT p, q, r,
-           cast(round(atan2(
-               (re1 * im2 + im1 * re2) * re3
-                   - (re1 * re2 - im1 * im2) * im3,
-               (re1 * re2 - im1 * im2) * re3
-                   + (re1 * im2 + im1 * re2) * im3) * 1000000)
-                as bigint) AS cp_q
-    FROM tri
-"""
-
-
 def q_hanning(spark, sf_dir):
     """Hanning spectral smoothing (functions/vector.py
     hanning_smooth): [0.25, 0.5, 0.25] channel convolution with
@@ -5568,73 +5154,6 @@ def _predict_vis_sql() -> str:
                                           + v * 0.0015)))
                       * 1000000) as bigint) AS im_q
     FROM d
-    """
-
-
-def q_grid_vis(spark, sf_dir):
-    """Visibility gridding (operators/imaging.py grid_visibilities):
-    predict -> quantise per row -> scatter onto a 64x64 uv grid with
-    the hermitian fold.  The groupBy key space is bounded by npix^2,
-    so map-side partial aggregation makes the exchange carry grid
-    cells, not visibilities; per-row int64 quantisation BEFORE the
-    cell sum keeps the reduction shuffle-order deterministic."""
-    from dask_ms_spark.operators.calibration import predict_vis
-    from dask_ms_spark.operators.imaging import grid_visibilities
-
-    embs = _t(spark, sf_dir, "embeddings")
-    d = embs.select(
-        "vec_id",
-        ((F.col("vec_id") * 13.7) % 64.0 - 32.0).alias("u"),
-        ((F.col("vec_id") * 7.3) % 64.0 - 32.0).alias("v"))
-    vis = predict_vis(d, "u", "v",
-                      [(2.0, 1e-3, -2e-3), (1.0, -3e-3, 1.5e-3)])
-    q = vis.select(
-        "u", "v",
-        F.round(F.element_at("model_vis", 1) * 1e6).alias("re"),
-        F.round(F.element_at("model_vis", 2) * 1e6).alias("im"))
-    g = grid_visibilities(q, "u", "v", "re", "im", cell_size=1.0,
-                          npix=64, hermitian=True)
-    return g.select(
-        F.col("iu").cast("long").alias("iu"),
-        F.col("iv").cast("long").alias("iv"),
-        F.col("vis_re").cast("long").alias("re_q"),
-        F.col("vis_im").cast("long").alias("im_q"),
-        F.col("n_vis").cast("long").alias("n_vis"))
-
-
-def _grid_vis_sql() -> str:
-    import math
-
-    num, den = (2.0 * math.pi).as_integer_ratio()
-    c = f"(CAST({num} AS DOUBLE) / {den})"
-    return f"""
-    WITH d AS (SELECT fmod(vec_id * 13.7e0, 64.0) - 32.0 AS u,
-                      fmod(vec_id * 7.3e0, 64.0) - 32.0 AS v
-               FROM embeddings),
-    p AS (SELECT u, v,
-                 round((2.0 * cos({c} * (u * 0.001 + v * (-0.002)))
-                        + 1.0 * cos({c} * (u * (-0.003)
-                                           + v * 0.0015))) * 1000000)
-                     AS re,
-                 round((2.0 * sin({c} * (u * 0.001 + v * (-0.002)))
-                        + 1.0 * sin({c} * (u * (-0.003)
-                                           + v * 0.0015))) * 1000000)
-                     AS im
-          FROM d),
-    h AS (SELECT u, v, re, im FROM p
-          UNION ALL
-          SELECT -u, -v, re, -im FROM p),
-    cells AS (SELECT cast(floor(u / 1.0 + 0.5) as bigint) + 32 AS iu,
-                     cast(floor(v / 1.0 + 0.5) as bigint) + 32 AS iv,
-                     re, im
-              FROM h)
-    SELECT iu, iv,
-           cast(sum(re) as bigint) AS re_q,
-           cast(sum(im) as bigint) AS im_q,
-           count(*) AS n_vis
-    FROM cells
-    WHERE iu >= 0 AND iu < 64 AND iv >= 0 AND iv < 64
-    GROUP BY 1, 2
     """
 
 
@@ -5858,78 +5377,6 @@ def _uvw_sql() -> str:
     """
 
 
-def q_grid_wstack(spark, sf_dir):
-    """W-stacked gridding (operators/imaging.py
-    grid_visibilities_wstack): the wide-field path — visibilities
-    bin to w-planes with floor(w/step + 0.5) (engine-portable, no
-    round()), then per-plane bounded grid aggregation; the w-term
-    enters prediction as a literal-baked n-1 constant."""
-    from dask_ms_spark.operators.calibration import predict_vis
-    from dask_ms_spark.operators.imaging import (
-        grid_visibilities_wstack)
-
-    embs = _t(spark, sf_dir, "embeddings")
-    d = embs.select(
-        "vec_id",
-        ((F.col("vec_id") * 13.7) % 64.0 - 32.0).alias("u"),
-        ((F.col("vec_id") * 7.3) % 64.0 - 32.0).alias("v"),
-        ((F.col("vec_id") * 3.1) % 40.0 - 20.0).alias("w"))
-    vis = predict_vis(d, "u", "v", [(2.0, 0.05, -0.08)], w_col="w")
-    q = vis.select(
-        "u", "v", "w",
-        F.round(F.element_at("model_vis", 1) * 1e6).alias("re"),
-        F.round(F.element_at("model_vis", 2) * 1e6).alias("im"))
-    g = grid_visibilities_wstack(q, "u", "v", "w", "re", "im",
-                                 cell_size=1.0, npix=64, w_step=4.0,
-                                 hermitian=True)
-    return g.select(
-        F.col("iw").cast("long").alias("iw"),
-        F.col("iu").cast("long").alias("iu"),
-        F.col("iv").cast("long").alias("iv"),
-        F.col("vis_re").cast("long").alias("re_q"),
-        F.col("vis_im").cast("long").alias("im_q"),
-        F.col("n_vis").cast("long").alias("n_vis"))
-
-
-def _grid_wstack_sql() -> str:
-    import math
-
-    num, den = (2.0 * math.pi).as_integer_ratio()
-    c = f"(CAST({num} AS DOUBLE) / {den})"
-    n1 = math.sqrt(1.0 - 0.05 ** 2 - (-0.08) ** 2) - 1.0
-    n1n, n1d = n1.as_integer_ratio()
-    n1s = f"(CAST({n1n} AS DOUBLE) / {n1d})"
-    return f"""
-    WITH d AS (SELECT fmod(vec_id * 13.7e0, 64.0) - 32.0 AS u,
-                      fmod(vec_id * 7.3e0, 64.0) - 32.0 AS v,
-                      fmod(vec_id * 3.1e0, 40.0) - 20.0 AS w
-               FROM embeddings),
-    p AS (SELECT u, v, w,
-                 round(2.0 * cos({c} * (u * 0.05 + v * (-0.08)
-                                        + w * {n1s})) * 1000000)
-                     AS re,
-                 round(2.0 * sin({c} * (u * 0.05 + v * (-0.08)
-                                        + w * {n1s})) * 1000000)
-                     AS im
-          FROM d),
-    h AS (SELECT u, v, w, re, im FROM p
-          UNION ALL
-          SELECT -u, -v, -w, re, -im FROM p),
-    cells AS (SELECT cast(floor(w / 4.0 + 0.5) as bigint) AS iw,
-                     cast(floor(u / 1.0 + 0.5) as bigint) + 32 AS iu,
-                     cast(floor(v / 1.0 + 0.5) as bigint) + 32 AS iv,
-                     re, im
-              FROM h)
-    SELECT iw, iu, iv,
-           cast(sum(re) as bigint) AS re_q,
-           cast(sum(im) as bigint) AS im_q,
-           count(*) AS n_vis
-    FROM cells
-    WHERE iu >= 0 AND iu < 64 AND iv >= 0 AND iv < 64
-    GROUP BY 1, 2, 3
-    """
-
-
 def q_dsir_select(spark, sf_dir):
     """DSIR importance weighting (llm/dsir.py): hashed-unigram
     importance of every document against the src1 target slice.
@@ -6036,52 +5483,6 @@ _STATWT_SQL = """
            cast(round(sigma * 1000000.0) as bigint) AS sigma_q,
            cast(round(1000.0 / (sigma * sigma)) as bigint) AS weight_q
     FROM c JOIN s USING (b)
-"""
-
-
-def q_events_changepoint(spark, sf_dir):
-    """CUSUM changepoint per event_type
-    (operators/timeseries.py cusum_changepoints): one shuffle on the
-    key serves the running sum, the per-key totals and the argmax;
-    int64 fixed point end-to-end (qs=2^12 keeps n*S_k far under 2^63
-    at 10x this stream's size)."""
-    from dask_ms_spark.operators.timeseries import cusum_changepoints
-
-    ev = _t(spark, sf_dir, "events")
-    return cusum_changepoints(ev, value_col="value",
-                              order_cols=("ts", "event_id"),
-                              by="event_type",
-                              quantize_scale=1 << 12)
-
-
-_EVENTS_CHANGEPOINT_SQL = """
-    WITH x AS (SELECT event_type, ts, event_id,
-                      cast(round(value * 4096.0) as bigint) AS xq
-               FROM events),
-    r AS (SELECT event_type,
-                 row_number() OVER w AS k,
-                 sum(xq) OVER (w ROWS BETWEEN UNBOUNDED PRECEDING
-                               AND CURRENT ROW) AS run,
-                 sum(xq) OVER (PARTITION BY event_type) AS tot,
-                 count(*) OVER (PARTITION BY event_type) AS n
-          FROM x
-          WINDOW w AS (PARTITION BY event_type
-                       ORDER BY ts, event_id)),
-    s AS (SELECT event_type, k, n, run, tot,
-                 n * run - k * tot AS nsk
-          FROM r WHERE k < n),
-    best AS (SELECT *, row_number() OVER (
-                 PARTITION BY event_type
-                 ORDER BY abs(nsk) DESC, k ASC) AS rn
-             FROM s)
-    SELECT event_type, cast(n as bigint) AS n,
-           cast(k as bigint) AS change_pos,
-           cast(round(abs(nsk) / cast(n as double)) as bigint)
-               AS cusum_max_q,
-           round((cast(tot - run as double) / (n - k)
-                  - cast(run as double) / k) / 4096.0, 6)
-               AS mean_shift
-    FROM best WHERE rn = 1
 """
 
 
@@ -6284,49 +5685,6 @@ _CCNET_BUCKETS_SQL = """
 """
 
 
-def q_lm_kneser_ney(spark, sf_dir):
-    """Interpolated Kneser-Ney bigram LM scoring (llm/corpus.py
-    lm_perplexity(smoothing='kneser_ney') — the smoothing family
-    KenLM/CCNet actually use): discounted seen mass + distinct-
-    continuation backoff; self-scored, so every instance takes the
-    seen branch and the oracle mirrors the formula exactly."""
-    from dask_ms_spark.llm.corpus import lm_perplexity
-
-    docs = _t(spark, sf_dir, "documents")
-    return lm_perplexity(docs, smoothing="kneser_ney")
-
-
-_LM_KNESER_NEY_SQL = """
-    WITH t AS (SELECT doc_id,
-                      CASE WHEN length(trim(text, ' \t\n\x0b\f\r')) = 0 THEN []
-                           ELSE regexp_split_to_array(
-                               trim(lower(text), ' \t\n\x0b\f\r'), '\\s+') END
-                      AS toks
-               FROM documents),
-    g AS (SELECT doc_id, toks[i] AS w1, toks[i+1] AS w2
-          FROM t, UNNEST(range(1, len(toks))) AS r(i)
-          WHERE len(toks) >= 2),
-    uni AS (SELECT w1, count(*) AS c1 FROM g GROUP BY w1),
-    bi AS (SELECT w1, w2, count(*) AS c2 FROM g GROUP BY w1, w2),
-    nf AS (SELECT w1, count(*) AS nfv FROM bi GROUP BY w1),
-    nb AS (SELECT w2, count(*) AS nbv FROM bi GROUP BY w2),
-    nt AS (SELECT count(*) AS n_types FROM bi),
-    sc AS (SELECT doc_id,
-                  cast(round(-ln(
-                      greatest(c2 - 0.75, 0.0) / c1
-                      + 0.75 * nfv / c1
-                        * (nbv / cast(n_types as double)))
-                      * 1048576.0) as bigint) AS q
-           FROM g JOIN bi USING (w1, w2) JOIN uni USING (w1)
-                JOIN nf USING (w1) JOIN nb USING (w2)
-                CROSS JOIN nt)
-    SELECT doc_id, cast(count(*) as bigint) AS n_bigrams,
-           round(cast(sum(q) as double) / count(*) / 1048576.0, 6)
-               AS avg_neg_logp
-    FROM sc GROUP BY doc_id
-"""
-
-
 def q_attribution(spark, sf_dir):
     """Last-touch conversion attribution: every purchase credits the
     same user's most recent click/view within a 7-day horizon — the
@@ -6382,94 +5740,6 @@ _ATTRIBUTION_SQL = """
            cast(count(*) as bigint) AS n_conversions,
            cast(sum(cents) as bigint) AS value_cents
     FROM p GROUP BY touch_type
-"""
-
-
-def q_bandpass_solve(spark, sf_dir):
-    """Per-channel bandpass solve (operators/calibration.py
-    bandpass_solve — the CASA bandpass task shape): gain_solve with
-    the channel as an extra key, two damped iterations over
-    channel-dependent synthetic gains; int64-quantised sums keep the
-    oracle bit-exact per (chan, antenna)."""
-    from dask_ms_spark.operators.calibration import bandpass_solve
-
-    embs = _t(spark, sf_dir, "embeddings")
-    p = (F.col("vec_id") % 8).cast("double")
-    q = ((F.col("vec_id") / 8).cast("long") % 8).cast("double")
-    c = (F.col("vec_id") % 3).cast("double")
-    ap, bp = 1.0 + 0.05 * p + 0.01 * c, 0.02 * p - 0.005 * c
-    aq, bq = 1.0 + 0.05 * q + 0.01 * c, 0.02 * q - 0.005 * c
-    s = 1.0 + 0.001 * (F.col("vec_id") % 7).cast("double")
-    d = embs.select(
-        (F.col("vec_id") % 3).alias("chan"),
-        (F.col("vec_id") % 8).alias("antenna1"),
-        ((F.col("vec_id") / 8).cast("long") % 8).alias("antenna2"),
-        F.array(s * (ap * aq + bp * bq),
-                s * (bp * aq - ap * bq)).alias("vis")) \
-        .where(F.col("antenna1") < F.col("antenna2"))
-    out = bandpass_solve(d, iters=2, damping=0.5)
-    return out.select(
-        "chan", "antenna",
-        F.round(F.element_at("gain", 1) * 1e6).cast("long")
-         .alias("gre_q"),
-        F.round(F.element_at("gain", 2) * 1e6).cast("long")
-         .alias("gim_q"))
-
-
-_BANDPASS_SQL = """
-    WITH base AS (
-        SELECT vec_id, vec_id % 3 AS ch,
-               vec_id % 8 AS a1, (vec_id // 8) % 8 AS a2,
-               1.0 + 0.05 * cast(vec_id % 8 as double)
-                   + 0.01 * cast(vec_id % 3 as double) AS ap,
-               0.02 * cast(vec_id % 8 as double)
-                   - 0.005 * cast(vec_id % 3 as double) AS bp,
-               1.0 + 0.05 * cast((vec_id // 8) % 8 as double)
-                   + 0.01 * cast(vec_id % 3 as double) AS aq,
-               0.02 * cast((vec_id // 8) % 8 as double)
-                   - 0.005 * cast(vec_id % 3 as double) AS bq,
-               1.0 + 0.001 * cast(vec_id % 7 as double) AS s
-        FROM embeddings),
-    vis AS (SELECT ch, a1, a2,
-                   s * (ap * aq + bp * bq) AS vre,
-                   s * (bp * aq - ap * bq) AS vim
-            FROM base WHERE a1 < a2),
-    edges AS (SELECT ch, a1 AS p, a2 AS q, vre, vim FROM vis
-              UNION ALL
-              SELECT ch, a2 AS p, a1 AS q, vre, -vim AS vim FROM vis),
-    it1 AS (SELECT ch, p AS antenna,
-                   cast(sum(cast(round(vre * 1048576.0) as bigint))
-                        as double) / 1048576.0 AS sre,
-                   cast(sum(cast(round(vim * 1048576.0) as bigint))
-                        as double) / 1048576.0 AS sim,
-                   cast(sum(cast(round(1.0 * 1048576.0) as bigint))
-                        as double) / 1048576.0 AS sd
-            FROM edges GROUP BY ch, p),
-    g1 AS (SELECT ch, antenna,
-                  0.5 * 1.0 + (0.5 * sre) / sd AS gre,
-                  0.5 * 0.0 + (0.5 * sim) / sd AS gim
-           FROM it1),
-    it2 AS (SELECT e.ch, e.p AS antenna,
-                   cast(sum(cast(round((e.vre * g.gre - e.vim * g.gim)
-                                       * 1048576.0) as bigint))
-                        as double) / 1048576.0 AS sre,
-                   cast(sum(cast(round((e.vre * g.gim + e.vim * g.gre)
-                                       * 1048576.0) as bigint))
-                        as double) / 1048576.0 AS sim,
-                   cast(sum(cast(round((g.gre * g.gre + g.gim * g.gim)
-                                       * 1048576.0) as bigint))
-                        as double) / 1048576.0 AS sd
-            FROM edges e JOIN g1 g ON g.antenna = e.q AND g.ch = e.ch
-            GROUP BY e.ch, e.p),
-    g2 AS (SELECT i.ch, i.antenna,
-                  0.5 * g.gre + (0.5 * i.sre) / i.sd AS gre,
-                  0.5 * g.gim + (0.5 * i.sim) / i.sd AS gim
-           FROM it2 i JOIN g1 g ON g.antenna = i.antenna
-                                AND g.ch = i.ch)
-    SELECT ch AS chan, antenna,
-           cast(round(gre * 1000000) as bigint) AS gre_q,
-           cast(round(gim * 1000000) as bigint) AS gim_q
-    FROM g2
 """
 
 
@@ -6617,58 +5887,6 @@ def _cusum_segments_sql(min_seg: int = 8, min_shift: float = 5.0,
     """
 
 
-def q_heaps_fit(spark, sf_dir):
-    """Heaps'-law vocabulary-growth fit (llm/corpus.py heaps_fit,
-    the zipf_fit companion): first-occurrence positions from one
-    doc-offset prefix sum, V(n) at 40 log-spaced checkpoints in a
-    single conditional-sum aggregate, native regr fit over the
-    (ln n, ln V) points."""
-    from dask_ms_spark.llm.corpus import heaps_fit
-
-    return heaps_fit(_t(spark, sf_dir, "documents"))
-
-
-_HEAPS_SQL = """
-    WITH t AS (SELECT doc_id,
-                      CASE WHEN length(trim(text, ' \t\n\x0b\f\r')) = 0 THEN []
-                           ELSE regexp_split_to_array(
-                               trim(lower(text), ' \t\n\x0b\f\r'), '\\s+') END
-                      AS toks
-               FROM documents),
-    c AS (SELECT doc_id, len(toks) AS cnt FROM t),
-    o AS (SELECT doc_id,
-                 coalesce(sum(cnt) OVER (ORDER BY doc_id
-                          ROWS BETWEEN UNBOUNDED PRECEDING
-                          AND 1 PRECEDING), 0) AS off
-          FROM c),
-    inst AS (SELECT toks[i] AS w, off + i AS gpos
-             FROM t JOIN o USING (doc_id),
-                  UNNEST(range(1, len(toks) + 1)) AS u(i)),
-    first AS (SELECT w, min(gpos) AS fp FROM inst GROUP BY w),
-    tot AS (SELECT sum(cnt) AS n_tokens FROM c),
-    voc AS (SELECT count(*) AS vocab FROM first),
-    gs AS (SELECT DISTINCT greatest(1, cast(floor(
-               exp(ln(cast(n_tokens as double)) * g / 40.0) + 0.5)
-               as bigint)) AS n
-           FROM range(1, 41) AS r(g) CROSS JOIN tot),
-    pts AS (SELECT gs.n,
-                   (SELECT count(*) FROM first WHERE fp <= gs.n)
-                       AS v
-            FROM gs)
-    SELECT cast(n_tokens as bigint) AS n_tokens,
-           cast(vocab as bigint) AS vocab_size,
-           round(regr_slope(ln(cast(v as double)),
-                            ln(cast(n as double))), 6)
-               AS heaps_beta,
-           round(exp(regr_intercept(ln(cast(v as double)),
-                                    ln(cast(n as double)))), 6)
-               AS heaps_k
-    FROM pts CROSS JOIN tot CROSS JOIN voc
-    WHERE v > 0
-    GROUP BY n_tokens, vocab
-"""
-
-
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship query on /root/testdata/sf0.001; driver checks rows>0.
 
@@ -6681,7 +5899,7 @@ def entry(spark: SparkSession) -> DataFrame:
 
 # Every query builder in driver order, named by its function without
 # the "q_" prefix.  The driver validates only the first 50 names of
-# queries(); the demoted builders (see _DEMOTED) close the table.
+# queries().
 _BUILDERS: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     fn.__name__[2:]: fn for fn in (
         # driver window, positions 1-50
@@ -6728,45 +5946,11 @@ _BUILDERS: dict[str, Callable[[SparkSession, str], DataFrame]] = {
         q_expr_arithmetic, q_group_partition, q_sorted_read,
         q_within_group_sort, q_topk, q_broadcast_join, q_concat, q_overlay,
         q_complex_mul, q_asof_join,
-        # demoted
-        q_dedup_embedding, q_grid_vis, q_grid_wstack, q_ann_pq,
-        q_dedup_semantic, q_contamination, q_events_changepoint,
-        q_closure_phase, q_lm_kneser_ney, q_sample_temperature,
-        q_bandpass_solve, q_heaps_fit, q_ngram_novelty, q_ann_ivf, q_pagerank,
     )}
-
-# Demoted queries stay out of queries() to bound the bench sweep's
-# wall-clock.  Each runs the library code named on its line, which no
-# registered query runs; tools/check_oracle.py and
-# tests/test_llm.py::test_demoted_queries_still_oracle_green sweep
-# their oracles.
-_DEMOTED = (
-    "dedup_embedding",     # llm.dedup.embedding_dup_pairs_gemm (all-pairs)
-    "grid_vis",            # operators.imaging.grid_visibilities (single plane)
-    "grid_wstack",         # imaging.grid_visibilities_wstack + predict_vis
-    "ann_pq",              # llm.similarity.pq_codebooks + pq_topk (flat)
-    "dedup_semantic",      # llm.semantic.semantic_dedup
-    "contamination",       # llm.contamination.contamination_report
-    "events_changepoint",  # operators.timeseries.cusum_changepoints
-    "closure_phase",       # operators.calibration.closure_phases
-    "lm_kneser_ney",       # llm.corpus.lm_perplexity's Kneser-Ney branch
-    "sample_temperature",  # llm.sampling.sample_temperature
-    "bandpass_solve",      # operators.calibration.bandpass_solve
-    "heaps_fit",           # llm.corpus.heaps_fit
-    "ngram_novelty",       # llm.corpus.ngram_novelty
-    "ann_ivf",             # llm.similarity.ivf_topk (transient index)
-    "pagerank",            # operators.graph.pagerank (power iteration)
-)
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    return {k: fn for k, fn in _BUILDERS.items()
-            if k not in _DEMOTED}
-
-
-def demoted_queries() -> dict[str, Callable[[SparkSession, str],
-                                            DataFrame]]:
-    return {k: _BUILDERS[k] for k in _DEMOTED}
+    return dict(_BUILDERS)
 
 
 # quality-filter mirror; pipeline_funnel composes it verbatim
@@ -6824,9 +6008,8 @@ _QUALITY_FILTER_SQL = """
         """
 
 
-def _oracle_sql_all() -> dict[str, str]:
-    """Every oracle, registered and demoted; oracle_sql() and
-    demoted_oracle_sql() filter it."""
+def oracle_sql() -> dict[str, str]:
+    """The DuckDB oracle of every ``queries()`` entry, by name."""
     h_norm_text = _DUCK_HASH.format(x=_DUCK_NORM.format(x="text"))
     out = {
         "projection": """
@@ -7235,7 +6418,6 @@ def _oracle_sql_all() -> dict[str, str]:
         "dedup_embedding_bucketed": _embedding_bucketed_sql(),
         "dedup_simhash": _simhash_sql(),
         "similarity_topk": _similarity_topk_sql(),
-        "ann_ivf": _ivf_sql(),
         "ann_ivf_indexed": _ivf_indexed_sql(),
         # snapshot_roundtrip: a faithful store copy has the source's
         # aggregates; versions row pins the pointer advance (0 -> 1)
@@ -7275,7 +6457,6 @@ def _oracle_sql_all() -> dict[str, str]:
         "gain_solve": _GAIN_SOLVE_SQL,
         "applycal": _APPLYCAL_SQL,
         "flag_grow": _FLAG_GROW_SQL,
-        "ngram_novelty": _ngram_novelty_sql(),
         "parallactic_angle": _PARALLACTIC_SQL,
         "dedup_containment": _containment_sql(),
         "sample_unimax": _sample_unimax_sql(),
@@ -7283,28 +6464,22 @@ def _oracle_sql_all() -> dict[str, str]:
         "tokenizer_fertility": _tokenizer_fertility_sql(),
         "grid_conv": _grid_conv_sql(),
         "statwt": _STATWT_SQL,
-        "events_changepoint": _EVENTS_CHANGEPOINT_SQL,
         "c4_filter": _C4_FILTER_SQL,
         "closure_amp": _CLOSURE_AMP_SQL,
         "split_leakage": _split_leakage_sql(),
         "ccnet_buckets": _CCNET_BUCKETS_SQL,
-        "lm_kneser_ney": _LM_KNESER_NEY_SQL,
         "attribution": _ATTRIBUTION_SQL,
-        "bandpass_solve": _BANDPASS_SQL,
         "cuped": _CUPED_SQL,
         "cusum_segments": _cusum_segments_sql(),
-        "heaps_fit": _HEAPS_SQL,
         "channel_regrid": _CHANNEL_REGRID_SQL,
         "spectral_moments": _SPECTRAL_MOMENTS_SQL,
         "imaging_weights": _imaging_weights_sql(),
-        "sample_temperature": _SAMPLE_TEMPERATURE_SQL,
         "crossmatch_nearest": _CROSSMATCH_NEAREST_SQL,
         "bda_weighted": _BDA_WEIGHTED_SQL,
         "sigma_clip": _SIGMA_CLIP_SQL,
         "ann_ivfpq": _ANN_IVFPQ_SQL,
         "curriculum": _CURRICULUM_SQL,
         "stokes_convert": _STOKES_SQL,
-        "closure_phase": _CLOSURE_SQL,
         "hanning": _HANNING_SQL,
         "uvcontsub": _UVCONTSUB_SQL,
         "predict_vis": _predict_vis_sql(),
@@ -7837,7 +7012,6 @@ def _oracle_sql_all() -> dict[str, str]:
             for c in ["o_orderkey", "o_custkey", "o_orderstatus",
                       "o_orderpriority"]),
         
-        "pagerank": _pagerank_sql(),
         "corpus_mixture": _corpus_mixture_sql(),
         "text_repetition": """
             WITH t AS (SELECT doc_id,
@@ -8693,34 +7867,6 @@ def _oracle_sql_all() -> dict[str, str]:
                        AS simpson_diversity
             FROM q GROUP BY doc_id
         """,
-        "dedup_embedding": _embedding_dup_sql(),
-        "grid_vis": _grid_vis_sql(),
-        "grid_wstack": _grid_wstack_sql(),
-        "ann_pq": _ANN_PQ_SQL,
-        "contamination": _contamination_sql(),
-        # dedup_semantic: the k-means mirror as the coarse quantizer,
-        # then within-cluster rounded-cosine >= 0.4 against any lower id
-        "dedup_semantic": f"""
-            WITH km AS ({_kmeans_sql(k=16, iters=2)}),
-            v AS (SELECT vec_id,
-                         list_transform(embedding,
-                                        x -> cast(x as double)) AS vec
-                  FROM embeddings),
-            m AS (SELECT km.vec_id AS id, km.cluster, v.vec
-                  FROM km JOIN v USING (vec_id)),
-            p AS (SELECT b.id AS id,
-                         max(round({_COS.replace('va', 'a.vec')
-                                        .replace('vb', 'b.vec')}, 6))
-                             AS max_sim
-                  FROM m a JOIN m b
-                    ON a.cluster = b.cluster AND a.id < b.id
-                  WHERE round({_COS.replace('va', 'a.vec')
-                                   .replace('vb', 'b.vec')}, 6) >= 0.4
-                  GROUP BY b.id)
-            SELECT m.id AS vec_id, m.cluster,
-                   (p.max_sim IS NULL) AS keep, p.max_sim
-            FROM m LEFT JOIN p ON m.id = p.id
-        """,
     }
     # pipeline_funnel composes the quality-filter and minhash-drop
     # mirrors verbatim (same CTE text = bit-identical stage verdicts)
@@ -8749,13 +7895,3 @@ def _oracle_sql_all() -> dict[str, str]:
         GROUP BY d.lang
     """
     return out
-
-
-def oracle_sql() -> dict[str, str]:
-    return {k: sql for k, sql in _oracle_sql_all().items()
-            if k not in _DEMOTED}
-
-
-def demoted_oracle_sql() -> dict[str, str]:
-    return {k: sql for k, sql in _oracle_sql_all().items()
-            if k in _DEMOTED}

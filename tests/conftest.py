@@ -55,6 +55,22 @@ def jobs_in(spark, group: str, fn):
     return out, len(sc.statusTracker().getJobIdsForGroup(group))
 
 
+def spark_round(x, digits=0):
+    """Spark's ``round`` of a double: HALF_UP on its decimal form."""
+    from decimal import ROUND_HALF_UP, Decimal
+
+    return float(Decimal(repr(x)).quantize(Decimal(1).scaleb(-digits),
+                                           rounding=ROUND_HALF_UP))
+
+
+def fold(xs):
+    """Left-to-right float sum, the order Spark's ``aggregate`` folds in."""
+    acc = 0.0
+    for x in xs:
+        acc += x
+    return acc
+
+
 @pytest.fixture(scope="session")
 def lineitem(spark):
     return table(spark, "lineitem")

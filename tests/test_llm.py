@@ -15,6 +15,7 @@ from dask_ms_spark.llm.dedup import (embedding_dup_pairs,
 from dask_ms_spark.llm.multimodal import (decode_image_features, media_table,
                                           sample_video_frames)
 from dask_ms_spark.llm.similarity import brute_force_topk, lsh_topk
+from tests.conftest import spark_round
 
 
 def test_exact_dedup_finds_planted_dups(spark):
@@ -350,6 +351,21 @@ def test_contamination_flags_copied_grams(spark):
     assert 1 in rows and 2 not in rows
     assert rows[1].n_hits >= 1
     assert 0 < rows[1].contamination <= 1.0
+
+    # exact: distinct 20-char grams of the normalised text, in Python
+    def grams(t):
+        t = " ".join(t.lower().split())
+        return {t[i:i + 20] for i in range(len(t) - 19)} or {t}
+
+    ev = set().union(*(grams(r.text) for r in eval_docs.collect()))
+    want = {}
+    for r in train.collect():
+        g = grams(r.text)
+        if g & ev:
+            want[r.doc_id] = (len(g & ev), len(g),
+                              spark_round(len(g & ev) / len(g), 6))
+    assert {i: (r.n_hits, r.n_grams, r.contamination)
+            for i, r in rows.items()} == want
     # the 100 TB shape: eval grams reach the train side via a
     # broadcast hash join (no train-side payload shuffle)
     plan = rep._jdf.queryExecution().executedPlan().toString()
@@ -785,38 +801,6 @@ def test_decode_real_image_parity(spark):
     assert got[2].mean_px == pytest.approx(float(expect.mean()))
 
 
-def test_demoted_queries_still_oracle_green(spark):
-    """Demotion guard: every entry pulled from the driver registry
-    (see __spark_entry__.demoted_queries) must still match its DuckDB
-    oracle at sf0.001 — demotion bounds bench wall-clock, it must
-    never silently drop correctness coverage."""
-    import os
-    import sys
-
-    import duckdb
-
-    sys.path.insert(0, os.path.dirname(os.path.dirname(
-        os.path.abspath(__file__))))
-    import __spark_entry__ as entrymod
-    from tools.check_oracle import TABLES, frame_compare
-
-    sf_dir = "/root/testdata/sf0.001"
-    con = duckdb.connect()
-    con.execute("SET TimeZone='UTC'")
-    for t in TABLES:
-        p = os.path.join(sf_dir, f"{t}.parquet")
-        if os.path.exists(p):
-            con.execute(f"CREATE VIEW {t} AS SELECT * "
-                        f"FROM read_parquet('{p}')")
-    qs = entrymod.demoted_queries()
-    oracles = entrymod.demoted_oracle_sql()
-    assert qs, "demotion registry unexpectedly empty"
-    for name, fn in qs.items():
-        sdf = fn(spark, sf_dir).toPandas()
-        ddf = con.execute(oracles[name]).df()
-        assert frame_compare(sdf, ddf) == [], name
-
-
 def test_edit_distance_pairs_planted(spark):
     """Planted revision pairs are found with exact edit counts; an
     unrelated doc produces no pair; the banded threshold form drops
@@ -1003,6 +987,68 @@ def test_pq_distances_deterministic(spark):
                for r in pq_topk(df8, q, dim=16, k=5, num_sub=4).collect())
     assert a == b
 
+    # exact: codebook k of subspace m is vector k's m-th subvector;
+    # codes and LUT use the fixed-point l2^2 (each squared term
+    # rounded at 2^20), ties to the lower code / neighbour id
+    vecs = {r.vec_id: r.embedding for r in rows}
+
+    def l2q(x, y):
+        return sum(int(spark_round((s - t) * (s - t) * (1 << 20)))
+                   for s, t in zip(x, y))
+
+    def sub(v, m):
+        return v[4 * m:4 * m + 4]
+
+    codes = {i: [min(range(8), key=lambda c: (l2q(sub(v, m),
+                                                  sub(vecs[c], m)), c))
+                 for m in range(4)] for i, v in vecs.items()}
+    want = []
+    for qi in range(3):
+        d = sorted((sum(l2q(sub(vecs[qi], m), sub(vecs[codes[i][m]], m))
+                        for m in range(4)), i)
+                   for i in vecs if i != qi)
+        want += [(qi, i, dist, r) for r, (dist, i) in enumerate(d[:5], 1)]
+    assert a == sorted(want)
+
+
+def test_ivf_topk_matches_numpy(spark):
+    """ivf_topk against a numpy run of the same algorithm: the first
+    num_cells vectors are the centroids, each corpus vector sits in its
+    nearest cell by cosine, each query probes its nprobe nearest cells,
+    and candidates rank by exact cosine with ties broken by
+    neighbor_id (two identical vectors plant such a tie)."""
+    from dask_ms_spark.llm.similarity import ivf_topk
+
+    rng = np.random.RandomState(5)
+    vecs = {i: rng.randn(8) for i in range(60)}
+    vecs[41] = vecs[42] = vecs[43] + 0.01 * rng.randn(8)
+    df = spark.createDataFrame(
+        [(i, [float(x) for x in v]) for i, v in vecs.items()],
+        "vec_id long, embedding array<double>")
+    qids = [3, 17, 29, 43, 50, 58]
+    got = {}
+    for r in ivf_topk(df, df.where(F.col("vec_id").isin(qids)), k=5,
+                      num_cells=6, nprobe=2).collect():
+        got.setdefault(r.query_id, []).append(
+            (r.rank, r.neighbor_id, round(r.cos_sim, 6)))
+
+    def cos(a, b):
+        return float(np.dot(a, b) / (np.linalg.norm(a) * np.linalg.norm(b)))
+
+    def nearest_cells(v, n):
+        return sorted(range(6), key=lambda c: (-cos(v, vecs[c]), c))[:n]
+
+    cell = {i: nearest_cells(v, 1)[0] for i, v in vecs.items()}
+    want = {}
+    for q in qids:
+        probed = set(nearest_cells(vecs[q], 2))
+        cand = sorted((-cos(vecs[q], vecs[i]), i) for i in vecs
+                      if i != q and cell[i] in probed)
+        want[q] = [(r, i, round(-c, 6))
+                   for r, (c, i) in enumerate(cand[:5], 1)]
+    assert {q: sorted(v) for q, v in got.items()} == want
+    assert [i for _, i, _ in want[43][:2]] == [41, 42]
+
 
 def test_pq_index_roundtrip(spark, tmp_path):
     """Persisted PQ index: query-time results are identical to the
@@ -1057,6 +1103,35 @@ def test_sample_temperature_rebalances(spark):
 
     full = sample_temperature(df, "doc_id", "src", alpha=1.0)
     assert full.count() == 1000               # natural mixture intact
+
+    # exact membership, by row count and by a count_col mass: rate
+    # sqrt(n)/n over its max, kept iff the id's md5 bucket (first 15
+    # hex digits of md5(id || salt), mod 1e6) is below floor(rate * 1e6)
+    import hashlib
+    import math
+
+    def bucket(doc_id):
+        h = hashlib.md5(f"{doc_id}temperature".encode()).hexdigest()
+        return int(h[:15], 16) % 1_000_000
+
+    def keep(rows, mass):
+        tot = {}
+        for r in rows:
+            tot[r.src] = tot.get(r.src, 0.0) + mass(r)
+        ratio = {s: math.sqrt(n) / n for s, n in tot.items()}
+        rate = {s: x / max(ratio.values()) for s, x in ratio.items()}
+        return sorted(r.doc_id for r in rows
+                      if bucket(r.doc_id)
+                      < math.floor(rate[r.src] * 1_000_000))
+
+    assert sorted(r.doc_id for r in out.collect()) == \
+        keep(rows, lambda r: 1.0)
+    wrows = [Row(doc_id=r.doc_id, src=r.src, n=r.doc_id % 7 + 1)
+             for r in rows]
+    wout = sample_temperature(spark.createDataFrame(wrows), "doc_id",
+                              "src", alpha=0.5, count_col="n")
+    assert sorted(r.doc_id for r in wout.collect()) == \
+        keep(wrows, lambda r: float(r.n))
 
     with pytest.raises(ValueError, match="alpha"):
         sample_temperature(df, "doc_id", "src", alpha=0.0)
@@ -1633,6 +1708,15 @@ def test_lm_perplexity_kneser_ney_exact(spark):
         want = round(qsum / (len(ws) - 1) / qs, 6)
         assert got[i].avg_neg_logp == want, (i, got[i], want)
 
+    # self-scored (the LM is the scored corpus): every bigram is seen
+    self_got = {r.doc_id: r.avg_neg_logp for r in lm_perplexity(
+        lm, smoothing="kneser_ney").collect()}
+    for i, t in enumerate(lm_texts):
+        ws = t.split()
+        qsum = sum(round(-math.log(p_kn(ws[j], ws[j + 1])) * qs)
+                   for j in range(len(ws) - 1))
+        assert self_got[i] == round(qsum / (len(ws) - 1) / qs, 6), i
+
     # fluency ranking on the self-scored corpus
     fluent = ["the cat sat on the mat " * 3] * 4
     gib = [f"qq{i}x wy{i}z jk{i}m" for i in range(4)]
@@ -1664,6 +1748,20 @@ def test_heaps_fit_zipfian_corpus(spark):
     assert got.n_tokens == 60 * 200
     assert 0.6 < got.heaps_beta < 0.95          # natural-text range
     assert got.heaps_k > 0
+
+    # exact: first global position of each word (docs in id order),
+    # V(n) at 40 log-spaced checkpoints, least-squares fit in numpy
+    first = {}
+    toks = [w for _, t in sorted(docs) for w in t.lower().split()]
+    for pos, w in enumerate(toks, 1):
+        first.setdefault(w, pos)
+    ns = sorted({max(1, int(np.floor(np.exp(np.log(len(toks)) * g / 40)
+                                     + 0.5))) for g in range(1, 41)})
+    vs = np.searchsorted(np.sort(list(first.values())), ns, side="right")
+    beta, ln_k = np.polyfit(np.log(ns), np.log(vs), 1)
+    assert got.vocab_size == len(first)
+    assert got.heaps_beta == pytest.approx(round(beta, 6), abs=1e-6)
+    assert got.heaps_k == pytest.approx(round(np.exp(ln_k), 6), abs=1e-6)
 
     flat_docs = [(i, " ".join(rng.choice(["a", "b", "c"], size=200)))
                  for i in range(60)]

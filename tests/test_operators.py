@@ -1225,6 +1225,35 @@ def test_wstack_recovers_wide_field_source(spark):
     planes = {int(r.iw) for r in wg.select("iw").distinct().collect()}
     assert planes == {-iw for iw in planes}
 
+    # exact cell sums on off-centre samples (integer re/im, so any
+    # summation order is exact): plane floor(w/step + 0.5), cell
+    # floor(u/cell + 0.5) + npix/2, out-of-grid rows clipped, and the
+    # hermitian fold adds (-u, -v, -w, re, -im)
+    import math
+
+    pts = [(0.4, -1.6, 2.9, 3.0, 1.0), (0.6, -1.4, 3.2, -2.0, 5.0),
+           (-3.5, 2.5, -0.9, 7.0, -4.0), (15.7, 0.0, 1.0, 1.0, 1.0),
+           (1.49, 1.51, -5.1, 2.0, 2.0)]
+    want = {}
+    for u, v, w, re, im in pts + [(-u, -v, -w, re, -im)
+                                   for u, v, w, re, im in pts]:
+        iu, iv = (math.floor(u / 1.0 + 0.5) + 4,
+                  math.floor(v / 1.0 + 0.5) + 4)
+        if 0 <= iu < 8 and 0 <= iv < 8:
+            cell = want.setdefault(
+                (math.floor(w / 2.0 + 0.5), iu, iv), [0.0, 0.0, 0.0, 0])
+            cell[0] += re
+            cell[1] += im
+            cell[2] += 1.0
+            cell[3] += 1
+    small = spark.createDataFrame(
+        pts, "u double, v double, w double, re double, im double")
+    got = {(r.iw, r.iu, r.iv): [r.vis_re, r.vis_im, r.wsum, r.n_vis]
+           for r in grid_visibilities_wstack(
+               small, "u", "v", "w", "re", "im", cell_size=1.0, npix=8,
+               w_step=2.0).collect()}
+    assert got == want
+
 
 def test_hogbom_clean_recovers_sources(spark):
     """Full imaging chain: predict two point sources -> grid ->
@@ -1833,6 +1862,33 @@ def test_bandpass_solve_per_channel_gains(spark):
                         * true_g[(q_, c)].conjugate())
                 assert cmath.isclose(got, want, rel_tol=1e-3), \
                     (c, p_, q_)
+
+    # exact: two damped antsol steps per channel in pure Python, the
+    # per-antenna sums quantised to int64 at 2^20 as the solver does
+    from tests.conftest import spark_round
+
+    qs, d = float(1 << 20), 0.5
+    edges = [(r.chan, r.antenna1, r.antenna2, r.vis[0], r.vis[1])
+             for r in rows]
+    edges += [(c, q_, p_, re, -im) for c, p_, q_, re, im in edges]
+    gains = {(c, p_): (1.0, 0.0) for c, p_, _, _, _ in edges}
+    for _ in range(2):
+        acc = {key: [0, 0, 0] for key in gains}
+        for c, p_, q_, re, im in edges:
+            gre, gim = gains[(c, q_)]
+            tot = acc[(c, p_)]
+            tot[0] += int(spark_round((re * gre - im * gim) * qs))
+            tot[1] += int(spark_round((re * gim + im * gre) * qs))
+            tot[2] += int(spark_round((gre * gre + gim * gim) * qs))
+        step = {}
+        for key, (gre, gim) in gains.items():
+            sre, sim, sd = (x / qs for x in acc[key])
+            step[key] = ((1 - d) * gre + d * sre / sd,
+                         (1 - d) * gim + d * sim / sd)
+        gains = step
+    got2 = {(r.chan, r.antenna): tuple(r.gain) for r in bandpass_solve(
+        df, iters=2, damping=d).collect()}
+    assert got2 == gains
 
 
 def test_predict_vis_gaussian_components(spark):

@@ -597,32 +597,13 @@ def test_crossmatch_join_is_cell_keyed(spark):
     assert "BroadcastNestedLoopJoin" not in p
 
 
-def _plans_md_ledger(text):
-    """Parse the ``registered (N): ...`` / ``demoted (N): ...`` name
-    sets plan_audit.py appends to its output (r10 verdict item 2)."""
-    import re
-
-    out = {}
-    for kind in ("registered", "demoted"):
-        m = re.search(rf"^{kind} \((\d+)\): (.*)$", text, re.M)
-        assert m, f"PLANS.md missing the '{kind} (N): ...' ledger line"
-        names = m.group(2).split()
-        assert len(names) == int(m.group(1)), (
-            f"PLANS.md {kind} ledger count {m.group(1)} disagrees "
-            f"with its own name list ({len(names)} names)")
-        out[kind] = set(names)
-    return out
-
-
 def test_plans_md_matches_registry():
-    """PLANS.md must not rot (r6 verdict item 3, strengthened r11 per
-    r10 verdict item 2): the EXACT registered and demoted name sets
-    recorded in PLANS.md must equal the live ``queries()`` /
-    ``demoted_queries()`` — a query moving between the lists without
-    a regeneration (the r10 ann_ivf demotion) now fails, where the
-    old count-only check stayed green.  Regenerate with
-    ``python tools/plan_audit.py`` -> PLANS.md via the close-out step
-    whenever queries are added/demoted/moved."""
+    """PLANS.md must not rot: the ``registered (N): ...`` name set that
+    tools/plan_audit.py appends must equal the live ``queries()``
+    (the exact set, not just the count), and its footer must report
+    every query audited with 0 hard anti-patterns.  Regenerate with
+    ``python tools/plan_audit.py`` whenever queries are added or
+    removed."""
     import os
     import re
 
@@ -632,48 +613,22 @@ def test_plans_md_matches_registry():
         os.path.abspath(__file__))), "PLANS.md")
     with open(plans) as fh:
         text = fh.read()
-    ledger = _plans_md_ledger(text)
-    live_reg = set(entrymod.queries())
-    live_dem = set(entrymod.demoted_queries())
-    assert ledger["registered"] == live_reg, (
+    m = re.search(r"^registered \((\d+)\): (.*)$", text, re.M)
+    assert m, "PLANS.md missing the 'registered (N): ...' ledger line"
+    names = m.group(2).split()
+    assert len(names) == int(m.group(1)), (
+        f"PLANS.md ledger count {m.group(1)} disagrees with its own "
+        f"name list ({len(names)} names)")
+    live = set(entrymod.queries())
+    assert set(names) == live, (
         "PLANS.md registered set drifted from the live registry: "
-        f"missing={sorted(live_reg - ledger['registered'])} "
-        f"stale={sorted(ledger['registered'] - live_reg)} — "
-        "regenerate via tools/plan_audit.py")
-    assert ledger["demoted"] == live_dem, (
-        "PLANS.md demoted set drifted from the live registry: "
-        f"missing={sorted(live_dem - ledger['demoted'])} "
-        f"stale={sorted(ledger['demoted'] - live_dem)} — "
+        f"missing={sorted(live - set(names))} "
+        f"stale={sorted(set(names) - live)} — "
         "regenerate via tools/plan_audit.py")
     m = re.search(r"(\d+) queries audited; (\d+) with hard", text)
     assert m, "PLANS.md missing the plan_audit footer"
-    assert int(m.group(1)) == len(live_reg) + len(live_dem)
+    assert int(m.group(1)) == len(live)
     assert int(m.group(2)) == 0
-
-
-def test_plans_md_ledger_detects_list_moves():
-    """The guard must catch exactly the drift class it was built for:
-    a query moving between the registered and demoted lists without a
-    PLANS.md regeneration (r10 verdict item 2 — ann_ivf's move was
-    invisible to the count-only check, which this simulates: the
-    TOTAL stays constant while both sets are wrong)."""
-    import os
-
-    import __spark_entry__ as entrymod
-
-    plans = os.path.join(os.path.dirname(os.path.dirname(
-        os.path.abspath(__file__))), "PLANS.md")
-    with open(plans) as fh:
-        ledger = _plans_md_ledger(fh.read())
-    mover = sorted(ledger["registered"])[0]
-    moved = {"registered": ledger["registered"] - {mover},
-             "demoted": ledger["demoted"] | {mover}}
-    # same total (the old check's blind spot) ...
-    assert (len(moved["registered"]) + len(moved["demoted"])
-            == len(entrymod.queries()) + len(entrymod.demoted_queries()))
-    # ... but the set comparison sees it
-    assert moved["registered"] != set(entrymod.queries())
-    assert moved["demoted"] != set(entrymod.demoted_queries())
 
 
 # The driver validates the first 50 names of queries(); this is that
@@ -694,16 +649,40 @@ _DRIVER_WINDOW = (
 
 
 def test_registry_contract():
-    """One registry, two tiers: registered and demoted names are
-    disjoint, each tier's oracle keys equal its query keys, and the
-    driver window keeps its names and order."""
+    """One registry tier: every top-level ``q_*`` builder is in
+    ``queries()``, the oracle keys equal the query keys, the driver
+    window keeps its names and order, and every other module-level
+    name of __spark_entry__.py is referenced in the file (a builder
+    or SQL helper nothing reaches cannot linger)."""
+    import ast
+
     import __spark_entry__ as entrymod
 
-    reg, dem = entrymod.queries(), entrymod.demoted_queries()
-    assert not set(reg) & set(dem)
+    reg = entrymod.queries()
     assert set(entrymod.oracle_sql()) == set(reg)
-    assert set(entrymod.demoted_oracle_sql()) == set(dem)
     assert tuple(reg)[:50] == _DRIVER_WINDOW
+
+    with open(entrymod.__file__) as fh:
+        tree = ast.parse(fh.read())
+    defined = set()
+    for node in tree.body:
+        if isinstance(node, (ast.FunctionDef, ast.ClassDef)):
+            defined.add(node.name)
+        elif isinstance(node, (ast.Assign, ast.AnnAssign)):
+            targets = (node.targets if isinstance(node, ast.Assign)
+                       else [node.target])
+            defined |= {t.id for t in targets if isinstance(t, ast.Name)}
+        elif isinstance(node, (ast.Import, ast.ImportFrom)):
+            if getattr(node, "module", None) != "__future__":
+                defined |= {(a.asname or a.name).split(".")[0]
+                            for a in node.names}
+    builders = {n[2:] for n in defined if n.startswith("q_")}
+    assert builders == set(reg), (
+        f"builders outside queries(): {sorted(builders - set(reg))}")
+    used = {n.id for n in ast.walk(tree)
+            if isinstance(n, ast.Name) and isinstance(n.ctx, ast.Load)}
+    unused = defined - used - {"entry", "queries", "oracle_sql"}
+    assert not unused, f"unreferenced module-level names: {sorted(unused)}"
 
 
 def test_round7_debut_plan_shapes(spark):
@@ -774,11 +753,11 @@ def test_heaps_and_zipf_two_level_prefix(spark):
     ordered window left runs over the #partitions-sized totals table
     (allowed=1), never the doc/vocab table itself."""
     import __spark_entry__ as entry
+    from dask_ms_spark.llm.corpus import heaps_fit
     from dask_ms_spark.plans import assert_no_unpartitioned_window
 
-    # heaps_fit demoted r9 (suite-wall bound) — the plan pin stays
-    hf = entry.demoted_queries()["heaps_fit"](spark,
-                                              "/root/testdata/sf0.001")
+    hf = heaps_fit(spark.read.parquet(
+        "/root/testdata/sf0.001/documents.parquet"))
     assert_no_unpartitioned_window(hf, allowed=1)
     zf = entry.queries()["zipf_fit"](spark, "/root/testdata/sf0.001")
     assert_no_unpartitioned_window(zf, allowed=1)
@@ -798,3 +777,21 @@ def test_scan_memo_t_and_ev_never_alias(spark):
     assert ev is not t
     assert entry._ev(spark, sf) is ev       # memo still effective
     assert entry._t(spark, sf, "events") is t
+
+
+def test_t_reuses_schema_read_events_inferred(spark, tmp_path):
+    """_t scans through sources.parquet.scan_parquet, the one
+    single-path parquet scan: once _ev has read a table (and so
+    inferred its schema), _t on the same file starts no Spark job."""
+    import shutil
+
+    import __spark_entry__ as entry
+    from tests.conftest import jobs_in
+
+    shutil.copy("/root/testdata/sf0.001/events.parquet", tmp_path)
+    sf = str(tmp_path)
+    entry._ev(spark, sf)
+    t, n = jobs_in(spark, "t-after-ev",
+                   lambda: entry._t(spark, sf, "events"))
+    assert n == 0
+    assert t.count() == entry._ev(spark, sf).count()

@@ -12,6 +12,7 @@ from dask_ms_spark.llm.corpus import (char_entropy, collocations_pmi,
                                       substring_dedup)
 from dask_ms_spark.llm.semantic import semantic_dedup
 from dask_ms_spark.llm.sketches import kmv_distinct
+from tests.conftest import fold, spark_round
 
 
 # ---------------------------------------------------------------- KMV
@@ -92,6 +93,57 @@ def test_semantic_dedup_respects_cluster_boundary(spark):
     assert keeps == {min(i for i in clusters
                          if clusters[i] == c) for c in
                      set(clusters.values())}
+
+
+def test_semantic_dedup_matches_python(spark):
+    """Exact verdicts against a pure-Python SemDeDup: k-means seeded
+    with the k lowest ids, argmin on (squared distance, centroid
+    index), centroids updated as 2^20 fixed-point means; then a vector
+    is dropped iff a lower id in its cluster has 6-dp cosine >= the
+    threshold, max_sim being the largest such cosine."""
+    import random
+
+    rnd = random.Random(4)
+    centres = [[rnd.uniform(-5, 5) for _ in range(4)] for _ in range(3)]
+    vecs = {}
+    for i in range(30):
+        vecs[i] = [c + rnd.gauss(0, 0.8) for c in centres[i % 3]]
+    for i in (24, 25, 26):                     # planted near-copies
+        vecs[i] = [x + rnd.gauss(0, 0.01) for x in vecs[i - 12]]
+    got = {r.vec_id: (r.cluster, r.keep, r.max_sim)
+           for r in semantic_dedup(spark.createDataFrame(
+               list(vecs.items()), "vec_id long, embedding array<double>"),
+               k=4, iters=2, threshold=0.95).collect()}
+
+    scale = 1 << 20
+    ids = sorted(vecs)
+    cents = {c + 1: vecs[i] for c, i in enumerate(ids[:4])}
+    for it in range(2):
+        cluster = {i: min((fold((x - y) * (x - y)
+                                 for x, y in zip(vecs[i], cv)), c)
+                          for c, cv in cents.items())[1] for i in ids}
+        if it == 0:
+            cents = {}
+            for c in sorted(set(cluster.values())):
+                members = [i for i in ids if cluster[i] == c]
+                cents[c] = [sum(int(spark_round(vecs[i][p] * scale))
+                                for i in members)
+                            / float(len(members) * scale)
+                            for p in range(4)]
+
+    def cos(a, b):
+        den = (math.sqrt(fold(x * x for x in a))
+               * math.sqrt(fold(x * x for x in b)))
+        return spark_round(fold(x * y for x, y in zip(a, b)) / den, 6)
+
+    want = {}
+    for b in ids:
+        sims = [cos(vecs[a], vecs[b]) for a in ids
+                if a < b and cluster[a] == cluster[b]]
+        hit = max((x for x in sims if x >= 0.95), default=None)
+        want[b] = (cluster[b], hit is None, hit)
+    assert got == want
+    assert 0 < sum(not keep for _, keep, _ in want.values()) < 30
 
 
 # -------------------------------------------------- substring windows

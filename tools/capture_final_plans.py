@@ -33,7 +33,7 @@ def main() -> int:
         "spark.ui.showConsoleProgress": "false",
     })
     spark.sparkContext.setLogLevel("ERROR")
-    queries = {**entrymod.queries(), **entrymod.demoted_queries()}
+    queries = entrymod.queries()
     for n in names:
         release_caches()
         try:

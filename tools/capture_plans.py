@@ -3,8 +3,8 @@
 
     python tools/capture_plans.py OUTDIR SUFFIX q1 q2 ...
 
-Writes OUTDIR/<query>_<SUFFIX>.txt for each query.  Used for the
-optimization-round before/after plan artifacts (plans/r12/).
+Writes OUTDIR/<query>_<SUFFIX>.txt for each query, e.g. before/after
+plan dumps for an optimisation; keep OUTDIR outside the repository.
 """
 
 import os
@@ -30,7 +30,7 @@ def main() -> int:
         "spark.ui.showConsoleProgress": "false",
     })
     spark.sparkContext.setLogLevel("ERROR")
-    queries = {**entrymod.queries(), **entrymod.demoted_queries()}
+    queries = entrymod.queries()
     for n in names:
         release_caches()
         try:

@@ -124,10 +124,8 @@ def main():
             con.execute(
                 f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{path}')")
 
-    # demoted entries (redundant variants pulled from the driver
-    # registry to bound bench wall-clock) are still swept here
-    queries = {**entrymod.queries(), **entrymod.demoted_queries()}
-    oracles = {**entrymod.oracle_sql(), **entrymod.demoted_oracle_sql()}
+    queries = entrymod.queries()
+    oracles = entrymod.oracle_sql()
     results = {}
     for name, fn in queries.items():
         if only and name not in only:
@@ -144,11 +142,6 @@ def main():
             results[name] = f"SPARK ERROR: {e}"
             print(f"[{name}] SPARK ERROR: {str(e)[:200]}")
             continue
-        if name not in oracles:
-            results[name] = f"rows-only ({len(sdf)} rows)"
-            print(f"[{name}] rows-only: {len(sdf)} rows "
-                  f"({time.time()-t0:.1f}s)")
-            continue
         try:
             ddf = con.execute(oracles[name]).df()
         except Exception as e:  # noqa: BLE001
@@ -164,8 +157,7 @@ def main():
     n_ok = sum(1 for v in results.values() if v == "OK")
     print(f"\n{n_ok}/{len(results)} MATCH")
     spark.stop()
-    return 0 if all(v == "OK" or v.startswith("rows-only")
-                    for v in results.values()) else 1
+    return 0 if n_ok == len(results) else 1
 
 
 if __name__ == "__main__":

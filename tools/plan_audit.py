@@ -1,7 +1,7 @@
 #!/usr/bin/env python
 """Physical-plan audit over the whole query registry.
 
-For every ``queries()`` entry (and demoted variants), plans the query
+For every ``queries()`` entry, plans the query
 at a small scale factor (planning only — nothing executes unless the
 query builds driver-side state) and scans the plan string for
 anti-patterns:
@@ -46,8 +46,8 @@ HARD = ("CartesianProduct", "BatchEvalPython")
 
 # Queries allowed N unpartitioned-Window occurrences because the
 # window input is provably BOUNDED (never instance volume):
-#   - #partitions-sized per-partition offset tables (attach_rowid /
-#     heaps_fit two-level prefix sums, operators/ordering.py:86-119)
+#   - #partitions-sized per-partition offset tables (attach_rowid
+#     two-level prefix sums, operators/ordering.py:86-119)
 #   - GROUPS tables: one row per language/class (sample_unimax
 #     waterfilling, mixture weights)
 #   - k-sized sketch states (kmv_merge_states)
@@ -57,8 +57,6 @@ UPWIN_WHITELIST: dict = {
     "group_partition": 1,
     "sorted_read": 1,
     "zipf_fit": 1,
-    # heaps_fit bucket-totals table (#partitions rows)
-    "heaps_fit": 1,
     # UniMax waterfilling over the GROUPS table (one row/language)
     "sample_unimax": 2,
 }
@@ -88,7 +86,7 @@ def main():
              .getOrCreate())
     spark.sparkContext.setLogLevel("ERROR")
 
-    queries = {**entrymod.queries(), **entrymod.demoted_queries()}
+    queries = entrymod.queries()
     bad = []
     rows = []
     for name, fn in queries.items():
@@ -127,13 +125,11 @@ def main():
           + (f": {sorted(bad)}" if bad else ""))
     if not only:
         # machine-checkable registry ledger: tests/test_plans.py
-        # asserts these NAME SETS (not just the count) against the
-        # live queries()/demoted_queries() — a query moving between
-        # the lists without a regeneration fails the suite
-        reg = sorted(entrymod.queries())
-        dem = sorted(entrymod.demoted_queries())
+        # asserts this NAME SET (not just the count) against the live
+        # queries(), so an added or removed query without a
+        # regeneration fails the suite
+        reg = sorted(queries)
         print(f"\nregistered ({len(reg)}): {' '.join(reg)}")
-        print(f"demoted ({len(dem)}): {' '.join(dem)}")
     return 1 if bad else 0
 
 

@@ -43,7 +43,7 @@ def main() -> int:
         "spark.ui.showConsoleProgress": "false",
     })
     spark.sparkContext.setLogLevel("ERROR")
-    queries = {**entrymod.queries(), **entrymod.demoted_queries()}
+    queries = entrymod.queries()
 
     bad = [n for n in args.names if n not in queries]
     if bad:
