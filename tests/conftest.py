@@ -56,7 +56,9 @@ def jobs_in(spark, group: str, fn):
 
 
 def spark_round(x, digits=0):
-    """Spark's ``round`` of a double: HALF_UP on its decimal form."""
+    """Spark's ``round`` of a double: BigDecimal.valueOf(x).setScale(
+    digits, HALF_UP), i.e. HALF_UP on the double's SHORTEST decimal
+    repr, not its exact binary value -- Decimal(repr(x)) mirrors that."""
     from decimal import ROUND_HALF_UP, Decimal
 
     return float(Decimal(repr(x)).quantize(Decimal(1).scaleb(-digits),

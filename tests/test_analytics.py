@@ -286,15 +286,7 @@ def test_cuped_adjust_variance_reduction(spark):
     import numpy as np
 
     from dask_ms_spark.functions.stats import cuped_adjust
-
-    from decimal import ROUND_HALF_UP, Decimal
-
-    def r6(v):
-        # Spark F.round = BigDecimal.valueOf(d).setScale(6, HALF_UP):
-        # HALF_UP on the double's SHORTEST decimal repr, not its
-        # exact binary value — Decimal(repr(v)) mirrors that
-        return float(Decimal(repr(v)).quantize(
-            Decimal("0.000001"), rounding=ROUND_HALF_UP))
+    from tests.conftest import spark_round
 
     rng = np.random.RandomState(5)
     n = 2000
@@ -324,10 +316,10 @@ def test_cuped_adjust_variance_reduction(spark):
     for a in ("A", "B"):
         m = arm == a
         assert got[a].n_units == int(m.sum())
-        assert got[a].mean_post == r6(
-            float(yq[m].sum()) / m.sum() / qs)
-        assert got[a].mean_post_cuped == r6(
-            float(yadjq[m].sum()) / m.sum() / qs)
+        assert got[a].mean_post == spark_round(
+            float(yq[m].sum()) / m.sum() / qs, 6)
+        assert got[a].mean_post_cuped == spark_round(
+            float(yadjq[m].sum()) / m.sum() / qs, 6)
     # mean-zero: pooled adjusted mean == pooled raw mean (to quant)
     pooled_raw = float(yq.sum()) / n / qs
     pooled_adj = float(yadjq.sum()) / n / qs

@@ -779,7 +779,7 @@ def test_scan_memo_t_and_ev_never_alias(spark):
     assert entry._t(spark, sf, "events") is t
 
 
-def test_t_reuses_schema_read_events_inferred(spark, tmp_path):
+def test_t_after_ev_starts_no_job(spark, tmp_path):
     """_t scans through sources.parquet.scan_parquet, the one
     single-path parquet scan: once _ev has read a table (and so
     inferred its schema), _t on the same file starts no Spark job."""
